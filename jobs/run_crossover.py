@@ -1,9 +1,10 @@
 """Broadcast-dict ↔ cogroup crossover evidence (round-2 verdict #9).
 
-The planner (plans/planner.py:choose_pip_strategy) claims: polygon
-side ≤ broadcast cap → replicate it (broadcast-dict refine); larger →
-cell equi-join / cogroup. Every driver-table layer fits the dict, so
-the claim was never measured. This job measures PIP wall time for BOTH
+The join planner (plans/planner.py:plan_join) replicates a polygon
+side that fits the broadcast budget with the broadcast-dict refine and
+leaves larger layers to the WKB transport; the cogroup operator is the
+alternative for large × large. Every driver-table layer fits the dict,
+so the crossover was never measured. This job measures PIP wall time for BOTH
 physical strategies at two polygon-layer sizes on the same 2M-point
 probe side:
 

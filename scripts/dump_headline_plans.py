@@ -1,17 +1,24 @@
-"""Dump .explain('formatted') for the bench.py headline entries that
-are not in queries() (prepared-layer pip, salted pip, tile_assign,
-knn) into plans/r06/<name>_<tag>.txt.
+"""Dump .explain('formatted') for the spatial-join plans into
+plans/r07/<name>_<tag>.txt (or OUT_DIR):
 
-Usage: python scripts/dump_headline_plans.py <tag>
+* the bench.py headline entries that are not in queries(): the
+  prepared-layer PIP join (count, pairs and salted), the same join
+  against a fresh (unprepared) polygon layer, tile_assign and one kNN
+  round, over bench_data/;
+* every pip_*, rect_*, concave_*, degenerate_*, lines_*, zonal_* and
+  tile_rect_overlap_count driver query, at SF_DIR.
+
+Usage: python scripts/dump_headline_plans.py <tag> <SF_DIR> [OUT_DIR]
 """
 
 import os
+import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from pyspark.sql import functions as F  # noqa: E402
-
+import __spark_entry__ as E  # noqa: E402
 from workstealing_spatial_join_spark.operators.knn import knn_join  # noqa: E402
 from workstealing_spatial_join_spark.operators.spatial_join import (  # noqa: E402
     PreparedPolygonLayer,
@@ -20,34 +27,46 @@ from workstealing_spatial_join_spark.operators.spatial_join import (  # noqa: E4
 from workstealing_spatial_join_spark.operators.tiles import assign_tiles  # noqa: E402
 from workstealing_spatial_join_spark.session import get_spark  # noqa: E402
 
+STRICT = re.compile(r"(pip_|rect_|concave_|degenerate_|lines_|zonal_)")
+
 
 def main():
     tag = sys.argv[1]
-    out_dir = "/root/repo/plans/r06"
+    sf_dir = sys.argv[2]
+    out_dir = sys.argv[3] if len(sys.argv) > 3 else os.path.join(ROOT, "plans", "r07")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plans", cores=8, shuffle_partitions=8)
-    bd = "/root/repo/bench_data"
+    bd = os.path.join(ROOT, "bench_data")
     images = spark.read.parquet(f"{bd}/images_200000.parquet")
     polygons = spark.read.parquet(f"{bd}/polygons_10000.parquet")
     layer = PreparedPolygonLayer(polygons, poly_id="polygon_id")
     frames = {
-        "spatial_join_pip": point_in_polygon_join(
+        "spatial_join_pip": lambda: point_in_polygon_join(
             images, layer, mode="count"
         ),
-        "spatial_join_pip_salted": point_in_polygon_join(
+        "spatial_join_pip_pairs": lambda: point_in_polygon_join(
+            images, layer, mode="pairs"
+        ),
+        "spatial_join_pip_salted": lambda: point_in_polygon_join(
             images, layer, mode="count", salt=True
         ),
-        "tile_assign": assign_tiles(images),
+        "spatial_join_pip_fresh": lambda: point_in_polygon_join(
+            images, polygons, mode="pairs"
+        ),
+        "tile_assign": lambda: assign_tiles(images),
         # ONE round of the kNN loop has the representative plan; the
         # full operator is a driver loop of these
-        "knn_images_round": knn_join(
+        "knn_images_round": lambda: knn_join(
             images.limit(5000), images, k=5, exclude_self=True,
             max_ring=1, initial_ring=1,
         ),
     }
+    for name, fn in E.queries().items():
+        if STRICT.match(name) or name == "tile_rect_overlap_count":
+            frames[name] = lambda fn=fn: fn(spark, sf_dir)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-    for name, df in frames.items():
-        text = df._jdf.queryExecution().explainString(
+    for name, build in frames.items():
+        text = build()._jdf.queryExecution().explainString(
             mode.fromString("formatted")
         )
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:

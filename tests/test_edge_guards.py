@@ -56,16 +56,18 @@ def test_null_geometry_is_invalid_and_never_matches(spark):
     assert hits == {0: True, 1: False}
 
 
-def test_pairs_mode_does_not_mutate_shared_predicates(spark, tmp_path):
+def test_pairs_mode_does_not_mutate_shared_predicates(spark, tmp_path, monkeypatch):
     """polygon_join pairs mode must not flip the registry UDFs to
     nondeterministic for the rest of the session."""
     from workstealing_spatial_join_spark.functions.predicates import PREDICATES
     from workstealing_spatial_join_spark.operators.ingest import ingest_geometry
+    from workstealing_spatial_join_spark.operators import spatial_join as SJ
     from workstealing_spatial_join_spark.operators.spatial_join import (
         polygon_join,
     )
     from workstealing_spatial_join_spark.sources import fixtures as FX
 
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)  # the shared WKB-path UDFs
     polys = ingest_geometry(
         spark.createDataFrame(FX.polygons_pdf(40)), "wkt",
         keep_cols=["polygon_id"],
@@ -73,7 +75,6 @@ def test_pairs_mode_does_not_mutate_shared_predicates(spark, tmp_path):
     polygon_join(
         polys, polys, "polygon_id", "polygon_id",
         predicate="intersection_numpoints", mode="pairs",
-        refine_transport="wkb",
     ).collect()
     assert PREDICATES["intersection_numpoints"].deterministic
     assert PREDICATES["union_numpoints"].deterministic

@@ -4,6 +4,7 @@ one refine UDF."""
 
 import pytest
 
+from workstealing_spatial_join_spark.operators import spatial_join as SJ
 from workstealing_spatial_join_spark.operators.ingest import ingest_geometry
 from workstealing_spatial_join_spark.operators.spatial_join import (
     point_in_polygon_join,
@@ -12,7 +13,6 @@ from workstealing_spatial_join_spark.operators.spatial_join import (
 from workstealing_spatial_join_spark.plans.planner import (
     assert_plan_quality,
     audit_plan,
-    choose_pip_strategy,
 )
 from workstealing_spatial_join_spark.sources import fixtures as FX
 
@@ -75,14 +75,13 @@ def test_polygon_join_broadcast_transport_no_wkb_in_join(layers):
         df = polygon_join(
             polys, polys, "polygon_id", "polygon_id",
             predicate="intersection_numpoints", mode=mode,
-            refine_transport="broadcast",
         )
         audit = assert_plan_quality(df, max_python_nodes=1)
         assert audit["python_nodes"]["ArrowEvalPython"] == 1, mode
         assert "wkb" not in audit["plan"], mode
 
 
-def test_rect_layers_refine_in_pure_catalyst(spark, tmp_path):
+def test_rect_layers_refine_in_pure_catalyst(spark, tmp_path, monkeypatch):
     """When every geometry IS its MBR (verified per row at dict-build
     time), intersects and intersection-numPoints plans must contain
     ZERO Python nodes — the bounds predicate / closed-form CASE is the
@@ -116,10 +115,12 @@ def test_rect_layers_refine_in_pure_catalyst(spark, tmp_path):
     df = point_in_polygon_join(pts, rects, poly_id="rect_id", mode="count")
     audit = assert_plan_quality(df, max_python_nodes=0)
     assert sum(audit["python_nodes"].values()) == 0
-    # and the shortcut result equals the forced-UDF path
+    # and the shortcut result equals the forced-UDF path (a dict cap
+    # of 0 leaves the layer uncollected: WKB transport)
     a = df.collect()[0][0]
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)
     b = point_in_polygon_join(
-        pts, rects, poly_id="rect_id", mode="count", refine_transport="wkb"
+        pts, rects, poly_id="rect_id", mode="count"
     ).collect()[0][0]
     assert a == b > 0
 
@@ -150,18 +151,19 @@ def test_polygon_join_multipart_ids_fall_back_to_wkb(spark):
     )
 
 
-def test_polygon_join_wkb_transport_still_works(layers):
+def test_polygon_join_wkb_transport_still_works(layers, monkeypatch):
     _, polys = layers
     a = polygon_join(
         polys, polys, "polygon_id", "polygon_id",
         predicate="intersection_numpoints", mode="count",
-        refine_transport="broadcast",
     ).collect()[0][0]
-    b = polygon_join(
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)
+    wkb = polygon_join(
         polys, polys, "polygon_id", "polygon_id",
         predicate="intersection_numpoints", mode="count",
-        refine_transport="wkb",
-    ).collect()[0][0]
+    )
+    assert "r_wkb" in audit_plan(wkb)["plan"]
+    b = wkb.collect()[0][0]
     assert a == b and a > 0
 
 
@@ -184,14 +186,6 @@ def test_parquet_filter_and_column_pushdown(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(id), GreaterThan(id,100)]" in plan, plan
     read = plan[plan.index("ReadSchema"):].splitlines()[0]
     assert "a:" in read and "b:" not in read and "c:" not in read, read
-
-
-def test_strategy_matrix():
-    assert choose_pip_strategy(10**9, 10**4).broadcast is True
-    s = choose_pip_strategy(10**9, 10**8, max_cell_share=0.2)
-    assert s.salt and not s.broadcast
-    s2 = choose_pip_strategy(10**9, 10**8)
-    assert not s2.salt and not s2.broadcast
 
 
 def test_driver_query_python_node_budgets(spark):
@@ -270,37 +264,6 @@ def test_driver_query_python_node_budgets(spark):
         n_arrow = audit["python_nodes"]["ArrowEvalPython"]
         assert n_arrow <= budget, (name, n_arrow, audit["python_nodes"])
         assert audit["python_nodes"]["BatchEvalPython"] == 0, name
-
-
-def test_plan_pip_join_dispatch_and_parity(spark):
-    """plan_pip_join measures, decides, and dispatches; result parity
-    with the direct strategies either way."""
-    from workstealing_spatial_join_spark.operators.ingest import ingest_geometry
-    from workstealing_spatial_join_spark.plans.planner import plan_pip_join
-    from workstealing_spatial_join_spark.sources import fixtures as FX
-
-    images = spark.createDataFrame(
-        FX.images_pdf(600, with_bytes=False)[["image_id", "lon", "lat"]]
-    )
-    polys = ingest_geometry(
-        spark.createDataFrame(FX.polygons_pdf(60)), "wkt", keep_cols=["polygon_id"]
-    )
-    out, plan = plan_pip_join(images, polys)
-    got = {(r.point_id, r.poly_id) for r in out.collect()}
-    want = {
-        (r.point_id, r.poly_id)
-        for r in point_in_polygon_join(images, polys).collect()
-    }
-    assert got == want and len(want) > 0
-    assert plan.strategy in ("catalyst", "cogroup") and plan.reason
-
-    # force the density route: tiny threshold => cogroup dispatch,
-    # same result set
-    out2, plan2 = plan_pip_join(
-        images, polys, cogroup_density_threshold=1e-9
-    )
-    assert plan2.strategy == "cogroup"
-    assert {(r.point_id, r.poly_id) for r in out2.collect()} == want
 
 
 def test_salted_pip_keeps_broadcast_build_side(layers):

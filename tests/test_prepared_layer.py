@@ -1,4 +1,4 @@
-"""PreparedGeometryLayer: repeated polygon_join calls against the
+"""PreparedPolygonLayer: repeated polygon_join calls against the
 same layer must not re-collect / re-decode the broadcast dictionary
 (round-2 verdict next-step #7)."""
 
@@ -7,7 +7,7 @@ import pytest
 from workstealing_spatial_join_spark.operators import spatial_join as SJ
 from workstealing_spatial_join_spark.operators.ingest import ingest_geometry
 from workstealing_spatial_join_spark.operators.spatial_join import (
-    PreparedGeometryLayer,
+    PreparedPolygonLayer,
     polygon_join,
 )
 from workstealing_spatial_join_spark.sources import fixtures as FX
@@ -32,8 +32,8 @@ def test_prepared_layer_matches_plain_join(layers):
             da, db, "a_id", "b_id", predicate="intersection_numpoints"
         ).collect()
     }
-    pa = PreparedGeometryLayer(da, "a_id")
-    pb = PreparedGeometryLayer(db, "b_id")
+    pa = PreparedPolygonLayer(da, "a_id")
+    pb = PreparedPolygonLayer(db, "b_id")
     got = {
         (r.lid, r.rid, r.num_points)
         for r in polygon_join(
@@ -45,8 +45,8 @@ def test_prepared_layer_matches_plain_join(layers):
 
 def test_prepared_layer_skips_recollect(layers, monkeypatch):
     da, db = layers
-    pa = PreparedGeometryLayer(da, "a_id")
-    pb = PreparedGeometryLayer(db, "b_id")
+    pa = PreparedPolygonLayer(da, "a_id")
+    pb = PreparedPolygonLayer(db, "b_id")
 
     calls = {"n": 0}
     real = SJ._collect_geom_dict
@@ -75,7 +75,7 @@ def test_prepared_layer_skips_recollect(layers, monkeypatch):
 def test_prepared_layer_mixed_sides(layers):
     """One prepared side + one plain DataFrame side is allowed."""
     da, db = layers
-    pa = PreparedGeometryLayer(da, "a_id")
+    pa = PreparedPolygonLayer(da, "a_id")
     want = {
         (r.lid, r.rid)
         for r in polygon_join(da, db, "a_id", "b_id", predicate="intersects").collect()
@@ -89,12 +89,71 @@ def test_prepared_layer_mixed_sides(layers):
 
 def test_prepared_layer_cell_deg_mismatch(layers):
     da, db = layers
-    pa = PreparedGeometryLayer(da, "a_id", cell_deg=1.0)
+    pa = PreparedPolygonLayer(da, "a_id", cell_deg=1.0)
     with pytest.raises(ValueError, match="cell_deg"):
         polygon_join(pa, db, "a_id", "b_id", cell_deg=0.5)
 
 
-def test_rect_union_split_plan_matches_udf_path(spark):
+def test_prepared_layer_pip_takes_rect_and_wkb_paths(spark):
+    """In a PIP join a prepared layer takes the transports a DataFrame
+    layer takes: WKB for repeated (multipart) ids, where it used to
+    raise, and the zero-Python rect path."""
+    import pyspark.sql.functions as F
+
+    from workstealing_spatial_join_spark.operators.spatial_join import (
+        PreparedPolygonLayer,
+        point_in_polygon_join,
+    )
+    from workstealing_spatial_join_spark.plans.planner import audit_plan
+    from workstealing_spatial_join_spark.sources.tables import rects_with_geom
+
+    rows = [
+        (1, "MULTIPOLYGON (((0 0, 2 0, 2 2, 0 2, 0 0)), "
+            "((10 10, 12 10, 11 12, 10 10)))"),
+        (2, "POLYGON ((1 1, 3 1, 3 3, 1 3, 1 1))"),
+    ]
+    multi = ingest_geometry(
+        spark.createDataFrame(rows, "gid int, wkt string"), "wkt",
+        keep_cols=["gid"],
+    )
+    pts = spark.createDataFrame(
+        [(0, 1.5, 1.5), (1, 11.0, 10.5), (2, 5.0, 5.0)],
+        "image_id long, lon double, lat double",
+    )
+
+    def pairs(layer, **kw):
+        return sorted(
+            (r.point_id, r.poly_id)
+            for r in point_in_polygon_join(pts, layer, **kw).collect()
+        )
+
+    want = pairs(multi, poly_id="gid")
+    assert pairs(PreparedPolygonLayer(multi, "gid")) == want == [
+        (0, 1), (0, 2), (1, 1)
+    ]
+
+    rects = rects_with_geom(
+        spark.range(1, 40).select(
+            F.col("id").alias("rect_id"),
+            (F.col("id") % 7 - 5.0).alias("minx"),
+            (F.col("id") % 5 - 3.0).alias("miny"),
+            (F.col("id") % 7 - 3.5).alias("maxx"),
+            (F.col("id") % 5 - 1.0).alias("maxy"),
+        )
+    )
+    grid = spark.range(400).select(
+        F.col("id").alias("image_id"),
+        (F.col("id") % 20 * 0.5 - 5.0).alias("lon"),
+        (F.floor(F.col("id") / 20) * 0.25 - 3.0).alias("lat"),
+    )
+    layer = PreparedPolygonLayer(rects, "rect_id")
+    df = point_in_polygon_join(grid, layer, mode="count")
+    assert sum(audit_plan(df)["python_nodes"].values()) == 0
+    plain = point_in_polygon_join(grid, rects, poly_id="rect_id", mode="count")
+    assert df.collect()[0][0] == plain.collect()[0][0] > 0
+
+
+def test_rect_union_split_plan_matches_udf_path(spark, monkeypatch):
     """union_numpoints on rect layers splits generic pairs onto the
     Catalyst closed form and degenerate pairs onto the pair UDF; the
     combined result must equal the full-UDF (WKB transport) path on a
@@ -126,11 +185,10 @@ def test_rect_union_split_plan_matches_udf_path(spark):
         (r.lid, r.rid, r.num_points)
         for r in polygon_join(la, lb, "rid", "rid", **kw).collect()
     }
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)  # uncollected: WKB transport
     full = {
         (r.lid, r.rid, r.num_points)
-        for r in polygon_join(
-            la, lb, "rid", "rid", refine_transport="wkb", **kw
-        ).collect()
+        for r in polygon_join(la, lb, "rid", "rid", **kw).collect()
     }
     assert split == full and len(split) >= 4
     # sanity: at least one degenerate pair (touch) actually present

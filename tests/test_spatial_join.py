@@ -59,10 +59,25 @@ def test_pip_semi_mode(images, polygons, images_pdf, polygons_pdf):
     assert got == want
 
 
-def test_pip_broadcast_invariance(images, polygons):
-    a = point_in_polygon_join(images, polygons, broadcast=True, mode="count")
-    b = point_in_polygon_join(images, polygons, broadcast=False, mode="count")
-    assert a.collect()[0][0] == b.collect()[0][0]
+def test_pip_broadcast_invariance(spark, images, polygons, monkeypatch):
+    """The forced broadcast join and a real shuffle join (budget 0,
+    Spark's own broadcast threshold off) count the same pairs."""
+    from workstealing_spatial_join_spark.plans import planner
+
+    a = point_in_polygon_join(images, polygons, mode="count")
+    assert planner.audit_plan(a)["broadcast_joins"] == 1
+    monkeypatch.setattr(planner, "BROADCAST_BUDGET_BYTES", 0)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        b = point_in_polygon_join(images, polygons, mode="count")
+        audit = planner.audit_plan(b)
+        assert audit["broadcast_joins"] == 0
+        assert audit["sortmerge_joins"] + audit["shuffledhash_joins"] == 1
+        assert a.collect()[0][0] == b.collect()[0][0] > 0
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_pip_cell_resolution_invariance(images, polygons):

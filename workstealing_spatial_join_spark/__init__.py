@@ -20,7 +20,6 @@ No per-row Python anywhere; DataFrames everywhere; no RDDs.
 
 from workstealing_spatial_join_spark.session import get_spark
 from workstealing_spatial_join_spark.operators.spatial_join import (
-    PreparedGeometryLayer,
     PreparedPolygonLayer,
     point_in_polygon_join,
     polygon_join,
@@ -53,7 +52,6 @@ from workstealing_spatial_join_spark.operators.similarity import (
     cosine_topk_ivf,
     cosine_topk_lsh,
 )
-from workstealing_spatial_join_spark.plans.planner import plan_pip_join
 from workstealing_spatial_join_spark.sources.writer import write_resumable
 from workstealing_spatial_join_spark.sources.bucketed import (
     pip_join_bucketed,
@@ -64,7 +62,6 @@ __version__ = "0.3.0"
 
 __all__ = [
     "get_spark",
-    "PreparedGeometryLayer",
     "PreparedPolygonLayer",
     "point_in_polygon_join",
     "polygon_join",
@@ -86,7 +83,6 @@ __all__ = [
     "cosine_topk_bruteforce",
     "cosine_topk_lsh",
     "cosine_topk_ivf",
-    "plan_pip_join",
     "write_resumable",
     "save_bucketed_polygon_layer",
     "pip_join_bucketed",

@@ -28,21 +28,26 @@ intersection — a pure-Catalyst filter, no extra shuffle.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from functools import cached_property
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import grid as GRID
 from workstealing_spatial_join_spark.functions.predicates import PREDICATES
 
-BROADCAST_ROW_THRESHOLD = 2_000_000  # exploded cell-rows; ~tens of MB
+# the id-keyed dictionary transport collects layers up to this many
+# rows to the driver; larger layers stay distributed (WKB transport)
+DICT_MAX_ROWS = 500_000
 
 # collected layers up to this many rows are REPLAYED as a local frame
 # instead of re-scanning (and re-deriving) the source per action: the
 # dictionary collect already paid for these bytes once, and the replay
 # removes a scan + any ingest Python stage from every downstream job.
-# Larger collected layers (up to the 500k dict cap) keep the
-# distributed scan — parallelizing hundreds of MB from the driver is
-# slower than re-reading parquet.
+# Larger collected layers (up to the dict cap) keep the distributed
+# scan — parallelizing hundreds of MB from the driver is slower than
+# re-reading parquet.
 LOCAL_BUILD_MAX_ROWS = 100_000
 
 
@@ -69,14 +74,11 @@ def tessellate_bbox(
     )
 
 
-def _collect_geom_dict(layer: DataFrame, id_col: str, max_rows: int | None):
+def _collect_geom_dict(layer: DataFrame, id_col: str, max_rows: int):
     """Collect (id, wkb, minx, miny, maxx, maxy) rows for the
-    broadcast dictionary in ONE action. ``max_rows`` None =
-    unconditional; otherwise returns None when the layer exceeds the
-    cap (caller falls back to another transport)."""
+    broadcast dictionary in ONE action; None when the layer exceeds
+    ``max_rows`` (the caller falls back to the WKB transport)."""
     sel = layer.select(id_col, "geom_wkb", "minx", "miny", "maxx", "maxy")
-    if max_rows is None:
-        return sel.collect()
     rows = sel.limit(max_rows + 1).collect()
     return None if len(rows) > max_rows else rows
 
@@ -108,53 +110,56 @@ def _local_geom_frame(layer: DataFrame, id_col: str, rows) -> DataFrame:
     return layer.sparkSession.createDataFrame(pdf, schema=schema)
 
 
-def _covering_cell_counts(rows, cell_deg: float):
-    """Per-row covering-cell counts from the declared bounds — the
-    driver-side closed form of ``tessellate_bbox``'s explode fanout
-    (identical clamped floor arithmetic as grid.cells_covering_bbox,
-    so Σ equals exploded.count() exactly, without running a job)."""
+def _cell_index(v, offset: float, cell_deg: float, n: int):
+    """grid._spark_sql_cell_x/_y over a float64 array: FLOOR casts NaN
+    to 0 and GREATEST skips NULL (collected as NaN), so both land in
+    cell 0; ±inf clamp to the grid edges."""
+    import numpy as np
+
+    i = np.floor((v + offset) / cell_deg)
+    i[np.isnan(i)] = 0
+    return np.clip(i, 0, n - 1).astype(np.int64)
+
+
+def _cell_spans(rows, cell_deg: float):
+    """Driver-side closed form of ``tessellate_bbox`` over collected
+    (id, wkb, minx, miny, maxx, maxy) rows: each row's first covering
+    cell column and row, and its width and height in cells. Same index
+    arithmetic as the Catalyst tessellation, and ``sequence`` runs
+    downward when a bound pair is inverted, so the spans agree with
+    the exploded frame exactly — NULL, NaN and ±inf bounds included —
+    without running a job."""
     import numpy as np
 
     nx, ny = GRID.grid_dims(cell_deg)
-    b = np.array(
-        [[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64
+    b = np.array([r[2:6] for r in rows], dtype=np.float64).reshape(-1, 4)
+    x0 = _cell_index(b[:, 0], 180.0, cell_deg, nx)
+    x1 = _cell_index(b[:, 2], 180.0, cell_deg, nx)
+    y0 = _cell_index(b[:, 1], 90.0, cell_deg, ny)
+    y1 = _cell_index(b[:, 3], 90.0, cell_deg, ny)
+    return (
+        np.minimum(x0, x1), np.minimum(y0, y1),
+        np.abs(x1 - x0) + 1, np.abs(y1 - y0) + 1,
     )
-    if not len(rows):
-        return np.zeros(0, dtype=np.int64)
-    x0 = np.clip(np.floor((b[:, 0] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    x1 = np.clip(np.floor((b[:, 2] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    y0 = np.clip(np.floor((b[:, 1] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
-    y1 = np.clip(np.floor((b[:, 3] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
-    return (x1 - x0 + 1) * (y1 - y0 + 1)
 
 
-def _cell_count_pairs(rows, cell_deg: float):
-    """Per-cell build-side row counts ``[(cell_id, n), ...]`` computed
-    driver-side from the collected bounds — the closed form of
-    ``exploded.groupBy(cell_id).count()``, so the salting cost table
-    skips one distributed aggregate entirely (guide §2.4). Fully
-    vectorized (a per-row Python loop over cells_covering_bbox
-    measured 0.6 s on the 10k-polygon bench layer; this is ~10 ms)."""
+def _cell_row_counts(rows, cell_deg: float):
+    """Per-cell row counts ``[(cell_id, n), ...]`` of
+    ``exploded.groupBy(cell_id).count()`` from the collected rows'
+    spans, so the salting cost table skips one distributed aggregate
+    (guide §2.4). Vectorized (a per-row Python loop over
+    cells_covering_bbox measured 0.6 s on the 10k-polygon bench layer;
+    this is ~10 ms)."""
     import numpy as np
 
-    if not rows:
-        return []
-    nx, ny = GRID.grid_dims(cell_deg)
-    b = np.array([[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64)
-    x0 = np.clip(np.floor((b[:, 0] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    x1 = np.clip(np.floor((b[:, 2] + 180.0) / cell_deg), 0, nx - 1).astype(np.int64)
-    y0 = np.clip(np.floor((b[:, 1] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
-    y1 = np.clip(np.floor((b[:, 3] + 90.0) / cell_deg), 0, ny - 1).astype(np.int64)
-    h = y1 - y0 + 1
-    ncell = (x1 - x0 + 1) * h
-    total = int(ncell.sum())
+    cx0, cy0, w, h = _cell_spans(rows, cell_deg)
+    ncell = w * h
     starts = np.cumsum(ncell) - ncell
-    off = np.arange(total, dtype=np.int64) - np.repeat(starts, ncell)
+    off = np.arange(int(ncell.sum()), dtype=np.int64) - np.repeat(starts, ncell)
     h_r = np.repeat(h, ncell)
-    cx = np.repeat(x0, ncell) + off // h_r
-    cy = np.repeat(y0, ncell) + off % h_r
-    cid = cx * np.int64(4294967296) + cy
-    uniq, cnt = np.unique(cid, return_counts=True)
+    cx = np.repeat(cx0, ncell) + off // h_r
+    cy = np.repeat(cy0, ncell) + off % h_r
+    uniq, cnt = np.unique(cx * np.int64(4294967296) + cy, return_counts=True)
     return [(int(c), int(n)) for c, n in zip(uniq, cnt)]
 
 
@@ -178,6 +183,8 @@ def _all_rects_matching_bounds(rows) -> bool:
     anything else falls back to the per-row decode."""
     import numpy as np
 
+    if any(r[1] is None for r in rows):
+        return False
     bufs = [bytes(r[1]) for r in rows]
     if bufs and all(
         len(b) == 93 and b.startswith(_RECT_WKB_HDR_BYTES) for b in bufs
@@ -227,11 +234,95 @@ def _refpoint_filter(cell_deg: float):
     return cexpr(f"l.cell_id = ({cx} * 4294967296L + {cy})")
 
 
+@dataclass(eq=False)  # holds DataFrames: compare by identity
+class LayerAnalysis:
+    """Everything one collect tells the planner about a geometry layer
+    (plans.planner.plan_join reads it; both joins share it). ``rows``
+    holds the collected (id, wkb, minx, miny, maxx, maxy) dictionary
+    rows — None past DICT_MAX_ROWS, or when the join needs no refine —
+    and ``src`` the frame to tessellate: the local replay of the rows
+    when they are few enough, else the source layer."""
+
+    src: DataFrame | None = None
+    id_col: str = "polygon_id"
+    cell_deg: float = GRID.DEFAULT_CELL_DEG
+    rows: list | None = None
+    unique_ids: bool = False
+    all_rects: bool = False  # every geometry equals its MBR
+    exploded_rows: int | None = None  # closed-form Σ covering cells
+    exploded_wkb_bytes: int | None = None  # Σ len(wkb) × covering cells
+
+    @cached_property
+    def cell_counts(self):
+        """Per-cell exploded row counts [(cell_id, n)], or None when not
+        collected (the salting cost table then aggregates instead)."""
+        return None if self.rows is None else _cell_row_counts(self.rows, self.cell_deg)
+
+    @cached_property
+    def contains_udf(self):
+        """contains(poly_id, x, y) over the broadcast dictionary; built
+        once per analysis, so a prepared layer ships it once."""
+        from workstealing_spatial_join_spark.functions.predicates import (
+            make_contains_xy_broadcast,
+        )
+
+        return make_contains_xy_broadcast(
+            self.src.sparkSession,
+            [r[0] for r in self.rows],
+            [r[1] for r in self.rows],
+        )
+
+    def tessellate(self, with_wkb: bool) -> DataFrame:
+        """Cell tessellation: (poly_id, minx..maxy[, geom_wkb], cell_id)."""
+        cols = [F.col(self.id_col).alias("poly_id"), "minx", "miny", "maxx", "maxy"]
+        if with_wkb:
+            cols.append("geom_wkb")
+        return tessellate_bbox(self.src.select(*cols), self.cell_deg)
+
+
+def _analyze_layer(
+    layer: DataFrame, id_col: str, cell_deg: float, collect: bool = True
+) -> LayerAnalysis:
+    """Collect a layer once (bounded by DICT_MAX_ROWS) and derive what
+    both joins decide from. ``collect=False`` (an MBR-only join, whose
+    layer may lack ``geom_wkb``) leaves it uncollected."""
+    rows = _collect_geom_dict(layer, id_col, DICT_MAX_ROWS) if collect else None
+    if rows is None:
+        return LayerAnalysis(layer, id_col, cell_deg)
+    _, _, w, h = _cell_spans(rows, cell_deg)
+    ncell = w * h
+    if len(rows) <= LOCAL_BUILD_MAX_ROWS:
+        # replay a collected layer locally: its tessellation then costs
+        # no source scan (and no ingest Python stage) in any downstream
+        # job — the dict collect already paid these bytes
+        layer = _local_geom_frame(layer, id_col, rows)
+    return LayerAnalysis(
+        layer,
+        id_col,
+        cell_deg,
+        rows,
+        # the id-keyed transports need one geometry per id — repeated
+        # ids (multipart parts exploded at ingest) keep the WKB column
+        # so each PART row refines against its own part (reference
+        # semantics: parts are separate geometries, src/reader.cpp:44)
+        unique_ids=len({r[0] for r in rows}) == len(rows),
+        all_rects=_all_rects_matching_bounds(rows),
+        exploded_rows=int(ncell.sum()),
+        exploded_wkb_bytes=sum(
+            len(r[1]) * int(c) for r, c in zip(rows, ncell) if r[1] is not None
+        ),
+    )
+
+
 class PreparedPolygonLayer:
-    """A polygon layer prepared once and reused across many joins —
-    the Spark rebirth of the reference's build-once STRtree
-    (src/spatial_join.cpp:14-21): tessellation exploded + cached, and
-    the broadcast geometry dictionary shipped to workers once.
+    """A geometry layer prepared once and reused across many joins of
+    either kind — the Spark rebirth of the reference's build-once
+    STRtree (src/spatial_join.cpp:14-21). Preparation is ONE driver
+    job, the dictionary collect; the layer then holds its
+    ``LayerAnalysis`` (collected rows, rect verification, closed-form
+    counts, contains dictionary) and caches each cell tessellation it
+    is joined with. A second join issues no new collect and no new
+    decode.
 
     Use for the steady-state shape of a 10^12-image pipeline: one
     (slowly-changing) polygon layer probed by an endless stream of
@@ -242,115 +333,15 @@ class PreparedPolygonLayer:
         polygons: DataFrame,
         poly_id: str = "polygon_id",
         cell_deg: float = GRID.DEFAULT_CELL_DEG,
-        broadcast_dict_rows: int = 500_000,
     ):
-        from workstealing_spatial_join_spark.functions.predicates import (
-            make_contains_xy_broadcast,
-        )
-
-        self.poly_id = poly_id
-        self.cell_deg = cell_deg
-        self.contains_udf = None
-        # ONE driver job: the dictionary collect. A collected layer is
-        # replayed locally — the tessellation caches lazily off the
-        # in-memory rows (first join materializes it without touching
-        # the source again) and the exploded row count is the
-        # closed-form Σ covering-cells over the bounds, not a count()
-        # job (was: count job + collect job per preparation).
-        rows = _collect_geom_dict(polygons, poly_id, broadcast_dict_rows)
-        if rows is not None and len(rows) <= LOCAL_BUILD_MAX_ROWS:
-            local = _local_geom_frame(polygons, poly_id, rows)
-            self.exploded = tessellate_bbox(
-                local.select(
-                    F.col(poly_id).alias("poly_id"),
-                    "minx", "miny", "maxx", "maxy",
-                ),
-                cell_deg,
-            ).cache()
-            self.n_rows = int(_covering_cell_counts(rows, cell_deg).sum())
-            self.cell_counts = _cell_count_pairs(rows, cell_deg)
-        else:
-            self.exploded = tessellate_bbox(
-                polygons.select(
-                    F.col(poly_id).alias("poly_id"),
-                    "minx", "miny", "maxx", "maxy",
-                ),
-                cell_deg,
-            ).cache()
-            self.n_rows = self.exploded.count()  # materialize the cache
-            self.cell_counts = None
-        # same unique-id guard as the other id-keyed transports:
-        # repeated ids (multipart parts) would make the dict answer
-        # point-in-ANY-part per PART ROW and emit duplicate pairs
-        if rows is not None and len({r[0] for r in rows}) == len(rows):
-            self.contains_udf = make_contains_xy_broadcast(
-                polygons.sparkSession,
-                [r[0] for r in rows],
-                [r[1] for r in rows],
-            )
-
-    def release(self) -> int:
-        """Unpersist the cached tessellation (ADVICE r3: long-lived
-        sessions preparing many layers would otherwise pin executor
-        storage). The layer remains usable — the cache just rebuilds
-        lazily if joined again."""
-        try:
-            self.exploded.unpersist()
-            return 1
-        except Exception:
-            return 0
-
-
-class PreparedGeometryLayer:
-    """A geometry layer prepared once for REPEATED ``polygon_join``
-    calls (round-2 verdict #7: every non-prepared join re-collected up
-    to 500k rows/side and re-decoded them on the driver). Caches, per
-    layer:
-
-    * the collected broadcast-dictionary rows (one limited collect),
-    * the per-row "geometry == declared MBR" verification (driver-side
-      WKB decode — the expensive part of the rect fast path), and
-    * the exploded cell tessellation as a cached DataFrame (with and
-      without the WKB column, built lazily).
-
-    ``polygon_join`` accepts this for either side; a second join
-    against the same prepared layer issues NO new collect and NO new
-    decode."""
-
-    def __init__(
-        self,
-        layer: DataFrame,
-        id_col: str,
-        cell_deg: float = GRID.DEFAULT_CELL_DEG,
-        broadcast_dict_rows: int = 500_000,
-    ):
-        self.df = layer
-        self.id_col = id_col
-        self.cell_deg = cell_deg
-        self.rows = _collect_geom_dict(layer, id_col, broadcast_dict_rows)
-        self.unique_ids = (
-            self.rows is not None
-            and len({r[0] for r in self.rows}) == len(self.rows)
-        )
-        self.all_rects = (
-            self.rows is not None and _all_rects_matching_bounds(self.rows)
-        )
+        self.analysis = _analyze_layer(polygons, poly_id, cell_deg)
         self._exploded: dict[bool, DataFrame] = {}
 
     def exploded(self, with_wkb: bool) -> DataFrame:
-        """Cell tessellation with the id aliased to ``gid``; cached
-        (Spark .cache()) per wkb-variant so repeated joins reuse the
-        shuffle-free scan."""
+        """The analysis' tessellation, cached (Spark .cache()) per
+        WKB variant; the first join materializes it."""
         if with_wkb not in self._exploded:
-            cols = [
-                F.col(self.id_col).alias("gid"),
-                "minx", "miny", "maxx", "maxy",
-            ]
-            if with_wkb:
-                cols.insert(1, F.col("geom_wkb").alias("g_wkb"))
-            self._exploded[with_wkb] = tessellate_bbox(
-                self.df.select(*cols), self.cell_deg
-            ).cache()
+            self._exploded[with_wkb] = self.analysis.tessellate(with_wkb).cache()
         return self._exploded[with_wkb]
 
     def release(self) -> int:
@@ -370,6 +361,81 @@ class PreparedGeometryLayer:
         return n
 
 
+def _join_side(side, id_col: str, cell_deg: float, collect: bool = True):
+    """(analysis, tessellate(with_wkb)) for one side of a join: a
+    prepared layer answers from its cache, a DataFrame is analysed now
+    and tessellated uncached."""
+    if isinstance(side, PreparedPolygonLayer):
+        if side.analysis.cell_deg != cell_deg:
+            raise ValueError(
+                "PreparedPolygonLayer cell_deg "
+                f"{side.analysis.cell_deg} != join cell_deg {cell_deg}"
+            )
+        return side.analysis, side.exploded
+    analysis = _analyze_layer(side, id_col, cell_deg, collect)
+    return analysis, analysis.tessellate
+
+
+def _hot_cells(
+    probe: DataFrame, build: LayerAnalysis, build_cells: DataFrame,
+    target_pairs: int,
+):
+    """LB1 rebirth: cost-estimated salting of hot cells (see
+    operators/skew.py) — bounds the largest join group the way
+    TASKS_PER_JOB bounded the reference's work units.
+
+    Collects the hot-cell cost table ONCE (tiny by construction: one
+    row per cell whose est_pairs exceed the task target) and replays
+    it as a local frame, so the salting joins do not each re-run the
+    aggregates behind it. The build side's per-cell counts come from
+    the analysis' closed form when it was collected. Returns
+    ``(hot cells frame, rows salting adds to the build side)``, or
+    ``(None, None)`` when no cell is hot: then the honest LB1 decision
+    is to not pay the salting machinery at all (probe-side salt join,
+    build-side replicate explode, a wider join key) — the same
+    adaptive skip AQE's skew handling makes when nothing is skewed.
+    Results are identical by construction (an all-ones salt table is
+    a no-op)."""
+    from workstealing_spatial_join_spark.operators.skew import cell_cost_table
+
+    cost = cell_cost_table(
+        probe, build_cells, target_pairs=target_pairs,
+        right_cell_counts=build.cell_counts,
+    ).where(F.col("n_salt") > 1)
+    rows = cost.collect()
+    if not rows:
+        return None, None
+    extra = sum((r["n_salt"] - 1) * r["n_right"] for r in rows)
+    return probe.sparkSession.createDataFrame(rows, cost.schema), extra
+
+
+def _spread_probe(pts: DataFrame, mode: str) -> DataFrame:
+    """Spread the probe side over 2× the default parallelism before a
+    Python refine: under a broadcast join the refine runs on the
+    probe's scan splits, so a compact input would serialize it. Fine
+    tasks let the scheduler absorb stragglers — the reference's
+    TASKS_PER_JOB=20 chunking (include/global_var.h:26) at Spark task
+    level.
+
+    HASH partitioning, not round-robin: a keyless repartition first
+    pays a full local sort of its input
+    (spark.sql.execution.sortBeforeRepartition, needed so retried
+    tasks reproduce their row assignment — guide §2.5), while hashing
+    a deterministic key is retry-safe for free. The key is the point
+    id wherever the output carries it, so points sharing one
+    coordinate (geocoded centroids) still spread; count mode reads
+    only the coordinates, and hashing the id would force the id column
+    into its scan (observed in the plan's ReadSchema)."""
+    target = 2 * pts.sparkSession.sparkContext.defaultParallelism
+    try:
+        if pts.rdd.getNumPartitions() >= target:
+            return pts
+    except Exception:  # e.g. a streaming frame has no rdd
+        return pts
+    keys = ("px", "py") if mode == "count" else ("point_id",)
+    return pts.repartition(target, *keys)
+
+
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame | PreparedPolygonLayer,
@@ -380,23 +446,26 @@ def point_in_polygon_join(
     cell_deg: float = GRID.DEFAULT_CELL_DEG,
     mode: str = "pairs",  # pairs | count | semi | percell | anti
     refine: bool = True,
-    broadcast: str | bool = "auto",
     salt: bool = False,
     target_pairs_per_task: int = 100_000,
-    probe_partitions: int | str | None = "auto",
-    refine_transport: str = "auto",  # auto | wkb | broadcast
-    broadcast_dict_rows: int = 500_000,
     point_payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """Point-in-polygon spatial join (north_rule primary query).
 
     ``polygons`` must carry ``geom_wkb, minx, miny, maxx, maxy``
     (from operators.ingest.ingest_geometry) — or just the bounds
-    columns when ``refine=False`` (MBR-only join).
+    columns when ``refine=False`` (MBR-only join). A
+    ``PreparedPolygonLayer`` is reused without a new collect.
 
     A point lies in exactly one cell, so results are duplicate-free
     without any dedup shuffle. ``mode='percell'`` keeps the polygon's
     cell replication visible (reference §3.2 parity diagnostics).
+
+    The broadcast side and the refine transport come from
+    ``plans.planner.plan_join``: the MBR predicate alone when every
+    polygon is its MBR, the broadcast polygon dictionary when ids are
+    unique (candidates then carry only (poly_id, x, y) through Arrow),
+    else the per-candidate WKB column.
 
     ``point_payload`` names extra point columns carried THROUGH the
     join (``mode='pairs'`` only) so a downstream per-zone aggregate
@@ -405,6 +474,9 @@ def point_in_polygon_join(
     the pair table. Payload names must not collide with the polygon
     layer's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` columns.
     """
+    from workstealing_spatial_join_spark.functions.exprs import cexpr
+    from workstealing_spatial_join_spark.plans.planner import plan_join
+
     if point_payload and mode != "pairs":
         raise ValueError("point_payload requires mode='pairs'")
     pts = tessellate_points(
@@ -418,204 +490,53 @@ def point_in_polygon_join(
         lat="py",
         cell_deg=cell_deg,
     )
-    # Probe repartitioning is decided AFTER the refine transport is
-    # known (below): only a Python refine stage needs it — under a
-    # broadcast join its parallelism equals the probe's scan splits,
-    # so a compact input would serialize the pandas-UDF refine. A
-    # pure-Catalyst plan (refine=False / rect fast path) runs fine on
-    # the scan splits, and the repartition would be a wasted exchange.
-
-    if isinstance(polygons, PreparedPolygonLayer):
-        if refine and polygons.contains_udf is None:
-            raise ValueError(
-                "PreparedPolygonLayer was built without a broadcastable "
-                "geometry dict (layer too large, or multipart ids — the "
-                "dict transport needs one geometry per id); use "
-                "refine=False or a DataFrame layer"
-            )
-        pts_raw = pts
-        if refine:
-            pts = _ensure_probe_partitions(pts, probe_partitions)
-        polys = _maybe_broadcast(polygons.exploded, None, broadcast)
-        return _pip_finish(
-            pts, polys, polygons.contains_udf if refine else None,
-            refine, mode, salt, target_pairs_per_task,
-            build_small=polygons.n_rows <= BROADCAST_ROW_THRESHOLD,
-            build_rows=polygons.n_rows,
-            payload=point_payload,
-            pts_cost=pts_raw,
-            build_cell_counts=polygons.cell_counts,
-        )
-
-    # Refine transport: per-candidate WKB column vs broadcast polygon
-    # dictionary. WKB-per-pair puts ~hundreds of bytes per candidate
-    # through Arrow — at 10^7+ candidates that is the bottleneck (IPC
-    # bandwidth), so when the polygon layer fits on the driver we ship
-    # only (poly_id, x, y) and broadcast the geometry once per worker.
-    contains_udf = None
-    rows = None
-    if refine and refine_transport in ("auto", "broadcast"):
-        rows = _collect_geom_dict(
-            polygons, poly_id,
-            None if refine_transport == "broadcast" else broadcast_dict_rows,
-        )
-        # id-keyed transports need one geometry per id — repeated ids
-        # (multipart parts exploded at ingest) keep the WKB column so
-        # each PART row refines against its own part (reference
-        # semantics: parts are separate geometries, src/reader.cpp:44)
-        if rows is not None and len({r[0] for r in rows}) == len(rows):
-            if _all_rects_matching_bounds(rows):
-                # every polygon IS its MBR: the Catalyst bounds filter
-                # is the exact closed contains — zero Python
-                refine = False
-            else:
-                from workstealing_spatial_join_spark.functions.predicates import (
-                    make_contains_xy_broadcast,
-                )
-
-                contains_udf = make_contains_xy_broadcast(
-                    polygons.sparkSession,
-                    [r[0] for r in rows],
-                    [r[1] for r in rows],
-                )
-
-    poly_cols = [F.col(poly_id).alias("poly_id"), "minx", "miny", "maxx", "maxy"]
-    if refine and contains_udf is None:
-        poly_cols.append("geom_wkb")
-    src = polygons
-    if rows is not None and len(rows) <= LOCAL_BUILD_MAX_ROWS:
-        # replay the already-collected layer locally: the build side
-        # of every downstream job then skips the source scan (and any
-        # ingest Python stage) entirely
-        src = _local_geom_frame(polygons, poly_id, rows)
-    polys = tessellate_bbox(src.select(*poly_cols), cell_deg)
-
-    pts_raw = pts
-    if refine:
-        pts = _ensure_probe_partitions(pts, probe_partitions)
-    polys = _maybe_broadcast(polys, polygons, broadcast)
-    return _pip_finish(
-        pts, polys, contains_udf, refine, mode, salt, target_pairs_per_task,
-        build_small=rows is not None,
-        build_rows=(
-            int(_covering_cell_counts(rows, cell_deg).sum())
-            if rows is not None
-            else None
-        ),
-        payload=point_payload,
-        pts_cost=pts_raw,
-        build_cell_counts=(
-            _cell_count_pairs(rows, cell_deg) if rows is not None else None
-        ),
+    layer, tessellate = _join_side(polygons, poly_id, cell_deg, collect=refine)
+    # the cost table reads the UN-repartitioned probe: it needs only
+    # per-cell counts, and the refine repartition would pay that
+    # exchange a second time (the main query re-executes it anyway)
+    hot, extra = (
+        _hot_cells(pts, layer, tessellate(False), target_pairs_per_task)
+        if salt else (None, None)
     )
-
-
-def _pip_finish(
-    pts: DataFrame,
-    polys: DataFrame,
-    contains_udf,
-    refine: bool,
-    mode: str,
-    salt: bool,
-    target_pairs_per_task: int,
-    build_small: bool = False,
-    build_rows: int | None = None,
-    payload: tuple[str, ...] = (),
-    pts_cost: DataFrame | None = None,
-    build_cell_counts=None,
-) -> DataFrame:
-    if salt:
-        # LB1 rebirth: cost-estimated salting of hot cells (see
-        # operators/skew.py) — bounds the largest join group the way
-        # TASKS_PER_JOB bounded the reference's work units.
+    plan = plan_join(
+        None, layer, "contains" if refine else None, salt_extra_rows=extra
+    )
+    polys = tessellate(plan.transport == "wkb")
+    if plan.transport != "catalyst-rect":
+        # only a Python refine needs the spread; a pure-Catalyst plan
+        # runs fine on the scan splits
+        pts = _spread_probe(pts, mode)
+    join_keys = ["cell_id"]
+    if hot is not None:
         from workstealing_spatial_join_spark.operators.skew import (
-            cell_cost_table,
             salt_build_side,
             salt_probe_side,
         )
 
-        # collect the hot-cell cost table ONCE (tiny by construction:
-        # one row per cell whose est_pairs exceed the task target) and
-        # replay it as a local frame — the salting joins and the
-        # broadcast gate below would otherwise each re-run the two
-        # groupBy aggregates behind it. The probe side of the cost
-        # aggregate is the UN-repartitioned tessellation (pts_cost):
-        # the cost job needs only per-cell counts, and running it
-        # through the refine repartition would pay that exchange a
-        # second time (the main query re-executes it anyway).
-        # build_cell_counts (driver-side closed form from the
-        # collected layer) removes the build-side aggregate too.
-        cost_hot = cell_cost_table(
-            pts_cost if pts_cost is not None else pts,
-            polys,
-            target_pairs=target_pairs_per_task,
-            right_cell_counts=build_cell_counts,
-        ).where(F.col("n_salt") > 1)
-        cost_rows = cost_hot.collect()
-        if not cost_rows:
-            # the estimator found NO hot cell: the honest LB1 decision
-            # is to not pay the salting machinery at all (probe-side
-            # salt join, build-side replicate explode, a wider join
-            # key) — the same adaptive skip AQE's skew handling makes
-            # when nothing is skewed. Results are identical by
-            # construction (an all-ones salt table is a no-op); the
-            # cost estimation itself — the thing the salted parity
-            # query measures — has already run.
-            salt = False
-    if salt:
-        cost = pts.sparkSession.createDataFrame(cost_rows, cost_hot.schema)
-        pts = salt_probe_side(pts, cost, ["point_id"])
-        polys = salt_build_side(polys, cost)
-        if build_small:
-            # the salt explode wrecks AQE's size estimate for the
-            # build side (sequence-explode cardinality is unknown), so
-            # a known-small layer would fall back to a full shuffle
-            # join — re-assert the broadcast hint (measured: salted
-            # PIP 8.1s -> shuffle removed at bench scale). But gate it
-            # on the POST-salt size (ADVICE r3): replication on a
-            # heavily skewed layer can multiply the pre-salt rows the
-            # caller sized well past safe broadcast size. The extra
-            # row count is exact from the collected cost rows:
-            # Σ (n_salt−1)·build_rows over hot cells. Gate on
-            # base + extra (ADVICE r4): a layer already at the
-            # threshold plus heavy salting must not broadcast ~2×
-            # the threshold.
-            extra = sum(
-                (r["n_salt"] - 1) * r["n_right"] for r in cost_rows
-            )
-            base = build_rows if build_rows is not None else 0
-            if base + extra <= BROADCAST_ROW_THRESHOLD:
-                polys = F.broadcast(polys)
-        join_keys = ["cell_id", "salt"]
-    else:
-        join_keys = ["cell_id"]
-        if build_small and (
-            build_rows is None or build_rows <= BROADCAST_ROW_THRESHOLD
-        ):
-            # deterministic J4 fragment-and-replicate: the build side
-            # is KNOWN to fit (collected dict / closed-form exploded
-            # count) — assert the broadcast instead of hoping AQE's
-            # size estimate agrees (a local-replay or lazily-cached
-            # build side has no stats, and a missed broadcast here is
-            # a full shuffle of the probe table)
-            polys = F.broadcast(polys)
-
-    from workstealing_spatial_join_spark.functions.exprs import cexpr
+        pts = salt_probe_side(pts, hot, ["point_id"])
+        polys = salt_build_side(polys, hot)
+        join_keys.append("salt")
+    if plan.broadcast_side == "right":
+        # deterministic J4 fragment-and-replicate: the build side is
+        # KNOWN to fit — assert the broadcast instead of hoping AQE's
+        # size estimate agrees (a local-replay, lazily-cached or
+        # salt-exploded build side has no usable stats, and a missed
+        # broadcast here is a full shuffle of the probe table)
+        polys = F.broadcast(polys)
 
     cand = pts.join(polys, on=join_keys).where(
         cexpr(
             "px >= minx AND px <= maxx AND py >= miny AND py <= maxy"
         )
     )
-    if refine:
-        if contains_udf is not None:
-            cand = cand.where(
-                contains_udf(F.col("poly_id"), F.col("px"), F.col("py"))
-            )
-        else:
-            cand = cand.where(
-                PREDICATES["contains_xy"](F.col("geom_wkb"), F.col("px"), F.col("py"))
-            )
+    if plan.transport == "dict":
+        cand = cand.where(
+            layer.contains_udf(F.col("poly_id"), F.col("px"), F.col("py"))
+        )
+    elif plan.transport == "wkb":
+        cand = cand.where(
+            PREDICATES["contains_xy"](F.col("geom_wkb"), F.col("px"), F.col("py"))
+        )
     if mode == "count":
         return cand.agg(F.count(F.lit(1)).alias("join_count"))
     if mode == "semi":
@@ -637,27 +558,26 @@ def _pip_finish(
         )
     if mode == "percell":
         return cand.select("point_id", "poly_id", "cell_id")
-    return cand.select("point_id", "poly_id", *payload)
+    return cand.select("point_id", "poly_id", *point_payload)
 
 
 def polygon_join(
-    left: DataFrame,
-    right: DataFrame,
+    left: DataFrame | PreparedPolygonLayer,
+    right: DataFrame | PreparedPolygonLayer,
     left_id: str = "l_id",
     right_id: str = "r_id",
     predicate: str = "intersects",
     cell_deg: float = GRID.DEFAULT_CELL_DEG,
     mode: str = "pairs",  # pairs | count
     dedup: str = "refpoint",  # refpoint | parity
-    broadcast: str | bool = "auto",
     salt: bool = False,
     target_pairs_per_task: int = 100_000,
-    refine_transport: str = "auto",  # auto | wkb | broadcast
-    broadcast_dict_rows: int = 500_000,
     extra_pair_filter=None,
 ) -> DataFrame:
     """Geometry×geometry spatial join with a runtime refine predicate
-    (J1/J3/J5). Both inputs need ``geom_wkb, minx..maxy`` columns.
+    (J1/J3/J5). Both inputs need ``geom_wkb, minx..maxy`` columns; a
+    side may be a ``PreparedPolygonLayer``, reused without a new
+    collect.
 
     mode='count' with predicate='intersects' reproduces the
     reference's ST_INTERSECTS scalar (match count,
@@ -665,194 +585,91 @@ def polygon_join(
     'union_numpoints' it sums vertex counts (thread_util.cpp:424-425,
     435-441). dedup='parity' reproduces per-cell multiplicity (§3.2).
 
-    Refine transport: with 'broadcast' (default when both layers fit
-    on the driver), candidate pairs carry only (lid, rid) through
-    Arrow and both geometry dictionaries ship once per executor —
-    the WKB-per-candidate-pair column (the round-1 bottleneck) never
-    enters the join. 'wkb' keeps the per-pair column (layers too big
-    to collect — though at that scale prefer the cogroup strategy,
-    operators/cogroup_join.py, which ships each geometry once per
-    covering cell).
+    The broadcast side and the refine transport come from
+    ``plans.planner.plan_join``. With the 'dict' transport (both layers
+    collected with unique ids), candidate pairs carry only (lid, rid)
+    through Arrow and both geometry dictionaries ship once per
+    executor — the WKB-per-candidate-pair column (the round-1
+    bottleneck) never enters the join. 'wkb' keeps the per-pair column
+    (layers too big to collect, or repeated ids — though at scale
+    prefer the cogroup strategy, operators/cogroup_join.py, which
+    ships each geometry once per covering cell).
 
     ``extra_pair_filter``: optional Catalyst predicate over the pair's
     bounds columns (``l.minx``..``r.maxy``), applied BEFORE refine —
     pushes query-level pair restrictions into the join, ahead of the
     Python kernel.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
+    from workstealing_spatial_join_spark.plans.planner import plan_join
+
     if predicate not in PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
-
-    def _side(layer, id_col):
-        """Normalize a side to (rows, all_rects, unique_ids,
-        tessellate_fn, original_df). Prepared layers answer from their
-        cache — no new collect, no new driver-side decode."""
-        if isinstance(layer, PreparedGeometryLayer):
-            if layer.cell_deg != cell_deg:
-                raise ValueError(
-                    "PreparedGeometryLayer cell_deg "
-                    f"{layer.cell_deg} != join cell_deg {cell_deg}"
-                )
-            if refine_transport == "wkb":
-                # explicit WKB transport overrides the cached dict —
-                # same escape hatch the DataFrame path honors
-                return None, False, False, layer.exploded, layer.df
-            rows = layer.rows
-            if rows is None and refine_transport == "broadcast":
-                rows = _collect_geom_dict(layer.df, layer.id_col, None)
-            return rows, layer.all_rects, layer.unique_ids, layer.exploded, layer.df
-        rows = None
-        if refine_transport in ("auto", "broadcast"):
-            # one pass: the size probe and the dictionary collection
-            # are the same limited collect (a separate count() would
-            # re-run the whole ingest pipeline)
-            rows = _collect_geom_dict(
-                layer, id_col,
-                None if refine_transport == "broadcast"
-                else broadcast_dict_rows,
-            )
-        all_rects = rows is not None and _all_rects_matching_bounds(rows)
-        unique = rows is not None and len({r[0] for r in rows}) == len(rows)
-
-        # replay a collected layer locally: its tessellation then
-        # costs no source scan (and no ingest Python stage) in any
-        # downstream job — the dict collect already paid these bytes
-        src = layer
-        if rows is not None and len(rows) <= LOCAL_BUILD_MAX_ROWS:
-            src = _local_geom_frame(layer, id_col, rows)
-
-        def tess(with_wkb: bool) -> DataFrame:
-            cols = [F.col(id_col).alias("gid"), "minx", "miny", "maxx", "maxy"]
-            if with_wkb:
-                cols.insert(1, F.col("geom_wkb").alias("g_wkb"))
-            return tessellate_bbox(src.select(*cols), cell_deg)
-
-        return rows, all_rects, unique, tess, layer
 
     # the two dictionary collects are independent driver actions —
     # run them CONCURRENTLY (guide §2.6: the scheduler happily
     # overlaps jobs; actions are only sequential because driver code
     # calls them sequentially). Both collects are bounded by the dict
-    # cap, so the huge-left case at worst collects a bounded right
-    # dictionary it will still use (broadcast side choice below).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # cap.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_l = pool.submit(_side, left, left_id)
-        fut_r = pool.submit(_side, right, right_id)
-        lrows, l_rects, l_unique, l_tess, l_df = fut_l.result()
-        rrows, r_rects, r_unique, r_tess, r_df = fut_r.result()
+        fut_l = pool.submit(_join_side, left, left_id, cell_deg)
+        fut_r = pool.submit(_join_side, right, right_id, cell_deg)
+        la, l_tess = fut_l.result()
+        ra, r_tess = fut_r.result()
 
+    # salting: the (larger) left side is the salted probe, the right
+    # side is replicated across salts in hot cells only
+    hot, extra = (
+        _hot_cells(l_tess(False), ra, r_tess(False), target_pairs_per_task)
+        if salt else (None, None)
+    )
+    plan = plan_join(la, ra, predicate, salt_extra_rows=extra)
+    catalyst_rect = plan.transport == "catalyst-rect"
     refine_bc = None
-    catalyst_rect = False
-    if lrows is not None and rrows is not None:
-        # zero-Python fast path: every geometry IS its MBR →
-        # the Catalyst bounds predicate is the exact predicate
-        # (verified per row, never assumed) and numPoints is a
-        # closed-form CASE over the pair bounds. This path is
-        # per-ROW and id-free, so repeated (multipart) ids are
-        # fine — identical semantics to the WKB path.
-        if (
-            predicate in ("intersects", "intersection_numpoints")
-            and l_rects and r_rects
-        ):
-            catalyst_rect = True
-        elif predicate == "union_numpoints" and l_rects and r_rects \
-                and l_unique and r_unique:
-            # union on rect layers SPLITS the plan: generic-position
-            # positive-overlap pairs take the closed-form 13-2(ca+cb)
-            # CASE (pure Catalyst, the common case); only degenerate
-            # contacts (shared coordinates / touches) pay the pair
-            # UDF. Needs the id-keyed dict for that residual branch.
-            from workstealing_spatial_join_spark.functions.predicates import (
-                make_pair_refine_broadcast,
-            )
+    if plan.transport == "dict" or (catalyst_rect and predicate == "union_numpoints"):
+        # id-keyed pair refine; on rect layers union SPLITS the plan:
+        # generic-position pairs take the closed-form CASE below and
+        # only degenerate contacts pay this UDF
+        from workstealing_spatial_join_spark.functions.predicates import (
+            make_pair_refine_broadcast,
+        )
 
-            catalyst_rect = True
-            refine_bc = make_pair_refine_broadcast(
-                l_df.sparkSession,
-                [r[0] for r in lrows], [r[1] for r in lrows],
-                [r[0] for r in rrows], [r[1] for r in rrows],
-                predicate,
-            )
-        # the id-keyed dict transport needs one geometry per id —
-        # repeated ids (multipart parts exploded at ingest) keep
-        # the WKB column so each PART row refines against its own
-        # part (reference semantics: parts are separate
-        # geometries, src/reader.cpp:44)
-        elif l_unique and r_unique:
-            from workstealing_spatial_join_spark.functions.predicates import (
-                make_pair_refine_broadcast,
-            )
+        refine_bc = make_pair_refine_broadcast(
+            la.src.sparkSession,
+            [r[0] for r in la.rows], [r[1] for r in la.rows],
+            [r[0] for r in ra.rows], [r[1] for r in ra.rows],
+            predicate,
+        )
 
-            refine_bc = make_pair_refine_broadcast(
-                l_df.sparkSession,
-                [r[0] for r in lrows], [r[1] for r in lrows],
-                [r[0] for r in rrows], [r[1] for r in rrows],
-                predicate,
-            )
-
-    with_wkb = refine_bc is None and not catalyst_rect
+    with_wkb = plan.transport == "wkb"
     lt = (
         l_tess(with_wkb)
-        .withColumnsRenamed({"gid": "lid", "g_wkb": "l_wkb"})
+        .withColumnsRenamed({"poly_id": "lid", "geom_wkb": "l_wkb"})
         .alias("l")
     )
     rt = (
         r_tess(with_wkb)
-        .withColumnsRenamed({"gid": "rid", "g_wkb": "r_wkb"})
+        .withColumnsRenamed({"poly_id": "rid", "geom_wkb": "r_wkb"})
         .alias("r")
     )
-    l_expl = (
-        int(_covering_cell_counts(lrows, cell_deg).sum())
-        if lrows is not None else None
-    )
-    r_expl = (
-        int(_covering_cell_counts(rrows, cell_deg).sum())
-        if rrows is not None else None
-    )
-    if (
-        broadcast == "auto"
-        and not salt
-        and l_expl is not None
-        and l_expl <= BROADCAST_ROW_THRESHOLD
-        and (r_expl is None or l_expl < r_expl)
-    ):
-        # broadcast the SMALLER side (J4 chooses the replicated side
-        # by size, tests/main.cpp:189-274) — the exploded counts are
-        # exact closed forms over the collected bounds. Left-side
-        # build is expressed by hinting lt; skipped under salting,
-        # whose probe/replicate roles are fixed (lt salted per row,
-        # rt replicated across salts).
-        lt = F.broadcast(lt)
-    elif (
-        broadcast == "auto"
-        and r_expl is not None
-        and r_expl <= BROADCAST_ROW_THRESHOLD
-    ):
-        # deterministic J4: the right layer is KNOWN to fit (collected
-        # rows + closed-form exploded count) — assert the broadcast
-        # rather than relying on AQE size estimates, which a
-        # local-replay frame does not carry
-        rt = F.broadcast(rt)
-    else:
-        rt = _maybe_broadcast(rt, r_df, broadcast)
-
     join_cond = F.col("l.cell_id") == F.col("r.cell_id")
-    if salt:
-        # LB1 rebirth for polygon×polygon: salt the (larger) left side,
-        # replicate the right side across salts in hot cells only
+    if hot is not None:
         from workstealing_spatial_join_spark.operators.skew import (
-            cell_cost_table,
             salt_build_side,
             salt_probe_side,
         )
 
-        cost = cell_cost_table(lt, rt, target_pairs=target_pairs_per_task).where(
-            F.col("n_salt") > 1
-        )
-        lt = salt_probe_side(lt, cost, ["lid"]).alias("l")
-        rt = salt_build_side(rt, cost).alias("r")
+        lt = salt_probe_side(lt, hot, ["lid"]).alias("l")
+        rt = salt_build_side(rt, hot).alias("r")
         join_cond = join_cond & (F.col("l.salt") == F.col("r.salt"))
+    # deterministic J4: the broadcast side is KNOWN to fit (exact
+    # closed-form size) — assert it rather than rely on AQE size
+    # estimates, which a local-replay frame does not carry
+    if plan.broadcast_side == "left":
+        lt = F.broadcast(lt)
+    elif plan.broadcast_side == "right":
+        rt = F.broadcast(rt)
 
     from workstealing_spatial_join_spark.functions.exprs import cexpr
 
@@ -993,51 +810,3 @@ def polygon_join(
         ["l.cell_id"] if dedup == "parity" else []
     )
     return scored.select(*sel)
-
-
-def _repartition_probe(df: DataFrame, n: int) -> DataFrame:
-    """Spread the probe side over ``n`` partitions. HASH partitioning
-    on the unique point id, not round-robin: a keyless repartition
-    first pays a full local sort of its input
-    (spark.sql.execution.sortBeforeRepartition, needed so retried
-    tasks reproduce their row assignment — guide §2.5), while hashing
-    a deterministic unique key is retry-safe for free and spreads
-    evenly."""
-    cols = df.columns
-    if "px" in cols and "py" in cols:
-        # the coordinates are read by every downstream mode anyway;
-        # hashing the unique id would force the id column into the
-        # scan even in count mode (observed in the plan's ReadSchema)
-        return df.repartition(n, F.col("px"), F.col("py"))
-    if "point_id" in cols:
-        return df.repartition(n, F.col("point_id"))
-    return df.repartition(n)
-
-
-def _ensure_probe_partitions(df: DataFrame, probe_partitions) -> DataFrame:
-    if probe_partitions is None:
-        return df
-    if probe_partitions == "auto":
-        # 2× parallelism: fine-grained tasks let the scheduler absorb
-        # stragglers — the same granularity insight as the reference's
-        # TASKS_PER_JOB=20 chunking (include/global_var.h:26), applied
-        # at Spark task level instead of deque-job level.
-        target = 2 * df.sparkSession.sparkContext.defaultParallelism
-        try:
-            current = df.rdd.getNumPartitions()
-        except Exception:
-            return df
-        return _repartition_probe(df, target) if current < target else df
-    return _repartition_probe(df, int(probe_partitions))
-
-
-def _maybe_broadcast(
-    exploded: DataFrame, original: DataFrame, broadcast: str | bool
-) -> DataFrame:
-    """Fragment-and-replicate rebirth (J4, tests/main.cpp:189-274):
-    replicate the small layer to every task instead of shuffling both
-    sides. 'auto' asks Catalyst/AQE (autoBroadcastJoinThreshold +
-    runtime stats) — explicit True forces the hint."""
-    if broadcast is True:
-        return F.broadcast(exploded)
-    return exploded

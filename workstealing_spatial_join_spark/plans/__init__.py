@@ -1,1 +1,1 @@
-"""Physical planning helpers: strategy selection + plan-quality audit."""
+"""Physical planning: the join plan decision + plan-quality audit."""

@@ -1,17 +1,15 @@
-"""Spatial planner: pick the physical strategy for a spatial join from
-table statistics, and audit that the produced plan has the shape the
-engine promises (SURVEY.md §4).
+"""Spatial join planner: one pure decision for both spatial joins, and
+the audit that the produced plan has the shape the engine promises
+(SURVEY.md §4).
 
-The reference hard-codes one pipeline and one optimization set; here
-the planner is a thin Python layer that inspects sizes and emits
-DataFrame-plan OPTIONS — Catalyst/AQE still owns the physical plan.
-
-Strategy matrix (mirrors §4's physical-execution decisions):
-  polygons small (≤ broadcast_rows)        → broadcast the exploded
-      polygon side (J4 fragment-and-replicate rebirth)
-  both large, skewed cells (cost table)    → salted cell join (LB1)
-  both large, uniform                      → plain cell equi-join;
-      AQE skew-split as backstop
+``plan_join`` is the reference's J4 fragment-and-replicate choice
+(tests/main.cpp:189-274) — replicate a side when it fits, the smaller
+one when both do — plus the choice of refine transport. It reads only
+the exact figures each join already holds for its geometry sides
+(``operators.spatial_join.LayerAnalysis``: closed-form exploded rows,
+collected WKB bytes, id uniqueness, rectangle verification), so it runs
+no job and trusts no estimate. Where it forces nothing (an uncollected
+side), Catalyst/AQE still decide.
 """
 
 from __future__ import annotations
@@ -21,163 +19,77 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+# an exploded bounds-only row: id, four bounds and cell_id, 8 bytes each
+BOUNDS_ROW_BYTES = 48
+# the one size gate for every forced broadcast: a bounds-only side
+# fits up to 2M exploded cell-rows (~96 MB)
+BROADCAST_BUDGET_BYTES = 2_000_000 * BOUNDS_ROW_BYTES
 
-@dataclass
+
+@dataclass(frozen=True)
 class JoinPlan:
-    broadcast: bool | str
-    salt: bool
-    reason: str
-    strategy: str = "catalyst"  # catalyst (cell join + UDF refine) | cogroup
+    broadcast_side: str | None  # "left" | "right" | None (AQE decides)
+    transport: str  # "catalyst-rect" | "dict" | "wkb"
 
 
-def choose_pip_strategy(
-    n_points: int,
-    n_polygons: int,
-    max_cell_share: float = 0.0,
-    broadcast_rows: int = 2_000_000,
-    skew_share_threshold: float = 0.05,
-    est_candidates_per_point: float = 0.0,
-    cogroup_density_threshold: float = 3.0,
+def _build_bytes(side, carries_wkb: bool, extra_rows: int = 0) -> int | None:
+    """Exact bytes a side puts into a broadcast: its exploded rows (plus
+    the rows salting replicates) at the bounds-row width, plus the WKB
+    column when it is carried — each collected geometry once per
+    covering cell, salted replicas at the layer's mean. None when the
+    side was not collected."""
+    if side is None or side.exploded_rows is None:
+        return None
+    rows = side.exploded_rows + extra_rows
+    size = rows * BOUNDS_ROW_BYTES
+    if carries_wkb and side.exploded_rows:
+        size += side.exploded_wkb_bytes * rows // side.exploded_rows
+    return size
+
+
+def plan_join(
+    left, right, predicate: str | None, salt_extra_rows: int | None = None
 ) -> JoinPlan:
-    """Decide strategy/broadcast/salt for a point-in-polygon join.
+    """Decide the broadcast side and the refine transport of a join.
 
-    ``max_cell_share``: fraction of points in the densest cell (from a
-    stats pass or prior cost table; 0 = unknown/uniform).
+    ``left``/``right`` are ``LayerAnalysis`` objects (read: exploded_rows,
+    exploded_wkb_bytes, unique_ids, all_rects; ``exploded_rows`` None =
+    not collected) or None for a side that is not a geometry layer —
+    the points of a PIP join. ``predicate`` is ``"contains"`` for PIP,
+    a polygon-join predicate, or None for an MBR-only join.
+    ``salt_extra_rows``: rows salting adds to the right (replicated)
+    side; when set, the left side is the salted probe and never
+    broadcast.
 
-    ``n_polygons`` is measured in the unit that actually gets
-    replicated — EXPLODED polygon-cell rows (a polygon covering c
-    cells counts c times), matching
-    operators.spatial_join.BROADCAST_ROW_THRESHOLD.
-
-    ``est_candidates_per_point``: expected MBR-candidate polygons per
-    point (from the cell cost table: Σ est_pairs / n_points; 0 =
-    unknown/sparse). MEASURED crossover (jobs/run_crossover.py, 2M
-    points, 32 cores): at ~5 candidates/point the cell-bucketed
-    cogroup beat the broadcast-dict refine 4.1× at 20k polygons and
-    the WKB transport 3.7× at 800k — candidate-dense workloads pay
-    per-candidate Arrow transport in the catalyst path, while cogroup
-    refines each cell in one dense vectorized kernel call. The driver
-    tables sit at ~2.6 candidates/point, where broadcast-dict wins.
+    Transport: ``catalyst-rect`` when the MBR predicate is the whole
+    refine (every geometry equals its MBR; union also needs the
+    id-keyed dict for its degenerate residual), ``dict`` when every
+    side is collected with unique ids, else ``wkb``.
     """
-    if est_candidates_per_point >= cogroup_density_threshold:
-        return JoinPlan(
-            broadcast=False,
-            salt=max_cell_share > skew_share_threshold,
-            reason=f"~{est_candidates_per_point:.1f} candidates/point ≥ "
-            f"{cogroup_density_threshold}: per-cell cogroup kernel "
-            "(measured 3.7-4.1× over per-candidate Arrow transport at "
-            "density ~5, jobs/crossover_runs.jsonl)",
-            strategy="cogroup",
-        )
-    if n_polygons <= broadcast_rows:
-        return JoinPlan(
-            broadcast=True,
-            salt=False,
-            reason=f"polygon side {n_polygons} rows ≤ {broadcast_rows}: "
-            "replicate build side (no shuffle on points)",
-        )
-    if max_cell_share > skew_share_threshold:
-        return JoinPlan(
-            broadcast=False,
-            salt=True,
-            reason=f"hot cell holds {max_cell_share:.1%} of points: "
-            "salted cell join",
-            strategy="cogroup",
-        )
-    return JoinPlan(
-        broadcast=False,
-        salt=False,
-        reason="both sides large, no measured skew: cogroup cell join "
-        "(the dict transport is capped and WKB-per-candidate measured "
-        "3.7× slower at 800k polygons)",
-        strategy="cogroup",
-    )
-
-
-def plan_pip_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    point_id: str = "image_id",
-    poly_id: str = "polygon_id",
-    lon: str = "lon",
-    lat: str = "lat",
-    cell_deg: float | None = None,
-    mode: str = "pairs",
-    target_pairs_per_task: int = 100_000,
-    **strategy_kwargs,
-) -> tuple[DataFrame, JoinPlan]:
-    """Measure, decide, dispatch — the planner made executable.
-
-    ONE stats pass (the cell cost table both strategies would build
-    anyway, plus a 5-value aggregate over it) yields n_points,
-    n_polygon_cells, candidate density, and the hottest cell's share;
-    ``choose_pip_strategy`` picks the physical strategy from the
-    MEASURED crossover (jobs/crossover_runs.jsonl) and the join runs
-    it. Returns (result DataFrame, the JoinPlan with its reason) so
-    callers can log why the plan was chosen.
-
-    At 10^12 rows this stats pass is two map-side-combined aggregates
-    over (cell_id) — tiny vs the join it steers."""
-    from pyspark.sql import functions as F
-
-    from workstealing_spatial_join_spark.functions import grid as GRID
-    from workstealing_spatial_join_spark.operators.cogroup_join import (
-        point_in_polygon_join_cogrouped,
-    )
-    from workstealing_spatial_join_spark.operators.skew import cell_cost_table
-    from workstealing_spatial_join_spark.operators.spatial_join import (
-        point_in_polygon_join,
-        tessellate_bbox,
-        tessellate_points,
-    )
-
-    cell_deg = cell_deg or GRID.DEFAULT_CELL_DEG
-    pts = tessellate_points(
-        points.select(
-            F.col(point_id).alias("point_id"),
-            F.col(lon).alias("px"),
-            F.col(lat).alias("py"),
-        ),
-        lon="px", lat="py", cell_deg=cell_deg,
-    )
-    pls = tessellate_bbox(
-        polygons.select("minx", "miny", "maxx", "maxy"), cell_deg
-    )
-    cost = cell_cost_table(pts, pls, target_pairs=target_pairs_per_task)
-    stats = cost.agg(
-        F.sum("n_left").alias("np_in_joined_cells"),
-        F.sum("est_pairs").alias("est_candidates"),
-        F.max("n_left").alias("hottest_cell_points"),
-    ).collect()[0]
-    # the broadcast cap is defined in EXPLODED CELL ROWS (what the
-    # engine actually replicates — BROADCAST_ROW_THRESHOLD), counted
-    # over the WHOLE layer, not just cells that also contain points
-    n_poly_cells = pls.count()
-    n_points = stats["np_in_joined_cells"] or 0
-    est_cand = stats["est_candidates"] or 0
-    plan = choose_pip_strategy(
-        n_points=int(n_points),
-        n_polygons=int(n_poly_cells),
-        max_cell_share=(
-            (stats["hottest_cell_points"] or 0) / n_points if n_points else 0.0
-        ),
-        est_candidates_per_point=(est_cand / n_points if n_points else 0.0),
-        **strategy_kwargs,
-    )
-    if plan.strategy == "cogroup":
-        out = point_in_polygon_join_cogrouped(
-            points, polygons, point_id=point_id, poly_id=poly_id,
-            lon=lon, lat=lat, cell_deg=cell_deg, mode=mode,
-            salt=plan.salt, target_pairs_per_task=target_pairs_per_task,
-        )
+    sides = [s for s in (left, right) if s is not None]
+    collected = all(s.exploded_rows is not None for s in sides)
+    unique = collected and all(s.unique_ids for s in sides)
+    rects = collected and all(s.all_rects for s in sides)
+    union = predicate == "union_numpoints"
+    if predicate is None or (rects and (unique or not union)):
+        transport = "catalyst-rect"
+    elif unique:
+        transport = "dict"
     else:
-        out = point_in_polygon_join(
-            points, polygons, point_id=point_id, poly_id=poly_id,
-            lon=lon, lat=lat, cell_deg=cell_deg, mode=mode,
-            broadcast=plan.broadcast, salt=plan.salt,
-            target_pairs_per_task=target_pairs_per_task,
-        )
-    return out, plan
+        transport = "wkb"
+
+    wkb = transport == "wkb"
+    sizes = {
+        "left": None if salt_extra_rows is not None else _build_bytes(left, wkb),
+        "right": _build_bytes(right, wkb, salt_extra_rows or 0),
+    }
+    fits = {
+        k: v for k, v in sizes.items()
+        if v is not None and v <= BROADCAST_BUDGET_BYTES
+    }
+    # the smaller side that fits; a tie replicates the right side
+    side = min(fits, key=lambda k: (fits[k], k == "left"), default=None)
+    return JoinPlan(side, transport)
 
 
 # ------------------------------------------------------------- audit
