@@ -89,14 +89,35 @@ def test_knn_exact_boundary_distances(spark):
 
 
 def test_knn_auto_initial_ring(spark):
-    """initial_ring='auto' (default) must match an explicit ring."""
+    """initial_ring='auto' (default) must match an explicit ring, and
+    the stats report the split decision: the fixture's hot box (10 %
+    of the images in one cell) is the one split cell."""
     pdf = FX.images_pdf(200, with_bytes=False)
     df = spark.createDataFrame(pdf[["image_id", "lon", "lat"]]).cache()
-    a = knn_join(df.limit(20), df, k=4, exclude_self=True)  # auto
+    stats = {}
+    a = knn_join(df.limit(20), df, k=4, exclude_self=True, stats=stats)  # auto
     b = knn_join(df.limit(20), df, k=4, initial_ring=8, exclude_self=True)
     assert {(r.query_id, r.rank, r.neighbor_id) for r in a.collect()} == {
         (r.query_id, r.rank, r.neighbor_id) for r in b.collect()
     }
+    assert stats["split_cells"] == 1 and stats["max_level"] >= 1
+
+
+def test_knn_duplicate_query_ids_run_no_extra_rounds(spark):
+    """Every query row twice: both loops count distinct query ids, so
+    the duplicated input runs exactly the rounds of the de-duplicated
+    one (a row count would never reach zero and run empty rounds up
+    to the whole-grid ring)."""
+    from workstealing_spatial_join_spark.operators.knn import knn_haversine_join
+
+    pdf = FX.images_pdf(200, with_bytes=False)
+    df = spark.createDataFrame(pdf[["image_id", "lon", "lat"]]).cache()
+    q = df.where(F.col("image_id") < "img000000000020")
+    for join in (knn_join, knn_haversine_join):
+        once, twice = {}, {}
+        join(q, df, k=3, exclude_self=True, stats=once).collect()
+        join(q.unionByName(q), df, k=3, exclude_self=True, stats=twice).collect()
+        assert twice["rounds"] == once["rounds"], join.__name__
 
 
 def test_assign_tiles_arithmetic(spark):

@@ -1,21 +1,50 @@
 """kNN join via grid k-ring expansion with distance refinement (J6 —
 required by the north_rule; the reference has no kNN, SURVEY.md §2.3).
 
-Plan per round (all Catalyst except nothing — there is NO Python in
-this operator at all):
+Plan per round (all Catalyst — there is NO Python in this operator):
 
-    queries → cell (floor arithmetic)
-            → explode k-ring cells (sequence × sequence)
-            → equi-join candidates on cell_id
+    queries → own cell → level lq (split-table lookup)
+            → box around q, radius R = r·cell_deg / 2^lq
+            → explode the coarse cells the box meets, then, inside each
+              split cell, the fine indices the box meets
+            → equi-join candidates on (cell_id, sub)
             → euclidean distance (codegen'd)
             → Window row_number per query ≤ k
 
-Correctness rule: searching Chebyshev ring r guarantees every
-candidate within distance r*cell_deg of the query is seen. A query is
-SETTLED when it has ≥k candidates and its k-th distance ≤ r*cell_deg;
-unsettled queries re-run with a doubled ring (driver loop over a
-shrinking distributed DataFrame — the moral analog of the reference's
-iterative work redistribution, but expressed as dataflow).
+Density-adaptive cells (the planar join's answer to skew — the
+reference balances a hot partition by work stealing, this engine
+refines the grid where the points are). One aggregate over the
+candidate layer (``_split_table``) yields the layer's mean density,
+which sizes the first ring, and the exact counts of its densest cells.
+A cell holding n points at mean density ρ gets a level
+L = floor(log4(n / ρ)), capped at ``SPLIT_MAX_LEVEL`` (``_split_level``
+has the full rule): its 2^L × 2^L fine cells then hold about as many
+points as a coarse cell of the mean layer. The small split table of
+(cell_id, L) rides in the plan as one hashed id set per level, so it
+reaches every task with the stage's broadcast task binary — no lookup
+join, no extra job, and the corpus is never shuffled for it (a
+broadcast-hash lookup join measured one extra job per round, and its
+size estimate turned the cover's static broadcast into a shuffle of
+the whole candidate layer). A candidate's key is (cell_id, sub), where sub
+is its fine index ``floor(u · 2^L)`` (u the grid's own
+``(coord + 180) / cell_deg`` arithmetic, relative to the cell) in a
+split cell and 0 elsewhere. A query in a cell of level lq searches
+the radius R = r·cell_deg / 2^lq, so a query in the hot cell meets a
+few dozen fine cells instead of the whole cell.
+
+Correctness rule: the box is the query's own fine ring in u-space,
+[(f − r) / 2^lq, (f + r + 1) / 2^lq) per axis (f its fine index) —
+exact dyadic bounds that contain every u within r / 2^lq of the
+query. The cover applies the candidate side's monotone floor and
+clamp to those bounds at each cell's own level, so every candidate
+within R is seen. A query is SETTLED when it has ≥k candidates and
+its k-th distance is STRICTLY below R; every unseen candidate is
+farther than R, so a settled top-k is exact. Unsettled queries re-run
+with a doubled ring (driver loop over a shrinking distributed
+DataFrame — the moral analog of the reference's iterative work
+redistribution, but expressed as dataflow). The round at ``max_ring``
+is final for everyone and searches the coarse ring (lq = 0), exactly
+the unsplit operator's last round.
 
 Distances are planar-euclidean on lon/lat degrees (matches the DuckDB
 oracle exactly); no longitude wrap (documented limitation).
@@ -23,21 +52,31 @@ oracle exactly); no longitude wrap (documented limitation).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import grid as GRID
+from workstealing_spatial_join_spark.functions.exprs import cexpr, dlit
+from workstealing_spatial_join_spark.functions.grid import (
+    _spark_sql_cell_x,
+    _spark_sql_cell_y,
+)
+
+# finest split level: a split cell has at most 4**SPLIT_MAX_LEVEL fine
+# cells, so a pile of points on one coordinate cannot blow up the
+# cover explode of a query whose box spans the whole cell
+SPLIT_MAX_LEVEL = 8
+# the split table keeps at most this many of the densest cells; the
+# rest stay coarse (slower for their queries, never inexact)
+SPLIT_MAX_CELLS = 256
 
 
 def _ring_cells(df: DataFrame, r: int, cell_deg: float) -> DataFrame:
     # memoized name-based expressions (functions/exprs.py): the ring
     # explode is rebuilt once per (r, cell_deg) per process instead
-    # of paying ~100 py4j round trips per kNN round
-    from workstealing_spatial_join_spark.functions.exprs import cexpr
-    from workstealing_spatial_join_spark.functions.grid import (
-        _spark_sql_cell_x, _spark_sql_cell_y,
-    )
-
+    # of paying ~100 py4j round trips per query
     nx, ny = GRID.grid_dims(cell_deg)
     cx = _spark_sql_cell_x("qx", cell_deg)
     cy = _spark_sql_cell_y("qy", cell_deg)
@@ -77,12 +116,12 @@ def _haversine_km(qx, qy, cx, cy):
     return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
 
 
-def _auto_ring_cells(c: DataFrame, k: int, cell_deg: float,
-                     max_ring: int) -> int:
-    """First-ring size in cells from candidate BOUNDING-BOX density
-    (occupied-cell density over-estimates sparse layers — most ring
-    cells are empty). Shared by the planar and great-circle kNN
-    joins. One cheap aggregate.
+def _density_ring(stats, k: int, cell_deg: float,
+                  max_ring: int) -> tuple[float, int]:
+    """(density, first ring) from a layer's point count ``n`` and
+    bounding box ``x0..y1``. Density is per cell of the candidate
+    BOUNDING BOX (occupied-cell density over-estimates sparse layers —
+    most ring cells are empty).
 
     Sizing rule: a query SETTLES at ring r only when its k-th
     neighbor lies strictly inside the guaranteed radius r·cell_deg —
@@ -95,27 +134,84 @@ def _auto_ring_cells(c: DataFrame, k: int, cell_deg: float,
     k too (P(Poisson(3k)<k) is only ~5% at k=1 — e⁻³ — and ~2% at
     k=2-3; with λ=3k+7, P(Poisson(λ)<k) < 1e-4 for every k ≥ 1), so
     round 1 settles all but genuinely sparse-region queries."""
-    import math
-
-    stats = c.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("cx").alias("x0"), F.max("cx").alias("x1"),
-        F.min("cy").alias("y0"), F.max("cy").alias("y1"),
-    ).collect()[0]
     if not stats["n"]:
-        return 1
+        return 0.0, 1
     cells = max(
         1.0,
         ((stats["x1"] - stats["x0"]) / cell_deg + 1)
         * ((stats["y1"] - stats["y0"]) / cell_deg + 1),
     )
     density = stats["n"] / cells  # points per cell == per cell_deg²
-    return max(1, min(
+    return density, max(1, min(
         max_ring,
         math.ceil(
             math.sqrt((3.0 * k + 7.0) / (math.pi * max(density, 1e-12)))
         ),
     ))
+
+
+def _auto_ring_cells(c: DataFrame, k: int, cell_deg: float,
+                     max_ring: int) -> int:
+    """First-ring size in cells from candidate density (one cheap
+    aggregate; the great-circle kNN's sizing)."""
+    stats = c.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("cx").alias("x0"), F.max("cx").alias("x1"),
+        F.min("cy").alias("y0"), F.max("cy").alias("y1"),
+    ).collect()[0]
+    return _density_ring(stats, k, cell_deg, max_ring)[1]
+
+
+def _split_level(n: int, density: float, k: int, r0: int) -> int:
+    """Split level of a cell holding ``n`` points; 0 = not split.
+
+    L = floor(log4(n / density)), capped at ``SPLIT_MAX_LEVEL`` and at
+    floor(log4(n·π·r0² / (3k+7))) — the level at which the cell's own
+    points, spread evenly, still put 3k+7 of them inside the first
+    fine ring (for the auto ring this is the looser of the two; it
+    binds when a caller passes a small ``initial_ring``). A cell is
+    split only when its fine ring is smaller than one coarse cell
+    (2^L > r0): a larger ring spans the whole cell anyway, so the
+    split would only shrink the radius and add rounds."""
+    room = n * min(1.0 / density, math.pi * r0 * r0 / (3.0 * k + 7.0))
+    level = 0
+    while level < SPLIT_MAX_LEVEL and 4 ** (level + 1) <= room:
+        level += 1
+    return level if (1 << level) > r0 else 0
+
+
+def _split_table(
+    c: DataFrame, k: int, cell_deg: float, initial_ring, max_ring: int
+) -> tuple[int, list[tuple[int, int]]]:
+    """(first ring, split table) from ONE aggregate over the candidate
+    layer: a rollup on cell_id gives the exact per-cell counts and, in
+    its grand-total row, the count and bounding box behind the mean
+    density. Ordering by (grand total first, count desc) under a limit
+    collects the total plus the ``SPLIT_MAX_CELLS`` densest cells —
+    bounded driver cost whatever the number of occupied cells — in
+    the same two jobs the plain density aggregate took."""
+    rows = (
+        c.rollup("cell_id")
+        .agg(
+            F.grouping_id().alias("total"),
+            F.count(F.lit(1)).alias("n"),
+            F.min("cx").alias("x0"), F.max("cx").alias("x1"),
+            F.min("cy").alias("y0"), F.max("cy").alias("y1"),
+        )
+        .orderBy(F.desc("total"), F.desc("n"))
+        .limit(SPLIT_MAX_CELLS + 1)
+        .collect()
+    )
+    if not rows:  # empty layer: no grand-total row either
+        return (1 if initial_ring == "auto" else initial_ring), []
+    density, ring = _density_ring(rows[0], k, cell_deg, max_ring)
+    r0 = ring if initial_ring == "auto" else initial_ring
+    split = []
+    for row in rows[1:]:
+        level = _split_level(row["n"], density, k, r0)
+        if level and row["cell_id"] is not None:
+            split.append((row["cell_id"], level))
+    return r0, split
 
 
 def _haversine_ring_cover(
@@ -131,8 +227,6 @@ def _haversine_ring_cover(
     high latitude); when sin-ratio ≥ 1 the radius wraps the pole and
     every longitude qualifies. Longitude WRAPS at ±180° (pmod ring
     indices; array_distinct collapses full-circle rings)."""
-    import math
-
     nx, ny = GRID.grid_dims(cell_deg)
     lat_deg = radius_km / _KM_PER_DEG
     r_lat_cells = max(1, math.ceil(lat_deg / cell_deg))
@@ -245,8 +339,6 @@ def knn_haversine_join(
     cover is a superset of the radius ball, so every unseen candidate
     is farther). Returns (query_id, neighbor_id, rank, dist_km);
     ties break by neighbor_id."""
-    import math
-
     global_cover_km = 180.0 * _KM_PER_DEG + 1.0  # whole globe covered
     q = queries.select(
         F.col(query_id).alias("query_id"),
@@ -266,19 +358,8 @@ def knn_haversine_join(
     w = Window.partitionBy("query_id").orderBy("dist_km", "neighbor_id")
     if stats is not None:
         stats["initial_radius_km"] = float(initial_radius_km)
-        stats["rounds"] = 0
-    settled_parts: list[DataFrame] = []
-    # same count-based round bookkeeping as the planar loop: the input
-    # is checkpointed once, each round checkpoints only the flagged
-    # top-k; remaining stays a lazy anti-join chain over checkpoints
-    # and the loop exits on settled-count arithmetic (2 jobs per
-    # round instead of 3)
-    remaining = q.localCheckpoint(eager=True)
-    n_remaining = remaining.count()  # cheap: reads the checkpoint cache
-    radius = float(initial_radius_km)
-    while True:
-        if stats is not None:
-            stats["rounds"] += 1
+
+    def round_topk(remaining: DataFrame, radius: float) -> DataFrame:
         ringed = _haversine_ring_cover(remaining, radius, cell_deg)
         cand = ringed.join(c, on="cell_id")
         if exclude_self:
@@ -287,34 +368,77 @@ def knn_haversine_join(
             "dist_km",
             _haversine_km(F.col("qx"), F.col("qy"), F.col("cx"), F.col("cy")),
         )
-        topk = (
+        return (
             scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "dist_km")
+            .select("query_id", "neighbor_id", "rank", "dist_km",
+                    F.lit(radius).alias("reach"))
         )
-        if radius >= global_cover_km:
-            settled_parts.append(topk)
+
+    return _settle_rounds(
+        q, k, float(initial_radius_km), lambda radius: radius >= global_cover_km,
+        round_topk, "dist_km", stats,
+    )
+
+
+def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
+                   dist: str, stats: dict | None) -> DataFrame:
+    """The driver loop shared by both kNN joins. ``round_topk(remaining,
+    ring)`` plans one round's top-k with a ``reach`` column (the radius
+    within which that query has seen every candidate); ``ring`` starts
+    at ``first`` and doubles until ``is_final(ring)``, whose round is
+    kept whole.
+
+    Round bookkeeping by COUNT, not by materialization: the input is
+    checkpointed ONCE (an expensive upstream plan must not re-run per
+    round), then the remaining-queries frame stays a lazy anti-join
+    chain over per-round checkpoints (depth = rounds, each parent
+    materialized — no exponential regrowth) and the loop exits on
+    settled-count arithmetic instead of a per-round isEmpty job + a
+    per-round remaining checkpoint job. Both counts are of DISTINCT
+    query ids — duplicated query rows share one window partition, so
+    a row count would never reach zero and would run empty rounds."""
+    if stats is not None:
+        stats["rounds"] = 0
+    remaining = q.localCheckpoint(eager=True)
+    n_remaining = remaining.select("query_id").distinct().count()
+    settled_parts: list[DataFrame] = []
+    ring = first
+    while True:
+        if stats is not None:
+            stats["rounds"] += 1
+        topk = round_topk(remaining, ring)
+        if is_final(ring):
+            settled_parts.append(topk.drop("reach"))
             break
-        # ONE job per round: the settled test rides the same window
+        # settled: k found and k-th dist STRICTLY within the reach. The
+        # cover only guarantees unseen candidates lie beyond the reach
+        # in exact arithmetic; after float rounding an unseen
+        # candidate's dist can collapse to exactly the reach and
+        # tie-break ahead of a kept one — strict '<' closes that hole
+        # at the cost of one extra round for exact-boundary kth.
+        # ONE job per round: the settle test rides the SAME window
         # partitioning as the top-k (count/max over partitionBy
         # query_id reuse the row_number exchange), so top-k + settle
-        # classification materialize in a single checkpoint instead of
-        # a checkpoint + groupBy + two derived jobs (round-3 shape).
+        # classification materialize in a single checkpoint.
         wq = Window.partitionBy("query_id")
         flagged = topk.withColumn(
             "settled",
             (F.count(F.lit(1)).over(wq) >= k)
-            & (F.max("dist_km").over(wq) < F.lit(radius)),
-        ).localCheckpoint(eager=True)
-        settled_parts.append(
-            flagged.where("settled").drop("settled")
-        )
-        settled_ids = flagged.where("settled").select("query_id").distinct()
+            & (F.max(dist).over(wq) < F.col("reach")),
+        ).drop("reach").localCheckpoint(eager=True)
+        settled = flagged.where("settled").drop("settled")
+        settled_parts.append(settled)
+        # one rank-1 row per settled query id: a plain count against
+        # the checkpoint cache. Queries with ZERO candidates this round
+        # are absent from flagged, so the remaining count is tracked by
+        # subtraction, not derived from flagged alone
+        settled_ids = settled.where(F.col("rank") == 1).select("query_id")
         n_remaining -= settled_ids.count()
         if n_remaining <= 0:
             break
         remaining = remaining.join(settled_ids, on="query_id", how="left_anti")
-        radius *= 2
+        ring *= 2
     out = settled_parts[0]
     for part in settled_parts[1:]:
         out = out.unionByName(part)
@@ -351,8 +475,6 @@ def dwithin_join(
     cross-antimeridian neighbors entirely. 'haversine' routes to
     ``dwithin_haversine_join``; ``radius`` is then km and the cover
     wraps ±180° and the poles."""
-    import math
-
     if metric == "haversine":
         return dwithin_haversine_join(
             left, right, radius, left_id=left_id, right_id=right_id,
@@ -384,6 +506,95 @@ def dwithin_join(
     ).select("left_id", "right_id", "dist")
 
 
+def _level_sql(cell: str, split: list[tuple[int, int]]) -> str:
+    """Split level of the cell id in SQL expression ``cell``, 0 outside
+    the split table: one ``IN`` set per level, which Catalyst turns
+    into a hashed ``InSet`` past ten ids. The table rides inside the
+    plan — every task receives it with its stage's broadcast task
+    binary — so looking it up costs no join, no exchange and no job."""
+    by_level: dict[int, list[int]] = {}
+    for cid, level in split:
+        by_level.setdefault(level, []).append(cid)
+    whens = " ".join(
+        f"WHEN {cell} IN ({', '.join(f'{cid}L' for cid in sorted(ids))}) THEN {level}"
+        for level, ids in sorted(by_level.items(), reverse=True)
+    )
+    return f"CASE {whens} ELSE 0 END" if whens else "0"
+
+
+def _candidate_sub_sql(cell_deg: float) -> str:
+    """A candidate's fine index inside its cell at the cell's level
+    ``lvl``: floor(u · 2^lvl) relative to the cell, clamped to the cell
+    exactly as the cell index is clamped to the grid (0 when lvl = 0).
+    u is the grid's own (coord + offset) / cell_deg, so the fine cells
+    nest in the coarse ones bit for bit."""
+    d = dlit(cell_deg)
+    p = "shiftleft(1L, lvl)"
+
+    def fine(u: str, cell: str) -> str:
+        return f"LEAST(GREATEST(FLOOR({u} * {p}) - {cell} * {p}, 0L), {p} - 1L)"
+
+    return (
+        f"{fine(f'((cx + 180.0D) / {d})', 'shiftright(cell_id, 32)')} * {p} "
+        f"+ {fine(f'((cy + 90.0D) / {d})', '(cell_id & 4294967295L)')}"
+    )
+
+
+def _fine_cover(q: DataFrame, r: int, cell_deg: float,
+                split: list[tuple[int, int]]) -> DataFrame:
+    """Explode query rows (query_id, qx, qy, lq) into every
+    (cell_id, sub) their box meets. The box is the query's fine ring r
+    at its level lq in u-space: [(f − r) / 2^lq, (f + r + 1) / 2^lq)
+    per axis, f the query's clamped fine index — exact dyadic bounds
+    (lq = 0 gives the coarse ring [cell − r, cell + r] exactly). The
+    coarse cells come first; each split cell then explodes the fine
+    indices the bounds meet at its own level, with the candidate
+    side's floor and clamp, so the box's candidates all match."""
+    nx, ny = GRID.grid_dims(cell_deg)
+    d = dlit(cell_deg)
+    pq = "shiftleft(1L, lq)"
+    p = "shiftleft(1L, lvl)"
+
+    def bounds(u: str, cell: str, axis: str) -> list:
+        f = f"LEAST(GREATEST(FLOOR({u} * {pq}), {cell} * {pq}), {cell} * {pq} + {pq} - 1L)"
+        return [
+            cexpr(f"(({f}) - {int(r)}L) / {pq} AS {axis}_lo"),
+            cexpr(f"(({f}) + {int(r) + 1}L) / {pq} AS {axis}_hi"),
+        ]
+
+    def coarse(axis: str, n: int) -> object:
+        return cexpr(
+            f"explode(sequence(GREATEST(FLOOR({axis}_lo), 0L), "
+            f"LEAST(CEIL({axis}_hi) - 1L, {n - 1}L)))"
+        )
+
+    def fine(axis: str) -> object:
+        return cexpr(
+            f"explode(sequence(GREATEST(FLOOR({axis}_lo * {p}) - ring_{axis} * {p}, 0L), "
+            f"LEAST(CEIL({axis}_hi * {p}) - 1L - ring_{axis} * {p}, {p} - 1L)))"
+        )
+
+    box = q.select(
+        "query_id", "qx", "qy", "lq",
+        *bounds(f"((qx + 180.0D) / {d})", _spark_sql_cell_x("qx", cell_deg), "x"),
+        *bounds(f"((qy + 90.0D) / {d})", _spark_sql_cell_y("qy", cell_deg), "y"),
+    )
+    cells = (
+        box.withColumn("ring_x", coarse("x", nx))
+        .withColumn("ring_y", coarse("y", ny))
+        .withColumn("cell_id", cexpr("ring_x * 4294967296L + ring_y"))
+    )
+    return (
+        cells.withColumn("lvl", cexpr(_level_sql("cell_id", split)))
+        .withColumn("sub_x", fine("x"))
+        .withColumn("sub_y", fine("y"))
+        .select(
+            "query_id", "qx", "qy", "lq", "cell_id",
+            cexpr(f"sub_x * {p} + sub_y AS sub"),
+        )
+    )
+
+
 def knn_join(
     queries: DataFrame,
     candidates: DataFrame,
@@ -406,8 +617,13 @@ def knn_join(
     neighbor_id ascending (deterministic, oracle-matching).
 
     ``initial_ring='auto'`` sizes the first ring from candidate
-    density (one cheap aggregate over the candidate layer) so the
-    first round settles the bulk of queries without per-query tuning.
+    density so the first round settles the bulk of queries without
+    per-query tuning. The same aggregate over the candidate layer
+    (run whatever ``initial_ring``) picks the split cells: queries in
+    a dense cell search a proportionally smaller first radius (module
+    doc). ``max_ring`` bounds the coarse ring; its round is final.
+    ``stats``, when given, receives ``initial_ring``, ``rounds``,
+    ``split_cells`` and ``max_level``.
 
     ``metric``: 'planar' treats lon/lat as plain x/y — euclidean
     degrees, NO longitude wrap (two points across the antimeridian
@@ -448,29 +664,31 @@ def knn_join(
         F.col(c_lat).alias("cy"),
     ).withColumn("cell_id", GRID.cell_id_col(F.col("cx"), F.col("cy"), cell_deg))
 
-    if initial_ring == "auto":
-        initial_ring = _auto_ring_cells(c, k, cell_deg, max_ring)
+    r0, split = _split_table(c, k, cell_deg, initial_ring, max_ring)
     if stats is not None:
-        stats["initial_ring"] = initial_ring
-        stats["rounds"] = 0
+        stats["initial_ring"] = r0
+        stats["split_cells"] = len(split)
+        stats["max_level"] = max((lvl for _, lvl in split), default=0)
+    keyed = (
+        c.withColumn("lvl", cexpr(_level_sql("cell_id", split)))
+        .withColumn("sub", cexpr(_candidate_sub_sql(cell_deg)))
+        .drop("lvl")
+    )
+    own_level = _level_sql(
+        f"({_spark_sql_cell_x('qx', cell_deg)} * 4294967296L "
+        f"+ {_spark_sql_cell_y('qy', cell_deg)})",
+        split,
+    )
 
     w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
-    settled_parts: list[DataFrame] = []
-    # Round bookkeeping by COUNT, not by materialization: the input is
-    # checkpointed ONCE (an expensive upstream plan must not re-run per
-    # round), then the remaining-queries frame stays a lazy anti-join
-    # chain over per-round checkpoints (depth = rounds, each parent
-    # materialized — no exponential regrowth) and the loop exits on
-    # settled-count arithmetic instead of a per-round isEmpty job + a
-    # per-round remaining checkpoint job (3 jobs per round → 2).
-    remaining = q.localCheckpoint(eager=True)
-    n_remaining = remaining.count()  # cheap: reads the checkpoint cache
-    r = initial_ring
-    while True:
-        if stats is not None:
-            stats["rounds"] += 1
-        ringed = _ring_cells(remaining, r, cell_deg)
-        cand = ringed.join(c, on="cell_id")
+
+    def round_topk(remaining: DataFrame, r: int) -> DataFrame:
+        # the final round searches the coarse ring (lq = 0)
+        remaining = remaining.withColumn(
+            "lq", cexpr("0" if r >= max_ring else own_level)
+        )
+        covered = _fine_cover(remaining, r, cell_deg, split)
+        cand = covered.join(keyed, on=["cell_id", "sub"])
         if exclude_self:
             cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
         # plain *, not pow(): basic IEEE ops are bit-identical across
@@ -478,42 +696,17 @@ def knn_join(
         dx = F.col("qx") - F.col("cx")
         dy = F.col("qy") - F.col("cy")
         scored = cand.withColumn("dist", F.sqrt(dx * dx + dy * dy))
-        topk = (
+        # reach = r·cell_deg / 2^lq: a power-of-two division, so it is
+        # exactly the coarse radius scaled to the query's level
+        return (
             scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.col("dist"))
+            .select(
+                "query_id", "neighbor_id", "rank", "dist",
+                cexpr(f"{dlit(float(r) * cell_deg)} / shiftleft(1L, lq) AS reach"),
+            )
         )
-        if r >= max_ring:
-            settled_parts.append(topk)
-            break
-        # settled: k found and k-th dist STRICTLY within the guaranteed
-        # radius. Ring r only guarantees unseen candidates lie at
-        # dist > r*cell_deg in exact arithmetic; after float rounding
-        # an unseen candidate's dist can collapse to exactly r*cell_deg
-        # and tie-break ahead of a kept one — strict '<' closes that
-        # hole at the cost of one extra round for exact-boundary kth.
-        # The settle test rides the SAME window partitioning as the
-        # top-k (count/max over partitionBy query_id reuse the
-        # row_number exchange): ONE materializing job per round
-        # instead of round-3's checkpoint + groupBy + derived jobs.
-        wq = Window.partitionBy("query_id")
-        flagged = topk.withColumn(
-            "settled",
-            (F.count(F.lit(1)).over(wq) >= k)
-            & (F.max("dist").over(wq) < F.lit(float(r) * cell_deg)),
-        ).localCheckpoint(eager=True)
-        settled_parts.append(flagged.where("settled").drop("settled"))
-        settled_ids = flagged.where("settled").select("query_id").distinct()
-        # one cheap job against the checkpoint cache; queries with
-        # ZERO candidates this round are absent from flagged, so the
-        # remaining count must be tracked by subtraction, not derived
-        # from flagged alone
-        n_remaining -= settled_ids.count()
-        if n_remaining <= 0:
-            break
-        remaining = remaining.join(settled_ids, on="query_id", how="left_anti")
-        r *= 2
-    out = settled_parts[0]
-    for part in settled_parts[1:]:
-        out = out.unionByName(part)
-    return out
+
+    return _settle_rounds(
+        q, k, r0, lambda r: r >= max_ring, round_topk, "dist", stats
+    )

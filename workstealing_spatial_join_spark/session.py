@@ -13,7 +13,34 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cores() -> int:
+    """Cores for ``local[N]``: ``SPARK_GRAFT_CPUS`` if set, else the
+    CPUs this process may run on (its affinity mask, which a container
+    or ``taskset`` narrows below the host's count)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEM`` if set, else half
+    of physical RAM (MemTotal) in whole GiB, at least 1g. In local
+    mode the driver heap holds every executor's work, and the other
+    half is left to JVM off-heap memory, the Python workers and the
+    OS — a heap sized past physical RAM gets the process OOM-killed
+    instead of spilling."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total // 2 // (1 << 30))}g"
+
+
+DEFAULT_SHUFFLE_PARTITIONS = default_cores()
 
 
 def _pythonpath_with_package() -> str:
@@ -90,7 +117,7 @@ def get_spark(
     Spark scheduler give steal-equivalent granularity, and AQE splits
     oversized post-shuffle partitions at runtime.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
     # the daemon/worker processes inherit the JVM's env; make sure the
     # package is importable there BEFORE the JVM launches (no-op when
@@ -116,7 +143,7 @@ def get_spark(
         # round-trips per task (measured 2.6× on the refine stage at
         # 32 cores vs 10k batches)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         # worker-pool daemon with the engine's hot imports preloaded:
