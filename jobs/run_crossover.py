@@ -1,8 +1,9 @@
-"""Broadcast-dict ↔ cogroup crossover evidence (round-2 verdict #9).
+"""Broadcast ↔ cogroup crossover evidence (round-2 verdict #9).
 
 The join planner (plans/planner.py:plan_join) replicates a polygon
-side that fits the broadcast budget with the broadcast-dict refine and
-leaves larger layers to the WKB transport; the cogroup operator is the
+side that fits the broadcast budget with the interior-cell Catalyst
+refine (functions/interior_cells.py) and leaves larger layers to the
+WKB transport; the cogroup operator is the
 alternative for large × large. Every driver-table layer fits the dict,
 so the crossover was never measured. This job measures PIP wall time for BOTH
 physical strategies at two polygon-layer sizes on the same 2M-point
@@ -85,7 +86,7 @@ def main():
     for n_polys, label in ((20_000, "small"), (800_000, "large")):
         polys = ensure_polys(spark, n_polys).cache()
         polys.count()
-        # catalyst strategy: broadcast-dict refine under the cap,
+        # catalyst strategy: interior-cell refine under the cap,
         # WKB-per-candidate transport above it (the automatic routing
         # point_in_polygon_join applies)
         c1, t1 = timed(

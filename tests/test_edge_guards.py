@@ -185,13 +185,15 @@ def test_interacting_holes_raise_not_miscount():
 def test_contains_xy_null_geometry_and_null_id(spark):
     """pd.factorize codes nulls as -1; unguarded negative indexing
     would ray-cast the row against the LAST unique polygon. Null
-    geometry / null polygon id must contain nothing."""
+    geometry must contain nothing — in the WKB-column refine, and in
+    the interior-cell refine of a collected layer, whose NULL-WKB row
+    keeps every covering cell as boundary with NULL rings."""
     import numpy as np
 
     from workstealing_spatial_join_spark.functions import wkt as W
-    from workstealing_spatial_join_spark.functions.predicates import (
-        make_contains_xy_broadcast,
-        st_contains_xy,
+    from workstealing_spatial_join_spark.functions.predicates import st_contains_xy
+    from workstealing_spatial_join_spark.operators.spatial_join import (
+        point_in_polygon_join,
     )
 
     sq = W.to_wkb(
@@ -210,16 +212,18 @@ def test_contains_xy_null_geometry_and_null_id(spark):
     ).collect()}
     assert hits == {0: True, 1: False}
 
-    contains_bc = make_contains_xy_broadcast(spark, [7], [sq])
-    df2 = spark.createDataFrame(
-        [(0, 7, 1.0, 1.0), (1, None, 1.0, 1.0)],
-        "rid long, poly_id long, x double, y double",
+    layer = spark.createDataFrame(
+        [(7, bytearray(sq), 0.0, 0.0, 10.0, 10.0), (8, None, 0.0, 0.0, 10.0, 10.0)],
+        "polygon_id long, geom_wkb binary, "
+        "minx double, miny double, maxx double, maxy double",
     )
-    hits2 = {r.rid: r.hit for r in df2.select(
-        "rid",
-        contains_bc(F.col("poly_id"), F.col("x"), F.col("y")).alias("hit"),
-    ).collect()}
-    assert hits2 == {0: True, 1: False}
+    pts = spark.createDataFrame(
+        [(0, 1.0, 1.0), (1, 5.5, 5.5)], "image_id long, lon double, lat double"
+    )
+    pairs = sorted(
+        (r.point_id, r.poly_id) for r in point_in_polygon_join(pts, layer).collect()
+    )
+    assert pairs == [(0, 7), (1, 7)]
 
 
 def test_is_valid_rejects_zero_area_and_spike_rings():

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from workstealing_spatial_join_spark.functions.interior_cells import CellClasses
 from workstealing_spatial_join_spark.operators import spatial_join as SJ
 from workstealing_spatial_join_spark.operators.spatial_join import (
     LayerAnalysis,
@@ -26,10 +27,17 @@ from workstealing_spatial_join_spark.plans.planner import (
 ROW_CAP = BROADCAST_BUDGET_BYTES // BOUNDS_ROW_BYTES
 
 
-def side(rows, wkb=0, unique=True, rects=False):
+def side(rows, wkb=0, unique=True, rects=False, cells=None):
     return LayerAnalysis(
         unique_ids=unique, all_rects=rects, exploded_rows=rows,
-        exploded_wkb_bytes=wkb,
+        exploded_wkb_bytes=wkb, cells=cells,
+    )
+
+
+def classes(interior, boundary, exterior=0, ring_bytes=0):
+    return CellClasses(
+        cells=None, inner=None, rings=None, interior=interior,
+        boundary=boundary, exterior=exterior, ring_bytes=ring_bytes,
     )
 
 
@@ -47,16 +55,39 @@ def test_budget_keeps_the_bounds_only_row_gate():
     assert ROW_CAP == 2_000_000
     # dict transport: the WKB column is not carried, so only the rows count
     dict_side = side(ROW_CAP, wkb=10**12)
-    assert decided(plan_join(None, dict_side, "contains")) == ("right", "dict")
-    assert decided(plan_join(None, side(ROW_CAP + 1), "contains")) == (None, "dict")
+    assert decided(plan_join(None, dict_side, "intersects")) == ("right", "dict")
+    assert decided(plan_join(None, side(ROW_CAP + 1), "intersects")) == (None, "dict")
 
 
 def test_wkb_carrying_side_counts_its_bytes():
     # repeated ids: WKB transport, the collected bytes ride along
     small = side(1_000, wkb=100_000, unique=False)
-    assert decided(plan_join(None, small, "contains")) == ("right", "wkb")
+    assert decided(plan_join(None, small, "intersects")) == ("right", "wkb")
     heavy = side(1_000, wkb=BROADCAST_BUDGET_BYTES, unique=False)
-    assert decided(plan_join(None, heavy, "contains")) == (None, "wkb")
+    assert decided(plan_join(None, heavy, "intersects")) == (None, "wkb")
+
+
+def test_rings_transport_counts_kept_rows_and_ring_bytes():
+    # the closed form counts exterior cells too; the rings build side
+    # holds only interior and boundary rows, the WKB column never rides
+    wide = side(3 * ROW_CAP, wkb=10**12, cells=classes(ROW_CAP - 10, 10, 2 * ROW_CAP))
+    assert decided(plan_join(None, wide, "contains")) == ("right", "rings")
+    over = side(ROW_CAP, cells=classes(ROW_CAP - 10, 10, ring_bytes=1))
+    assert decided(plan_join(None, over, "contains")) == (None, "rings")
+    # the boundary rows' ring bytes count against the budget
+    half = classes(ROW_CAP // 2 - 10, 10, ring_bytes=BROADCAST_BUDGET_BYTES // 2)
+    assert plan_join(None, side(ROW_CAP, cells=half), "contains").broadcast_side == "right"
+    heavy = classes(ROW_CAP // 2 - 10, 10, ring_bytes=BROADCAST_BUDGET_BYTES // 2 + 1)
+    assert plan_join(None, side(ROW_CAP, cells=heavy), "contains").broadcast_side is None
+    # salted replicas carry the layer's mean ring bytes per row
+    rows = classes(900, 100, ring_bytes=1_000 * BOUNDS_ROW_BYTES)
+    extra = ROW_CAP // 2 - 1_000
+    assert plan_join(
+        None, side(5_000, cells=rows), "contains", salt_extra_rows=extra
+    ).broadcast_side == "right"
+    assert plan_join(
+        None, side(5_000, cells=rows), "contains", salt_extra_rows=extra + 1
+    ).broadcast_side is None
 
 
 def test_over_budget_sides_are_left_to_aqe():
@@ -102,6 +133,16 @@ def test_transport_rules():
     assert plan_join(rect, rect, "union_numpoints").transport == "catalyst-rect"
     assert plan_join(rect, rect_multi, "union_numpoints").transport == "wkb"
     assert plan_join(rect, side(10), "intersects").transport == "dict"
+    # PIP: a classified layer refines in Catalyst, repeated ids or not;
+    # a collected layer without classes falls back to the WKB column
+    cells = classes(5, 5)
+    assert plan_join(None, side(10, cells=cells), "contains").transport == "rings"
+    multi = side(10, unique=False, cells=cells)
+    assert plan_join(None, multi, "contains").transport == "rings"
+    assert plan_join(None, side(10), "contains").transport == "wkb"
+    assert plan_join(None, side(10, rects=True, cells=cells), "contains").transport == (
+        "catalyst-rect"
+    )
     # an MBR-only join never refines
     assert plan_join(None, UNCOLLECTED, None).transport == "catalyst-rect"
 

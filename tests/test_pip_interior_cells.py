@@ -1,0 +1,306 @@
+"""Interior-cell PIP refine against a serial oracle.
+
+A collected polygon layer drops exterior cells, matches interior cells
+on the MBR residual alone and ray-casts boundary cells in Catalyst
+(functions/interior_cells.py). Every case here compares the join with
+brute force: the declared MBR AND ``geom.polygon_contains_xy`` over the
+row's polygon parts, NULL geometry containing nothing. The fixtures aim
+at the classification's edges: points on vertices, edges and cell
+lines; NULL, NaN, ±inf and clamped coordinates; a notch through a cell
+whose corners are all inside; a hole inside one cell; a multipolygon
+row; repeated ids; NULL WKB; a concavity a rounding error away from a
+cell line.
+"""
+
+import math
+import struct
+
+import numpy as np
+import pytest
+
+from workstealing_spatial_join_spark.functions import geom as G
+from workstealing_spatial_join_spark.functions import grid as GRID
+from workstealing_spatial_join_spark.functions import interior_cells as IC
+from workstealing_spatial_join_spark.functions import wkt as W
+from workstealing_spatial_join_spark.operators import spatial_join as SJ
+from workstealing_spatial_join_spark.operators.spatial_join import (
+    PreparedPolygonLayer,
+    point_in_polygon_join,
+)
+from workstealing_spatial_join_spark.plans.planner import audit_plan
+
+NAN, INF = math.nan, math.inf
+
+
+def ring(*xy):
+    return np.array(xy, dtype=np.float64)
+
+
+def poly(*rings):
+    return W.to_wkb(W.POLYGON, list(rings))
+
+
+def multi(*polys):
+    return struct.pack("<BII", 1, 6, len(polys)) + b"".join(polys)
+
+
+# a spike notch from the top edge down into cell [11, 12] x [11, 12],
+# whose four corners all stay inside
+NOTCH = ring(
+    (10, 10), (14, 10), (14, 14), (11.55, 14), (11.5, 11.5), (11.45, 14),
+    (10, 14), (10, 10),
+)
+# integer vertices: horizontal and vertical edges on cell lines
+LATTICE = ring((30, 30), (33, 30), (33, 32), (31.5, 33), (30, 32), (30, 30))
+# a left-open notch whose edge x = -5e-16 sits a rounding error left of
+# the cell line x = 0: Catalyst puts (-1e-15, y) into the cell right of it
+SLIVER = ring(
+    (-3, 2), (3, 2), (3, 11), (-3, 11), (-3, 8), (-5e-16, 8), (-5e-16, 5),
+    (-3, 5), (-3, 2),
+)
+# crosses the antimeridian line: its hole lies beyond 180, where points
+# clamp into the grid's last column
+BEYOND = [
+    ring((175, 20), (200, 20), (200, 25), (175, 25), (175, 20)),
+    ring((185, 21), (195, 21), (195, 24), (185, 24), (185, 21)),
+]
+# and beyond the pole
+POLAR = ring((50, 85), (55, 85), (55, 100), (50, 100), (50, 85))
+POLAR_HOLE = ring((51, 92), (54, 92), (54, 98), (51, 98), (51, 92))
+
+LAYER = [
+    # (id, wkb)
+    (1, poly(NOTCH)),
+    (2, poly(
+        ring((20, 20), (24, 20), (24, 24), (20, 24), (20, 20)),
+        ring((21.3, 21.3), (21.7, 21.3), (21.7, 21.7), (21.3, 21.7), (21.3, 21.3)),
+    )),
+    (3, multi(
+        poly(ring((40, 40), (42, 40), (41, 42.5), (40, 40))),
+        poly(ring((40.5, 41), (43, 41), (43, 43), (40.5, 43), (40.5, 41))),
+    )),
+    (4, poly(LATTICE)),
+    (4, poly(ring((31, 29), (34, 29), (34, 31), (31, 31), (31, 29)))),
+    (5, None),
+    (6, poly(SLIVER)),
+    (7, poly(*BEYOND)),
+    (8, poly(POLAR, POLAR_HOLE)),
+    (9, poly(ring((-60, -30), (-57.3, -31.7), (-55.1, -27.2), (-58.8, -25.9),
+                  (-60, -30)))),
+]
+NULL_BOUNDS = {5: (20.0, 20.0, 24.0, 24.0)}
+
+
+def layer_rows():
+    out = []
+    for pid, wkb in LAYER:
+        if wkb is None:
+            bounds = NULL_BOUNDS[pid]
+        else:
+            v = np.vstack([r for _, rs in W.from_wkb(wkb) for r in rs])
+            bounds = (v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max())
+        out.append((pid, None if wkb is None else bytearray(wkb), *map(float, bounds)))
+    return out
+
+
+def special_points():
+    pts = [
+        (None, 12.0), (12.0, None), (NAN, 12.0), (12.0, NAN), (NAN, NAN),
+        (INF, 22.0), (-INF, 22.0), (22.0, INF), (22.0, -INF),
+        (190.0, 22.5), (180.0, 22.5), (186.0, 20.0), (197.0, 22.0), (200.0, 25.0),
+        (52.0, 95.0), (52.0, 90.0), (52.5, 89.5), (56.0, 95.0),
+        (-1e-15, 6.5), (-1e-15, 5.0), (0.0, 6.5), (-5e-16, 6.0), (1e-15, 9.0),
+        (11.5, 11.8), (11.5, 11.5), (11.47, 12.5), (11.0, 11.0), (12.0, 12.0),
+        (21.5, 21.5), (21.3, 21.5), (21.7, 21.7), (21.0, 21.0), (22.0, 21.5),
+        (31.0, 30.0), (30.0, 31.0), (33.0, 32.0), (31.5, 33.0), (32.25, 32.5),
+        (32.0, 30.0), (31.0, 31.0), (32.0, 31.0), (33.0, 31.0), (31.0, 29.0),
+        (40.0, 40.0), (41.0, 42.5), (40.5, 41.0), (42.0, 42.0), (41.2, 41.9),
+    ]
+    for pid, wkb in LAYER:
+        if wkb is None:
+            continue
+        for _, rs in W.from_wkb(wkb):
+            for r in rs:
+                pts.extend(map(tuple, r))
+                pts.extend(map(tuple, (r[:-1] + r[1:]) / 2))
+    return pts
+
+
+def random_points(rng, cell_deg):
+    pts = []
+    for row in layer_rows():
+        x0, y0, x1, y1 = row[2:]
+        pts.extend(zip(rng.uniform(x0 - 0.5, x1 + 0.5, 150),
+                       rng.uniform(y0 - 0.5, y1 + 0.5, 150)))
+        # on the cell lines through the box
+        gx = np.arange(math.floor(x0), math.ceil(x1) + 1, 1.0)
+        gy = rng.uniform(y0, y1, len(gx))
+        pts.extend(zip(gx, gy))
+        pts.extend(zip(rng.uniform(x0, x1, len(gx)), np.round(gy / cell_deg) * cell_deg))
+    return pts
+
+
+@pytest.fixture(scope="module")
+def points_pdf():
+    import pandas as pd
+
+    rng = np.random.default_rng(20261017)
+    pts = special_points() + random_points(rng, 1.0) + random_points(rng, 0.1)
+    return pd.DataFrame({
+        "image_id": np.arange(len(pts), dtype=np.int64),
+        "lon": [p[0] for p in pts],
+        "lat": [p[1] for p in pts],
+    })
+
+
+def oracle_pairs(points_pdf):
+    """[(point_id, poly_id)] with multiplicity, by brute force."""
+    xs = points_pdf["lon"].to_numpy(dtype=np.float64)
+    ys = points_pdf["lat"].to_numpy(dtype=np.float64)
+    ids = points_pdf["image_id"].to_numpy()
+    out = []
+    with np.errstate(invalid="ignore"):
+        for pid, wkb, x0, y0, x1, y1 in layer_rows():
+            hit = np.zeros(len(xs), dtype=bool)
+            if wkb is not None:
+                for gtype, rs in W.from_wkb(bytes(wkb)):
+                    if gtype == W.POLYGON:
+                        hit |= G.polygon_contains_xy(rs, xs, ys)
+            hit &= (xs >= x0) & (xs <= x1) & (ys >= y0) & (ys <= y1)
+            out.extend((int(i), pid) for i in ids[hit])
+    return sorted(out)
+
+
+@pytest.fixture(scope="module")
+def frames(spark, points_pdf):
+    points = spark.createDataFrame(points_pdf).cache()
+    layer = spark.createDataFrame(
+        layer_rows(),
+        "pid long, geom_wkb binary, minx double, miny double, maxx double, maxy double",
+    ).cache()
+    return points, layer
+
+
+def run(points, layer, mode, salt, cell_deg):
+    return point_in_polygon_join(
+        points, layer, poly_id="pid", mode=mode, salt=salt, cell_deg=cell_deg,
+        target_pairs_per_task=50,
+    )
+
+
+@pytest.mark.parametrize("cell_deg", [1.0, 0.1])
+@pytest.mark.parametrize("salt", [False, True], ids=["unsalted", "salted"])
+@pytest.mark.parametrize("mode", ["pairs", "count", "semi", "anti", "percell"])
+def test_matches_serial_oracle(spark, frames, points_pdf, mode, salt, cell_deg):
+    points, layer = frames
+    want = oracle_pairs(points_pdf)
+    matched = {p for p, _ in want}
+    assert len(want) > 300 and len(matched) < len(points_pdf)  # both outcomes
+    df = run(points, layer, mode, salt, cell_deg)
+    assert sum(audit_plan(df)["python_nodes"].values()) == 0
+    rows = df.collect()
+    if mode == "pairs":
+        assert sorted((r.point_id, r.poly_id) for r in rows) == want
+    elif mode == "count":
+        assert rows[0][0] == len(want)
+    elif mode == "semi":
+        assert sorted(r.point_id for r in rows) == sorted(matched)
+    elif mode == "anti":
+        every = set(points_pdf["image_id"].tolist())
+        assert sorted(r.point_id for r in rows) == sorted(every - matched)
+    else:
+        assert sorted((r.point_id, r.poly_id) for r in rows) == want
+        xy = points_pdf.set_index("image_id")
+        for r in rows:
+            lon, lat = xy.loc[r.point_id, ["lon", "lat"]]
+            assert r.cell_id == int(GRID.cell_id(np.array([lon]), np.array([lat]), cell_deg)[0])
+
+
+def test_prepared_layer_and_wkb_path_agree(spark, frames, points_pdf, monkeypatch):
+    points, layer = frames
+    want = oracle_pairs(points_pdf)
+
+    def pairs(df):
+        return sorted((r.point_id, r.poly_id) for r in df.collect())
+
+    prepared = PreparedPolygonLayer(layer, "pid")
+    assert pairs(point_in_polygon_join(points, prepared, poly_id="pid")) == want
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)  # uncollected: WKB refine
+    assert pairs(point_in_polygon_join(points, layer, poly_id="pid")) == want
+
+
+def _classes(wkb, cell_deg=1.0):
+    rows = [(0, wkb, *layer_rows_bounds(wkb))]
+    cx0, cy0, w, h = SJ._cell_spans(rows, cell_deg)
+    return IC.classify_cells([wkb], cx0, cy0, w, h, cell_deg)
+
+
+def layer_rows_bounds(wkb):
+    v = np.vstack([r for _, rs in W.from_wkb(wkb) for r in rs])
+    return v[:, 0].min(), v[:, 1].min(), v[:, 0].max(), v[:, 1].max()
+
+
+def cell_class(classes, lon, lat, cell_deg=1.0):
+    cid = int(GRID.cell_id(np.array([lon]), np.array([lat]), cell_deg)[0])
+    cells = classes.cells.to_pylist()[0]
+    if cid not in cells:
+        return "exterior"
+    return "interior" if classes.inner.to_pylist()[0][cells.index(cid)] else "boundary"
+
+
+def test_cell_classes_at_the_edges():
+    notch = _classes(poly(NOTCH))
+    assert cell_class(notch, 10.5, 10.5) == "boundary"  # corner of the shell
+    assert cell_class(notch, 12.5, 12.5) == "interior"
+    assert cell_class(notch, 11.5, 11.2) == "boundary"  # notch, corners inside
+    hole = _classes(LAYER[1][1])
+    assert cell_class(hole, 21.5, 21.5) == "boundary"
+    assert cell_class(hole, 22.5, 22.5) == "interior"
+    sliver = _classes(poly(SLIVER))
+    assert cell_class(sliver, 0.5, 6.5) == "boundary"  # edge 5e-16 away
+    assert cell_class(sliver, 1.5, 6.5) == "interior"
+    beyond = _classes(poly(*BEYOND))
+    assert cell_class(beyond, 179.5, 22.5) == "boundary"  # grid edge column
+    assert cell_class(beyond, 177.5, 22.5) == "interior"
+    tri = _classes(poly(ring((0, 0), (6, 0), (0, 6), (0, 0))))
+    assert cell_class(tri, 1.5, 1.5) == "interior"
+    assert cell_class(tri, 2.5, 2.5) == "boundary"  # the hypotenuse's corner
+    assert cell_class(tri, 4.5, 4.5) == "exterior"
+    assert tri.rows + tri.exterior == 49  # the 7 x 7 covering cells
+
+
+def test_null_undecodable_and_non_finite_rows_contain_nothing(spark):
+    bad = [
+        (1, None),
+        (2, bytearray(b"\x01\x03\x00\x00\x00\x05")),  # truncated
+        (3, bytearray(poly(ring((0, 0), (4, 0), (NAN, 4), (0, 0))))),
+        (4, bytearray(poly(ring((0, 0), (4, 0), (4, 4), (0, 4), (0, 0))))),
+    ]
+    layer = spark.createDataFrame(
+        [(pid, wkb, 0.0, 0.0, 4.0, 4.0) for pid, wkb in bad],
+        "pid long, geom_wkb binary, minx double, miny double, maxx double, maxy double",
+    )
+    points = spark.createDataFrame(
+        [(0, 1.5, 1.5), (1, 3.5, 0.5)], "image_id long, lon double, lat double"
+    )
+    got = sorted(
+        (r.point_id, r.poly_id)
+        for r in point_in_polygon_join(points, layer, poly_id="pid").collect()
+    )
+    assert got == [(0, 4), (1, 4)]
+    classes = IC.classify_cells(
+        [wkb for _, wkb in bad], *SJ._cell_spans(
+            [(pid, wkb, 0.0, 0.0, 4.0, 4.0) for pid, wkb in bad], 1.0
+        ), 1.0,
+    )
+    # every cell of the three bad rows is boundary, with NULL rings
+    assert classes.inner.to_pylist()[:3] == [[False] * 25] * 3
+    assert all(r is None for rows in classes.rings.to_pylist()[:3] for r in rows)
+
+
+def test_open_ring_makes_its_row_boundary():
+    # an unclosed ring: its missing closing edge is not an edge, so the
+    # ray parity changes along y = 0 and y = 3 left of the open ends
+    open_ring = _classes(poly(ring((0, 0), (6, 0), (6, 3), (0, 3))))
+    assert not any(open_ring.inner.to_pylist()[0])
+    assert open_ring.exterior == 0

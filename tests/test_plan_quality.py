@@ -30,15 +30,29 @@ def layers(spark, tmp_path_factory):
 
 
 def test_pip_plan_single_python_node(layers):
+    """A collected layer refines in Catalyst (interior cells match on
+    the MBR, boundary cells ray-cast against their carried edges): no
+    Python node at all."""
     images, polys = layers
     df = point_in_polygon_join(images, polys, mode="count")
-    audit = assert_plan_quality(df, max_python_nodes=1)
-    # the one Python node is the Arrow refine, nothing else
-    assert audit["python_nodes"]["ArrowEvalPython"] == 1
-    assert audit["python_nodes"]["MapInPandas"] == 0
+    audit = assert_plan_quality(df, max_python_nodes=0)
+    assert sum(audit["python_nodes"].values()) == 0
+    assert "rings" in audit["plan"]
     # codegen_stages is 0 pre-AQE-finalization; only assert it never
     # goes negative (best-effort counter)
     assert audit["codegen_stages"] >= 0
+
+
+def test_pip_wkb_path_single_python_node(layers, monkeypatch):
+    """An uncollected layer keeps the WKB column and exactly one Python
+    node, the Arrow refine."""
+    images, polys = layers
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)
+    df = point_in_polygon_join(images, polys, mode="count")
+    audit = assert_plan_quality(df, max_python_nodes=1)
+    assert audit["python_nodes"]["ArrowEvalPython"] == 1
+    assert audit["python_nodes"]["MapInPandas"] == 0
+    assert "geom_wkb" in audit["plan"]
 
 
 def test_pip_mbr_only_plan_zero_python(layers):

@@ -21,16 +21,19 @@ pure NumPy over all pairs at once:
 * simple-ring pairs   → vertex-count-bucketed tensor kernels
 * everything else     → per-pair general kernels (rare tail)
 
-Transport: two ways to get geometry to the refine.
+Transport: two ways to get geometry to a pair refine.
 
 * WKB column per candidate pair (``st_*`` UDFs) — simple, but ships
   hundreds of bytes per pair through Arrow; the bottleneck at 10^7+
   candidates.
-* Broadcast geometry dictionary (``make_contains_xy_broadcast`` /
-  ``make_pair_refine_broadcast``) — candidates carry only ids;
-  geometry crosses the wire once per executor inside the broadcast.
-  This is the reference's replicate-layer-to-every-thread strategy
-  (tests/main.cpp:299-305) reborn.
+* Broadcast geometry dictionary (``make_pair_refine_broadcast``) —
+  candidates carry only ids; geometry crosses the wire once per
+  executor inside the broadcast. This is the reference's
+  replicate-layer-to-every-thread strategy (tests/main.cpp:299-305)
+  reborn.
+
+Point-in-polygon against a collected layer has no Python refine at
+all: see functions/interior_cells.py.
 """
 
 from __future__ import annotations
@@ -101,26 +104,25 @@ def _geom_info(wkb_or_tuple) -> _GeomInfo:
 
 
 def _contains_xy_core(
-    codes: np.ndarray, uniques, xs: np.ndarray, ys: np.ndarray
+    codes: np.ndarray, infos, xs: np.ndarray, ys: np.ndarray
 ) -> np.ndarray:
-    """Shared body for the contains UDFs: ``codes`` indexes rows into
-    ``uniques`` (a sequence of WKB byte strings). Unique polygons are
-    decoded once (cached across batches), single-ring polygons are
+    """Closed point-in-polygon of row k's point in ``infos[codes[k]]``
+    (``_GeomInfo`` objects, parts OR'd). Single-ring polygons are
     bucketed by vertex count into (m, nv, 2) tensors, and the ray-cast
     runs as pure NumPy over all (point, polygon) pairs at once. Only
-    polygons with holes / multiparts fall back to the per-unique path.
+    polygons with holes / multiparts take ``geom.polygon_contains_xy``,
+    once per polygon over its rows.
     """
     out = np.zeros(len(xs), dtype=bool)
-    infos = [_geom_info(u) for u in uniques]
 
-    # partition uniques: simple (one part, one ring) vs complex
+    # partition infos: simple (one part, one ring) vs complex
     buckets: dict[int, list[int]] = {}
-    complex_uniques: list[int] = []
+    is_complex = np.zeros(len(infos), dtype=bool)
     for u, info in enumerate(infos):
         if info.ring is not None:
             buckets.setdefault(len(info.ring), []).append(u)
         else:
-            complex_uniques.append(u)
+            is_complex[u] = True
 
     # vectorized path: per vertex-count bucket, gather paired tensors
     bucket_of = np.full(len(infos), -1, dtype=np.int64)
@@ -141,22 +143,24 @@ def _contains_xy_core(
             tensor[ring_idx], xs[mask], ys[mask]
         )
 
-    for u in complex_uniques:
-        mask = codes == u
-        res = np.zeros(int(mask.sum()), dtype=bool)
-        for gtype, rings in infos[u].parts:
+    rows = np.nonzero(is_complex[codes])[0]
+    rows = rows[np.argsort(codes[rows], kind="stable")]
+    cuts = np.nonzero(np.diff(codes[rows]))[0] + 1
+    for grp in np.split(rows, cuts) if len(rows) else ():
+        res = np.zeros(len(grp), dtype=bool)
+        for gtype, rings in infos[codes[grp[0]]].parts:
             if gtype == W.POLYGON:
-                res |= G.polygon_contains_xy(rings, xs[mask], ys[mask])
-        out[mask] = res
+                res |= G.polygon_contains_xy(rings, xs[grp], ys[grp])
+        out[grp] = res
     return out
 
 
 @F.pandas_udf(T.BooleanType())
 def st_contains_xy(poly_wkb: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
     """Closed point-in-polygon with the geometry shipped per row
-    (WKB column through Arrow). Use ``make_contains_xy_broadcast``
-    when the polygon layer fits on the driver — it removes the WKB
-    bytes from the Arrow traffic entirely."""
+    (WKB column through Arrow) — the refine of a PIP join whose polygon
+    layer was not collected; a collected layer refines in Catalyst
+    instead (functions/interior_cells.py)."""
     xs = x.to_numpy(dtype=np.float64)
     ys = y.to_numpy(dtype=np.float64)
     codes, uniques = pd.factorize(poly_wkb)
@@ -165,36 +169,9 @@ def st_contains_xy(poly_wkb: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series
     out = np.zeros(len(codes), dtype=bool)
     ok = codes >= 0
     if ok.any():
-        out[ok] = _contains_xy_core(codes[ok], uniques, xs[ok], ys[ok])
+        infos = [_geom_info(u) for u in uniques]
+        out[ok] = _contains_xy_core(codes[ok], infos, xs[ok], ys[ok])
     return pd.Series(out)
-
-
-def make_contains_xy_broadcast(spark, poly_ids, poly_wkbs):
-    """Build a contains(poly_id, x, y) pandas UDF over a BROADCAST
-    polygon dictionary — the reference's replicate-layer-1-to-every-
-    thread strategy (tests/main.cpp:299-305) reborn: candidates carry
-    only (id, x, y) through Arrow; geometry bytes cross the wire once
-    per executor inside the broadcast, not once per candidate pair.
-
-    ``poly_ids`` may repeat (multipart parts exploded at ingest):
-    parts are grouped into a tuple per id."""
-    table = _id_wkb_table(poly_ids, poly_wkbs)
-    bc = spark.sparkContext.broadcast(table)
-
-    @F.pandas_udf(T.BooleanType())
-    def contains_bc(poly_id: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        table_ = bc.value
-        xs = x.to_numpy(dtype=np.float64)
-        ys = y.to_numpy(dtype=np.float64)
-        codes, uniq_ids = pd.factorize(poly_id)
-        uniques = [table_[pid] for pid in uniq_ids]
-        out = np.zeros(len(codes), dtype=bool)  # null id contains nothing
-        ok = codes >= 0
-        if ok.any():
-            out[ok] = _contains_xy_core(codes[ok], uniques, xs[ok], ys[ok])
-        return pd.Series(out)
-
-    return contains_bc
 
 
 def _id_wkb_table(ids, wkbs) -> dict:
@@ -546,8 +523,7 @@ def make_pair_refine_broadcast(
 ):
     """Build a refine(l_id, r_id) pandas UDF over BROADCAST geometry
     dictionaries for BOTH layers: candidate pairs carry only two ids
-    through Arrow — no WKB bytes per pair. This is the polygon×polygon
-    analog of ``make_contains_xy_broadcast`` and the default transport
+    through Arrow — no WKB bytes per pair. This is the default transport
     whenever both layers fit on the driver (plans/planner.py); at
     scale beyond that the cogroup strategy ships each geometry once
     per covering cell instead (operators/cogroup_join.py)."""

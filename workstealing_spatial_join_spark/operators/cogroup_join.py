@@ -298,6 +298,7 @@ def point_in_polygon_join_cogrouped(
         # (vertex-count-bucketed ray-cast; decode cached per executor)
         from workstealing_spatial_join_spark.functions.predicates import (
             _contains_xy_core,
+            _geom_info,
         )
 
         xs = lp["px"].to_numpy()
@@ -313,8 +314,8 @@ def point_in_polygon_join_cogrouped(
         li, rj = np.nonzero(inbox)
         if len(li) == 0:
             return None
-        uniques = [bytes(w) for w in rp["geom_wkb"]]
-        keep = _contains_xy_core(rj, uniques, xs[li], ys[li])
+        infos = [_geom_info(bytes(w)) for w in rp["geom_wkb"]]
+        keep = _contains_xy_core(rj, infos, xs[li], ys[li])
         if not keep.any():
             return None
         return pd.DataFrame(

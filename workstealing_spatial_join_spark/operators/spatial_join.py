@@ -14,9 +14,21 @@ broadcast vs shuffled-hash vs SMJ and split skewed partitions):
     scan → cell tessellation (floor/sequence/explode, codegen'd)
          → equi-join on cell_id  (+ salt when a cost table says so)
          → residual MBR predicate (Catalyst, pushed into the join)
-         → pandas-UDF exact refine (the only Python, Arrow-batched)
+         → exact refine
          → dedup (reference-point rule, Catalyst) / parity multiplicity
          → agg or pair materialization
+
+The exact refine of a point-in-polygon join against a collected layer
+is Catalyst too: the driver classified each polygon's covering cells
+once (functions/interior_cells.py), so the tessellation holds only
+interior and boundary cells, and the refine is
+
+         inner OR ring_contains(rings, px, py)
+
+— interior rows match on the MBR alone, boundary rows ray-cast the
+edges they carry, and the plan has no Python node. An uncollected
+layer (and every polygon join that is not on rectangles) refines with
+an Arrow pandas UDF, the plan's only Python node.
 
 Duplicate semantics: a pair whose geometries co-occupy k cells appears
 k times in the reference (no reference-point dedup anywhere in that
@@ -35,10 +47,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import grid as GRID
+from workstealing_spatial_join_spark.functions.interior_cells import (
+    RING_CONTAINS_SQL,
+    CellClasses,
+    classify_cells,
+)
 from workstealing_spatial_join_spark.functions.predicates import PREDICATES
 
-# the id-keyed dictionary transport collects layers up to this many
-# rows to the driver; larger layers stay distributed (WKB transport)
+# layers up to this many rows are collected to the driver (the
+# interior-cell and id-keyed dictionary transports); larger layers stay
+# distributed (WKB transport)
 DICT_MAX_ROWS = 500_000
 
 # collected layers up to this many rows are REPLAYED as a local frame
@@ -46,8 +64,9 @@ DICT_MAX_ROWS = 500_000
 # dictionary collect already paid for these bytes once, and the replay
 # removes a scan + any ingest Python stage from every downstream job.
 # Larger collected layers (up to the dict cap) keep the distributed
-# scan — parallelizing hundreds of MB from the driver is slower than
-# re-reading parquet.
+# scan for their WKB — parallelizing hundreds of MB from the driver is
+# slower than re-reading parquet; their point-in-polygon cell classes
+# are replayed all the same (they exist only on the driver).
 LOCAL_BUILD_MAX_ROWS = 100_000
 
 
@@ -75,39 +94,12 @@ def tessellate_bbox(
 
 
 def _collect_geom_dict(layer: DataFrame, id_col: str, max_rows: int):
-    """Collect (id, wkb, minx, miny, maxx, maxy) rows for the
-    broadcast dictionary in ONE action; None when the layer exceeds
-    ``max_rows`` (the caller falls back to the WKB transport)."""
+    """Collect (id, wkb, minx, miny, maxx, maxy) rows in ONE action;
+    None when the layer exceeds ``max_rows`` (the caller falls back to
+    the WKB transport)."""
     sel = layer.select(id_col, "geom_wkb", "minx", "miny", "maxx", "maxy")
     rows = sel.limit(max_rows + 1).collect()
     return None if len(rows) > max_rows else rows
-
-
-def _local_geom_frame(layer: DataFrame, id_col: str, rows) -> DataFrame:
-    """Replay already-collected (id, wkb, bounds) rows as a LOCAL
-    DataFrame with the source's exact schema: downstream tessellation
-    then costs zero scans and zero ingest Python — the collect that
-    built the broadcast dictionary already moved these bytes to the
-    driver once (guide §2.4: don't recompute what a previous action
-    materialized). Only used for layers ≤ LOCAL_BUILD_MAX_ROWS."""
-    import pandas as pd
-
-    schema = layer.select(
-        id_col, "geom_wkb", "minx", "miny", "maxx", "maxy"
-    ).schema
-    pdf = pd.DataFrame(
-        {
-            schema.names[0]: [r[0] for r in rows],
-            "geom_wkb": [
-                bytes(r[1]) if r[1] is not None else None for r in rows
-            ],
-            "minx": [r[2] for r in rows],
-            "miny": [r[3] for r in rows],
-            "maxx": [r[4] for r in rows],
-            "maxy": [r[5] for r in rows],
-        }
-    )
-    return layer.sparkSession.createDataFrame(pdf, schema=schema)
 
 
 def _cell_index(v, offset: float, cell_deg: float, n: int):
@@ -241,7 +233,10 @@ class LayerAnalysis:
     holds the collected (id, wkb, minx, miny, maxx, maxy) dictionary
     rows — None past DICT_MAX_ROWS, or when the join needs no refine —
     and ``src`` the frame to tessellate: the local replay of the rows
-    when they are few enough, else the source layer."""
+    when they are few enough, else the source layer. ``cells`` holds
+    the interior/boundary classes of every covering cell
+    (functions/interior_cells.py) when a point-in-polygon join asked
+    for them, and ``cells_src`` the local frame that carries them."""
 
     src: DataFrame | None = None
     id_col: str = "polygon_id"
@@ -251,6 +246,8 @@ class LayerAnalysis:
     all_rects: bool = False  # every geometry equals its MBR
     exploded_rows: int | None = None  # closed-form Σ covering cells
     exploded_wkb_bytes: int | None = None  # Σ len(wkb) × covering cells
+    cells: CellClasses | None = None
+    cells_src: DataFrame | None = None
 
     @cached_property
     def cell_counts(self):
@@ -258,44 +255,80 @@ class LayerAnalysis:
         collected (the salting cost table then aggregates instead)."""
         return None if self.rows is None else _cell_row_counts(self.rows, self.cell_deg)
 
-    @cached_property
-    def contains_udf(self):
-        """contains(poly_id, x, y) over the broadcast dictionary; built
-        once per analysis, so a prepared layer ships it once."""
-        from workstealing_spatial_join_spark.functions.predicates import (
-            make_contains_xy_broadcast,
-        )
-
-        return make_contains_xy_broadcast(
-            self.src.sparkSession,
-            [r[0] for r in self.rows],
-            [r[1] for r in self.rows],
-        )
-
-    def tessellate(self, with_wkb: bool) -> DataFrame:
-        """Cell tessellation: (poly_id, minx..maxy[, geom_wkb], cell_id)."""
+    def tessellate(self, transport: str) -> DataFrame:
+        """Cell tessellation for a refine transport: (poly_id,
+        minx..maxy, cell_id), plus geom_wkb for "wkb", and for "rings"
+        only the non-exterior cells with their ``inner`` flag and the
+        ``rings`` of boundary rows (NULL on interior rows)."""
         cols = [F.col(self.id_col).alias("poly_id"), "minx", "miny", "maxx", "maxy"]
-        if with_wkb:
+        if transport == "rings":
+            return self.cells_src.select(
+                *cols, F.inline(F.arrays_zip("cells", "inner", "rings"))
+            ).withColumnRenamed("cells", "cell_id")
+        if transport == "wkb":
             cols.append("geom_wkb")
         return tessellate_bbox(self.src.select(*cols), self.cell_deg)
 
 
+def _local_geom_frame(
+    layer: DataFrame, id_col: str, rows, with_wkb: bool, cells: CellClasses | None
+) -> DataFrame:
+    """Replay already-collected rows as a LOCAL frame built straight
+    from Arrow arrays: (id, [geom_wkb,] minx..maxy[, cells, inner,
+    rings]), one row per geometry, the id keeping its source type.
+    Downstream tessellation then costs zero scans and zero ingest
+    Python — the collect that built the analysis already moved these
+    bytes to the driver once (guide §2.4: don't recompute what a
+    previous action materialized). The cell classes ride as per-row
+    arrays and are exploded in Catalyst."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    bounds = np.array([r[2:6] for r in rows], dtype=np.float64).reshape(-1, 4)
+    nulls = np.array([[v is None for v in r[2:6]] for r in rows], dtype=bool).reshape(-1, 4)
+    cols = {id_col: pa.array(
+        [r[0] for r in rows], type=to_arrow_type(layer.schema[id_col].dataType)
+    )}
+    if with_wkb:
+        cols["geom_wkb"] = pa.array(
+            [None if r[1] is None else bytes(r[1]) for r in rows], type=pa.binary()
+        )
+    for j, c in enumerate(("minx", "miny", "maxx", "maxy")):
+        cols[c] = pa.array(bounds[:, j], mask=nulls[:, j])
+    if cells is not None:
+        cols.update(cells=cells.cells, inner=cells.inner, rings=cells.rings)
+    return layer.sparkSession.createDataFrame(pa.table(cols))
+
+
 def _analyze_layer(
-    layer: DataFrame, id_col: str, cell_deg: float, collect: bool = True
+    layer: DataFrame, id_col: str, cell_deg: float, collect: bool = True,
+    classify: bool = False,
 ) -> LayerAnalysis:
     """Collect a layer once (bounded by DICT_MAX_ROWS) and derive what
     both joins decide from. ``collect=False`` (an MBR-only join, whose
-    layer may lack ``geom_wkb``) leaves it uncollected."""
+    layer may lack ``geom_wkb``) leaves it uncollected; ``classify``
+    (point-in-polygon) adds the cell classes of a collected non-rect
+    layer and their local frame."""
     rows = _collect_geom_dict(layer, id_col, DICT_MAX_ROWS) if collect else None
     if rows is None:
         return LayerAnalysis(layer, id_col, cell_deg)
-    _, _, w, h = _cell_spans(rows, cell_deg)
+    cx0, cy0, w, h = _cell_spans(rows, cell_deg)
     ncell = w * h
-    if len(rows) <= LOCAL_BUILD_MAX_ROWS:
-        # replay a collected layer locally: its tessellation then costs
-        # no source scan (and no ingest Python stage) in any downstream
-        # job — the dict collect already paid these bytes
-        layer = _local_geom_frame(layer, id_col, rows)
+    all_rects = _all_rects_matching_bounds(rows)
+    cells = cells_src = None
+    if classify and not all_rects:
+        cells = classify_cells([r[1] for r in rows], cx0, cy0, w, h, cell_deg)
+    # replay a collected layer locally: its tessellation then costs no
+    # source scan (and no ingest Python stage) in any downstream job —
+    # the dict collect already paid these bytes. Past
+    # LOCAL_BUILD_MAX_ROWS only the cell classes are replayed (without
+    # the WKB column), and the WKB tessellation re-reads the source.
+    small = len(rows) <= LOCAL_BUILD_MAX_ROWS
+    if small or cells is not None:
+        replay = _local_geom_frame(layer, id_col, rows, small, cells)
+        cells_src = None if cells is None else replay
+        layer = replay if small else layer
     return LayerAnalysis(
         layer,
         id_col,
@@ -306,11 +339,13 @@ def _analyze_layer(
         # so each PART row refines against its own part (reference
         # semantics: parts are separate geometries, src/reader.cpp:44)
         unique_ids=len({r[0] for r in rows}) == len(rows),
-        all_rects=_all_rects_matching_bounds(rows),
+        all_rects=all_rects,
         exploded_rows=int(ncell.sum()),
         exploded_wkb_bytes=sum(
             len(r[1]) * int(c) for r, c in zip(rows, ncell) if r[1] is not None
         ),
+        cells=cells,
+        cells_src=cells_src,
     )
 
 
@@ -320,9 +355,9 @@ class PreparedPolygonLayer:
     STRtree (src/spatial_join.cpp:14-21). Preparation is ONE driver
     job, the dictionary collect; the layer then holds its
     ``LayerAnalysis`` (collected rows, rect verification, closed-form
-    counts, contains dictionary) and caches each cell tessellation it
-    is joined with. A second join issues no new collect and no new
-    decode.
+    counts, the point-in-polygon cell classes) and caches each cell
+    tessellation it is joined with. A second join issues no new collect
+    and no new decode.
 
     Use for the steady-state shape of a 10^12-image pipeline: one
     (slowly-changing) polygon layer probed by an endless stream of
@@ -334,15 +369,15 @@ class PreparedPolygonLayer:
         poly_id: str = "polygon_id",
         cell_deg: float = GRID.DEFAULT_CELL_DEG,
     ):
-        self.analysis = _analyze_layer(polygons, poly_id, cell_deg)
-        self._exploded: dict[bool, DataFrame] = {}
+        self.analysis = _analyze_layer(polygons, poly_id, cell_deg, classify=True)
+        self._exploded: dict[str, DataFrame] = {}
 
-    def exploded(self, with_wkb: bool) -> DataFrame:
+    def exploded(self, transport: str) -> DataFrame:
         """The analysis' tessellation, cached (Spark .cache()) per
-        WKB variant; the first join materializes it."""
-        if with_wkb not in self._exploded:
-            self._exploded[with_wkb] = self.analysis.tessellate(with_wkb).cache()
-        return self._exploded[with_wkb]
+        transport; the first join materializes it."""
+        if transport not in self._exploded:
+            self._exploded[transport] = self.analysis.tessellate(transport).cache()
+        return self._exploded[transport]
 
     def release(self) -> int:
         """Unpersist every cached tessellation this layer holds and
@@ -361,8 +396,10 @@ class PreparedPolygonLayer:
         return n
 
 
-def _join_side(side, id_col: str, cell_deg: float, collect: bool = True):
-    """(analysis, tessellate(with_wkb)) for one side of a join: a
+def _join_side(
+    side, id_col: str, cell_deg: float, collect: bool = True, classify: bool = False
+):
+    """(analysis, tessellate(transport)) for one side of a join: a
     prepared layer answers from its cache, a DataFrame is analysed now
     and tessellated uncached."""
     if isinstance(side, PreparedPolygonLayer):
@@ -372,7 +409,7 @@ def _join_side(side, id_col: str, cell_deg: float, collect: bool = True):
                 f"{side.analysis.cell_deg} != join cell_deg {cell_deg}"
             )
         return side.analysis, side.exploded
-    analysis = _analyze_layer(side, id_col, cell_deg, collect)
+    analysis = _analyze_layer(side, id_col, cell_deg, collect, classify)
     return analysis, analysis.tessellate
 
 
@@ -410,10 +447,10 @@ def _hot_cells(
 
 
 def _spread_probe(pts: DataFrame, mode: str) -> DataFrame:
-    """Spread the probe side over 2× the default parallelism before a
-    Python refine: under a broadcast join the refine runs on the
-    probe's scan splits, so a compact input would serialize it. Fine
-    tasks let the scheduler absorb stragglers — the reference's
+    """Spread the probe side over 2× the default parallelism before the
+    WKB transport's Python refine: under a broadcast join the refine
+    runs on the probe's scan splits, so a compact input would serialize
+    it. Fine tasks let the scheduler absorb stragglers — the reference's
     TASKS_PER_JOB=20 chunking (include/global_var.h:26) at Spark task
     level.
 
@@ -463,16 +500,20 @@ def point_in_polygon_join(
 
     The broadcast side and the refine transport come from
     ``plans.planner.plan_join``: the MBR predicate alone when every
-    polygon is its MBR, the broadcast polygon dictionary when ids are
-    unique (candidates then carry only (poly_id, x, y) through Arrow),
-    else the per-candidate WKB column.
+    polygon is its MBR; for any other collected layer the interior-cell
+    classes (functions/interior_cells.py) — exterior cells dropped,
+    interior cells matched on the MBR alone, boundary cells ray-cast in
+    Catalyst against the rings they carry, so the plan has no Python
+    node; else (an uncollected layer) the per-candidate WKB column
+    through the Arrow refine.
 
     ``point_payload`` names extra point columns carried THROUGH the
     join (``mode='pairs'`` only) so a downstream per-zone aggregate
     (operators.zonal) needs no second join back to the point table —
     at scale that second equi-join would be a full extra shuffle of
     the pair table. Payload names must not collide with the polygon
-    layer's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` columns.
+    tessellation's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` /
+    ``inner`` / ``rings`` columns.
     """
     from workstealing_spatial_join_spark.functions.exprs import cexpr
     from workstealing_spatial_join_spark.plans.planner import plan_join
@@ -490,20 +531,22 @@ def point_in_polygon_join(
         lat="py",
         cell_deg=cell_deg,
     )
-    layer, tessellate = _join_side(polygons, poly_id, cell_deg, collect=refine)
+    layer, tessellate = _join_side(
+        polygons, poly_id, cell_deg, collect=refine, classify=True
+    )
     # the cost table reads the UN-repartitioned probe: it needs only
     # per-cell counts, and the refine repartition would pay that
     # exchange a second time (the main query re-executes it anyway)
     hot, extra = (
-        _hot_cells(pts, layer, tessellate(False), target_pairs_per_task)
+        _hot_cells(pts, layer, tessellate("catalyst-rect"), target_pairs_per_task)
         if salt else (None, None)
     )
     plan = plan_join(
         None, layer, "contains" if refine else None, salt_extra_rows=extra
     )
-    polys = tessellate(plan.transport == "wkb")
-    if plan.transport != "catalyst-rect":
-        # only a Python refine needs the spread; a pure-Catalyst plan
+    polys = tessellate(plan.transport)
+    if plan.transport == "wkb":
+        # only the Python refine needs the spread; a pure-Catalyst plan
         # runs fine on the scan splits
         pts = _spread_probe(pts, mode)
     join_keys = ["cell_id"]
@@ -529,10 +572,8 @@ def point_in_polygon_join(
             "px >= minx AND px <= maxx AND py >= miny AND py <= maxy"
         )
     )
-    if plan.transport == "dict":
-        cand = cand.where(
-            layer.contains_udf(F.col("poly_id"), F.col("px"), F.col("py"))
-        )
+    if plan.transport == "rings":
+        cand = cand.where(cexpr(f"inner OR {RING_CONTAINS_SQL}"))
     elif plan.transport == "wkb":
         cand = cand.where(
             PREDICATES["contains_xy"](F.col("geom_wkb"), F.col("px"), F.col("py"))
@@ -621,7 +662,10 @@ def polygon_join(
     # salting: the (larger) left side is the salted probe, the right
     # side is replicated across salts in hot cells only
     hot, extra = (
-        _hot_cells(l_tess(False), ra, r_tess(False), target_pairs_per_task)
+        _hot_cells(
+            l_tess("catalyst-rect"), ra, r_tess("catalyst-rect"),
+            target_pairs_per_task,
+        )
         if salt else (None, None)
     )
     plan = plan_join(la, ra, predicate, salt_extra_rows=extra)
@@ -642,14 +686,13 @@ def polygon_join(
             predicate,
         )
 
-    with_wkb = plan.transport == "wkb"
     lt = (
-        l_tess(with_wkb)
+        l_tess(plan.transport)
         .withColumnsRenamed({"poly_id": "lid", "geom_wkb": "l_wkb"})
         .alias("l")
     )
     rt = (
-        r_tess(with_wkb)
+        r_tess(plan.transport)
         .withColumnsRenamed({"poly_id": "rid", "geom_wkb": "r_wkb"})
         .alias("r")
     )

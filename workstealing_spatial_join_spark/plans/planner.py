@@ -7,9 +7,9 @@ the audit that the produced plan has the shape the engine promises
 one when both do — plus the choice of refine transport. It reads only
 the exact figures each join already holds for its geometry sides
 (``operators.spatial_join.LayerAnalysis``: closed-form exploded rows,
-collected WKB bytes, id uniqueness, rectangle verification), so it runs
-no job and trusts no estimate. Where it forces nothing (an uncollected
-side), Catalyst/AQE still decide.
+collected WKB bytes, id uniqueness, rectangle verification, interior
+cell classes), so it runs no job and trusts no estimate. Where it
+forces nothing (an uncollected side), Catalyst/AQE still decide.
 """
 
 from __future__ import annotations
@@ -29,21 +29,27 @@ BROADCAST_BUDGET_BYTES = 2_000_000 * BOUNDS_ROW_BYTES
 @dataclass(frozen=True)
 class JoinPlan:
     broadcast_side: str | None  # "left" | "right" | None (AQE decides)
-    transport: str  # "catalyst-rect" | "dict" | "wkb"
+    transport: str  # "catalyst-rect" | "rings" | "dict" | "wkb"
 
 
-def _build_bytes(side, carries_wkb: bool, extra_rows: int = 0) -> int | None:
+def _build_bytes(side, transport: str, extra_rows: int = 0) -> int | None:
     """Exact bytes a side puts into a broadcast: its exploded rows (plus
-    the rows salting replicates) at the bounds-row width, plus the WKB
-    column when it is carried — each collected geometry once per
-    covering cell, salted replicas at the layer's mean. None when the
+    the rows salting replicates) at the bounds-row width, plus what the
+    transport carries — the WKB column once per covering cell, or the
+    rings of boundary cell rows (the "rings" rows are the non-exterior
+    cells only); salted replicas at the layer's mean. None when the
     side was not collected."""
     if side is None or side.exploded_rows is None:
         return None
-    rows = side.exploded_rows + extra_rows
+    base, payload = side.exploded_rows, 0
+    if transport == "rings":
+        base, payload = side.cells.rows, side.cells.ring_bytes
+    elif transport == "wkb":
+        payload = side.exploded_wkb_bytes
+    rows = base + extra_rows
     size = rows * BOUNDS_ROW_BYTES
-    if carries_wkb and side.exploded_rows:
-        size += side.exploded_wkb_bytes * rows // side.exploded_rows
+    if payload and base:
+        size += payload * rows // base
     return size
 
 
@@ -53,8 +59,8 @@ def plan_join(
     """Decide the broadcast side and the refine transport of a join.
 
     ``left``/``right`` are ``LayerAnalysis`` objects (read: exploded_rows,
-    exploded_wkb_bytes, unique_ids, all_rects; ``exploded_rows`` None =
-    not collected) or None for a side that is not a geometry layer —
+    exploded_wkb_bytes, unique_ids, all_rects, cells; ``exploded_rows``
+    None = not collected) or None for a side that is not a geometry layer —
     the points of a PIP join. ``predicate`` is ``"contains"`` for PIP,
     a polygon-join predicate, or None for an MBR-only join.
     ``salt_extra_rows``: rows salting adds to the right (replicated)
@@ -63,8 +69,11 @@ def plan_join(
 
     Transport: ``catalyst-rect`` when the MBR predicate is the whole
     refine (every geometry equals its MBR; union also needs the
-    id-keyed dict for its degenerate residual), ``dict`` when every
-    side is collected with unique ids, else ``wkb``.
+    id-keyed dict for its degenerate residual); for ``contains``,
+    ``rings`` when the layer's cells are classified (interior cells
+    match on the MBR, boundary cells ray-cast in Catalyst); for a
+    polygon join, ``dict`` when every side is collected with unique
+    ids; else ``wkb``.
     """
     sides = [s for s in (left, right) if s is not None]
     collected = all(s.exploded_rows is not None for s in sides)
@@ -73,15 +82,19 @@ def plan_join(
     union = predicate == "union_numpoints"
     if predicate is None or (rects and (unique or not union)):
         transport = "catalyst-rect"
+    elif predicate == "contains":
+        classified = all(s.cells is not None for s in sides)
+        transport = "rings" if collected and classified else "wkb"
     elif unique:
         transport = "dict"
     else:
         transport = "wkb"
 
-    wkb = transport == "wkb"
     sizes = {
-        "left": None if salt_extra_rows is not None else _build_bytes(left, wkb),
-        "right": _build_bytes(right, wkb, salt_extra_rows or 0),
+        "left": (
+            None if salt_extra_rows is not None else _build_bytes(left, transport)
+        ),
+        "right": _build_bytes(right, transport, salt_extra_rows or 0),
     }
     fits = {
         k: v for k, v in sizes.items()
