@@ -14,11 +14,16 @@ every worker inherit the already-initialized modules by fork
 copy-on-write: worker startup becomes a plain fork.
 
 Wiring: ``spark.python.daemon.module`` points at this module
-(session.get_spark sets it). Importability is the same requirement
-the engine's pandas UDFs already impose on workers (a worker that
-cannot import this package cannot run any engine UDF either), so the
-preload adds no new failure mode; individual preload imports are
-best-effort.
+(session.get_spark sets it). Session start forks no Python process:
+Spark launches this daemon, and the daemon its workers, at the first
+Python stage of the session. The preload therefore serves that first
+stage and every later one, and a session whose plans have no Python
+node never starts it.
+
+Importability is the same requirement the engine's pandas UDFs
+already impose on workers (a worker that cannot import this package
+cannot run any engine UDF either), so the preload adds no new failure
+mode; individual preload imports are best-effort.
 """
 
 # Failures must never kill the daemon: each import is independent and

@@ -5,6 +5,11 @@ that also matter on a real multi-executor cluster (AQE, skew join,
 Arrow batching). The reference engine's flow-control / memory
 guardrail constants (include/global_var.h:45-54) map onto
 ``maxRecordsPerBatch`` and executor memory settings here.
+
+Session start warms the JVM side only (``_warm_jvm_stack``): one tiny
+scan-shuffle-aggregate job pays classloading and codegen up front. The
+Python worker pool is not started with the session; Spark forks it, from
+the ``daemon_preload`` daemon, at the first plan that has a Python stage.
 """
 
 from __future__ import annotations
@@ -12,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def default_cores() -> int:
@@ -55,53 +61,35 @@ def _pythonpath_with_package() -> str:
     return root + (os.pathsep + existing if existing else "")
 
 
-def _warm_worker_pool(spark: SparkSession, cores: int) -> None:
-    """Fork the Python-worker pool NOW, once per SparkContext (guide
-    §4.5, moved to session init): the first pandas-UDF stage of a
-    fresh session otherwise pays daemon start + N concurrent worker
-    forks + Arrow serializer init — measured 2.6 s idle / ~10 s under
-    load at 32 cores — charged to whichever query runs first. One
-    trivial Arrow-UDF job with one task per core forks every worker
-    up front; ``spark.python.worker.reuse`` (default on) keeps the
-    pool alive for the session's real queries. Long-lived production
-    sessions amortize this anyway; eager init just moves the cost to
-    startup where it belongs. Disable with SPARK_GRAFT_WARM_WORKERS=0.
+def _warm_jvm_stack(spark: SparkSession, cores: int) -> None:
+    """Pay the JVM's cold cost NOW, once per SparkContext: one tiny job
+    shaped like a real query (a range scan, a shuffle, a filter and an
+    aggregate) so the first USER query does not pay classloading,
+    janino/codegen and shuffle-system init on top of its own work
+    (measured: first job of a fresh 32-core session ~5.5 s for a 20k-row
+    count that takes 0.6 s once warm; without this warm-up the first
+    scan of a fresh local[4] benchmark session ran 4-5 s longer).
+
+    It has no Python stage on purpose: the worker pool (~500 MB RSS at
+    local[4]) forks at the first plan that has one, and plans without
+    one — the collected-layer PIP join, the planar kNN join — never
+    pay for it.
     """
     sc = spark.sparkContext
-    if getattr(sc, "_wssj_workers_warm", False):
+    if getattr(sc, "_wssj_jvm_warm", False):
         return
+    sc.setJobDescription("session init: warm JVM exec stack")
     try:
-        import pandas as pd  # noqa: F401
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        # no type annotations: string hints would resolve against
-        # module globals (pandas is imported locally) and NameError
-        # out of the warmup; the bare decorator defaults to SCALAR
-        @F.pandas_udf(T.LongType())
-        def _ident(x):
-            return x
-
-        sc.setJobDescription("session init: warm worker pool + exec stack")
-        # one tiny job shaped like a real query — a shuffle, an Arrow
-        # UDF stage, a filter and an aggregate — so the first USER
-        # query does not pay JVM classloading + janino/codegen +
-        # shuffle-system + Arrow-writer init on top of its own work
-        # (measured: first job of a fresh 32-core session ~5.5 s for
-        # a 20k-row count that takes 0.6 s once warm; the prewarm
-        # itself costs a fraction of that at 32 rows/partitions)
         (
             spark.range(32 * cores, numPartitions=cores)
             .repartition(cores)
-            .select(_ident(F.col("id")).alias("v"))
-            .where(F.col("v") >= 0)
+            .where(F.col("id") >= 0)
             .agg(F.count(F.lit(1)))
             .collect()
         )
+    finally:
         sc.setJobDescription(None)
-        sc._wssj_workers_warm = True
-    except Exception:
-        pass
+    sc._wssj_jvm_warm = True
 
 
 def get_spark(
@@ -116,6 +104,12 @@ def get_spark(
     work-stealing (SURVEY.md §2.6 LB2/LB4/LB5): many small tasks + the
     Spark scheduler give steal-equivalent granularity, and AQE splits
     oversized post-shuffle partitions at runtime.
+
+    Before returning, the session runs one tiny JVM-only job to warm
+    classloading and codegen. No Python process is started: the worker
+    pool (daemon ``daemon_preload`` plus one worker per concurrent task)
+    forks on first use, at the first Python stage, and is reused from
+    then on.
     """
     cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
@@ -164,6 +158,5 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if os.environ.get("SPARK_GRAFT_WARM_WORKERS", "1") != "0":
-        _warm_worker_pool(spark, cores)
+    _warm_jvm_stack(spark, cores)
     return spark
