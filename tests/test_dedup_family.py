@@ -2,11 +2,15 @@
 embedding cosine — each must find the planted pairs and nothing
 obviously absurd."""
 
+import gzip
+import json
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.operators.dedup import (
+    _ensure_parallel,
     embedding_neardup,
     exact_dedup,
     minhash_dedup,
@@ -443,3 +447,26 @@ def test_byte_level_oracle_parity_non_ascii(spark):
     assert len(eng_pairs) > 0  # planted dups found
     assert eng_pairs == ora_pairs
     assert eng_fp == ora_fp
+
+
+def test_ensure_parallel_repartitions_gzipped_json(spark, tmp_path):
+    """A gzipped JSON file is one scan split whatever its size, so a file
+    size above target × maxPartitionBytes must not skip the
+    repartition."""
+    target = spark.sparkContext.defaultParallelism
+    path = tmp_path / "docs.json.gz"
+    rng = np.random.default_rng(29)
+    with gzip.open(path, "wt") as fh:
+        for i in range(6000):
+            fh.write(json.dumps({"id": i, "text": rng.bytes(24).hex()}) + "\n")
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(max(1, path.stat().st_size // (2 * target))))
+        docs = spark.read.json(str(path))
+        assert docs.rdd.getNumPartitions() == 1
+        out = _ensure_parallel(docs)
+        assert out.rdd.getNumPartitions() == target
+        assert out.count() == 6000
+    finally:
+        spark.conf.set(key, old)

@@ -274,3 +274,28 @@ def test_polygon_join_concave_random_layers(spark):
     }
     assert got_n == oracle("intersection_numpoints")
     assert len(got_n) > 30  # layers actually overlap
+
+
+def test_polygon_join_layer_collects_carry_the_job_group(spark):
+    """Both layers are collected on pool threads while the join is
+    built; they must report under the caller's job group."""
+    polys = FX.polygons_pdf(80)
+    la = polys.iloc[:40].rename(columns={"polygon_id": "a_id"})
+    lb = polys.iloc[40:].rename(columns={"polygon_id": "b_id"})
+    da = ingest_geometry(spark.createDataFrame(la), "wkt", keep_cols=["a_id"])
+    db = ingest_geometry(spark.createDataFrame(lb), "wkt", keep_cols=["b_id"])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("polygon-join-build", "polygon-join-build")
+    try:
+        polygon_join(da, db, "a_id", "b_id", predicate="intersects")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = tracker.getJobIdsForGroup("polygon-join-build")
+    # building the join runs only the two layer collects (and their
+    # AQE stages): all in the group, none outside it
+    assert len(jobs) >= 2
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped

@@ -114,6 +114,32 @@ def _verify_partitions(df: DataFrame) -> int:
     )
 
 
+def _size_splittable(df: DataFrame, files: list[str]) -> bool:
+    """True when every leaf of ``df``'s plan is a parquet, orc or text
+    file scan and, for text, no file in ``files`` is compressed — the
+    scans whose files Spark splits at maxPartitionBytes. Anything else
+    (a gzipped JSON file is ONE split whatever its size; in-memory
+    relations) is left to the exact partition probe."""
+    formats = set()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() != "LogicalRelation":
+            return False
+        relation = leaf.relation()
+        if relation.getClass().getSimpleName() != "HadoopFsRelation":
+            return False
+        formats.add(relation.fileFormat().shortName())
+    if not formats <= {"parquet", "orc", "text"}:
+        return False
+    if "text" in formats:
+        sc = df.sparkSession.sparkContext
+        hadoop = sc._jvm.org.apache.hadoop
+        codecs = hadoop.io.compress.CompressionCodecFactory(sc._jsc.hadoopConfiguration())
+        return all(codecs.getCodec(hadoop.fs.Path(f)) is None for f in files)
+    return True
+
+
 def _ensure_parallel(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the cluster parallelism when the
     input has fewer splits (small files serialize pandas-UDF stages on
@@ -125,12 +151,16 @@ def _ensure_parallel(df: DataFrame) -> DataFrame:
     below target (small/local corpora, createDataFrame frames, or one
     huge file Spark will split by maxPartitionBytes anyway) does the
     exact ``df.rdd.getNumPartitions()`` probe run (driver-side
-    physical planning, no job — VERDICT r4 residual)."""
+    physical planning, no job — VERDICT r4 residual). A file-size
+    estimate stands in for the probe only where Spark splits files by
+    size (``_size_splittable``)."""
     target = df.sparkSession.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
         if len(files) >= target:
             return df
+        if not _size_splittable(df, files):
+            raise ValueError("scan not split by size, fall back")
         # estimate scan splits from file sizes (split size =
         # maxPartitionBytes): enough splits → no repartition, without
         # paying the df.rdd physical-planning probe

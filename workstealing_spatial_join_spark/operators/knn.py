@@ -14,7 +14,7 @@ Plan per round (all Catalyst — there is NO Python in this operator):
 Density-adaptive cells (the planar join's answer to skew — the
 reference balances a hot partition by work stealing, this engine
 refines the grid where the points are). One aggregate over the
-candidate layer (``_split_table``) yields the layer's mean density,
+candidate layer (``_profile_rows``) yields the layer's mean density,
 which sizes the first ring, and the exact counts of its densest cells.
 A cell holding n points at mean density ρ gets a level
 L = floor(log4(n / ρ)), capped at ``SPLIT_MAX_LEVEL`` (``_split_level``
@@ -46,6 +46,28 @@ redistribution, but expressed as dataflow). The round at ``max_ring``
 is final for everyone and searches the coarse ring (lq = 0), exactly
 the unsplit operator's last round.
 
+Profile memo (the reference builds its filter index once and probes
+it with every batch). The profile rows above — the grand total plus the
+densest cells — depend on neither k nor the ring, so a candidate layer
+served whole from Spark's cache is profiled once: ``_candidate_profile``
+keeps the rows and the keyed candidate frame under (the SparkContext,
+which fixes the py4j gateway, the RDD id of the cached relation's
+column buffers, the three column names, cell_deg). Spark builds a new buffer RDD on
+every cache or re-cache, so unpersisting and re-caching a corpus (after
+its files change, say) gives a new key and a fresh profile. Any other
+frame is profiled on every call. ``_PROFILE_SLOTS`` bounds the memo
+(least recently used out). Both kNN joins read the same profile; the
+great-circle join takes only its grand-total row.
+
+Round bookkeeping by observation (``_settle_rounds``). Each round is
+ONE checkpoint job, and two ``Observation``s ride in it: the rows of
+the round's query input (on the query side, below the cover broadcast)
+and the settled rank-1 rows. Equal counts mean every query settled.
+Only when they differ (duplicated query ids, or queries with no
+candidate this round) does the loop run one distinct count of the
+remaining ids, and from there it continues by subtraction. A cached
+query frame is read as it is; any other is checkpointed once.
+
 Distances are planar-euclidean on lon/lat degrees (matches the DuckDB
 oracle exactly); no longitude wrap (documented limitation).
 """
@@ -53,8 +75,11 @@ oracle exactly); no longitude wrap (documented limitation).
 from __future__ import annotations
 
 import math
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import grid as GRID
@@ -71,6 +96,10 @@ SPLIT_MAX_LEVEL = 8
 # the split table keeps at most this many of the densest cells; the
 # rest stay coarse (slower for their queries, never inexact)
 SPLIT_MAX_CELLS = 256
+# profiled cached candidate layers kept (least recently used out)
+_PROFILE_SLOTS = 8
+_profiles: OrderedDict = OrderedDict()
+_profiles_lock = threading.Lock()
 
 
 def _ring_cells(df: DataFrame, r: int, cell_deg: float) -> DataFrame:
@@ -150,18 +179,6 @@ def _density_ring(stats, k: int, cell_deg: float,
     ))
 
 
-def _auto_ring_cells(c: DataFrame, k: int, cell_deg: float,
-                     max_ring: int) -> int:
-    """First-ring size in cells from candidate density (one cheap
-    aggregate; the great-circle kNN's sizing)."""
-    stats = c.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("cx").alias("x0"), F.max("cx").alias("x1"),
-        F.min("cy").alias("y0"), F.max("cy").alias("y1"),
-    ).collect()[0]
-    return _density_ring(stats, k, cell_deg, max_ring)[1]
-
-
 def _split_level(n: int, density: float, k: int, r0: int) -> int:
     """Split level of a cell holding ``n`` points; 0 = not split.
 
@@ -181,16 +198,74 @@ def _split_level(n: int, density: float, k: int, r0: int) -> int:
 
 
 def _split_table(
-    c: DataFrame, k: int, cell_deg: float, initial_ring, max_ring: int
+    rows: list, k: int, cell_deg: float, initial_ring, max_ring: int
 ) -> tuple[int, list[tuple[int, int]]]:
-    """(first ring, split table) from ONE aggregate over the candidate
-    layer: a rollup on cell_id gives the exact per-cell counts and, in
-    its grand-total row, the count and bounding box behind the mean
-    density. Ordering by (grand total first, count desc) under a limit
-    collects the total plus the ``SPLIT_MAX_CELLS`` densest cells —
-    bounded driver cost whatever the number of occupied cells — in
-    the same two jobs the plain density aggregate took."""
-    rows = (
+    """(first ring, split table) from a layer's profile rows: the
+    grand total sizes the first ring (``_density_ring``) and each of
+    the densest cells gets its ``_split_level``."""
+    if not rows:  # empty layer: no grand-total row either
+        return (1 if initial_ring == "auto" else initial_ring), []
+    density, ring = _density_ring(rows[0], k, cell_deg, max_ring)
+    r0 = ring if initial_ring == "auto" else initial_ring
+    split = []
+    for row in rows[1:]:
+        level = _split_level(row["n"], density, k, r0)
+        if level and row["cell_id"] is not None:
+            split.append((row["cell_id"], level))
+    return r0, split
+
+
+def _cache_buffers_id(df: DataFrame) -> int | None:
+    """RDD id of the column buffers of the cached relation that serves
+    the WHOLE of ``df``, None when ``df`` is not one cached relation.
+    Spark builds a new buffer RDD on every cache or re-cache, so the
+    id names one materialization of the data."""
+    plan = df._jdf.queryExecution().withCachedData()
+    if plan.nodeName() != "InMemoryRelation":
+        return None
+    return plan.cacheBuilder().cachedColumnBuffers().id()
+
+
+@dataclass
+class _Profile:
+    """A candidate layer ``c`` (neighbor_id, cx, cy, cell_id) and its
+    rollup ``rows``: the grand total (count and bounding box) first,
+    then the ``SPLIT_MAX_CELLS`` densest cells. ``keyed`` holds the
+    (cell_id, sub)-keyed frame of the last split table asked for."""
+
+    c: DataFrame
+    rows: list
+    keyed: tuple | None = None
+
+    def keyed_frame(self, split: list[tuple[int, int]], cell_deg: float) -> DataFrame:
+        if self.keyed is None or self.keyed[0] != split:
+            frame = (
+                self.c.withColumn("lvl", cexpr(_level_sql("cell_id", split)))
+                .withColumn("sub", cexpr(_candidate_sub_sql(cell_deg)))
+                .drop("lvl")
+            )
+            self.keyed = (split, frame)
+        return self.keyed[1]
+
+
+def _candidate_frame(candidates: DataFrame, cand_id: str, c_lon: str,
+                     c_lat: str, cell_deg: float) -> DataFrame:
+    """(neighbor_id, cx, cy, cell_id) of the candidate layer."""
+    return candidates.select(
+        F.col(cand_id).alias("neighbor_id"),
+        F.col(c_lon).alias("cx"),
+        F.col(c_lat).alias("cy"),
+    ).withColumn("cell_id", GRID.cell_id_named("cx", "cy", cell_deg))
+
+
+def _profile_rows(c: DataFrame) -> list:
+    """ONE aggregate over the candidate layer: a rollup on cell_id gives
+    the exact per-cell counts and, in its grand-total row, the count
+    and bounding box behind the mean density. Ordering by (grand total
+    first, count desc) under a limit collects the total plus the
+    ``SPLIT_MAX_CELLS`` densest cells — bounded driver cost whatever
+    the number of occupied cells."""
+    return (
         c.rollup("cell_id")
         .agg(
             F.grouping_id().alias("total"),
@@ -202,16 +277,32 @@ def _split_table(
         .limit(SPLIT_MAX_CELLS + 1)
         .collect()
     )
-    if not rows:  # empty layer: no grand-total row either
-        return (1 if initial_ring == "auto" else initial_ring), []
-    density, ring = _density_ring(rows[0], k, cell_deg, max_ring)
-    r0 = ring if initial_ring == "auto" else initial_ring
-    split = []
-    for row in rows[1:]:
-        level = _split_level(row["n"], density, k, r0)
-        if level and row["cell_id"] is not None:
-            split.append((row["cell_id"], level))
-    return r0, split
+
+
+def _candidate_profile(candidates: DataFrame, cand_id: str, c_lon: str,
+                       c_lat: str, cell_deg: float) -> _Profile:
+    """The candidate layer and its profile, memoized when
+    ``candidates`` is served whole from the cache (module doc). The key
+    carries the SparkContext (and so its py4j gateway) because RDD ids
+    restart with every context."""
+    key = None
+    buffers = _cache_buffers_id(candidates)
+    if buffers is not None:
+        key = (candidates.sparkSession.sparkContext, buffers,
+               cand_id, c_lon, c_lat, float(cell_deg))
+        with _profiles_lock:
+            hit = _profiles.get(key)
+            if hit is not None:
+                _profiles.move_to_end(key)
+                return hit
+    c = _candidate_frame(candidates, cand_id, c_lon, c_lat, cell_deg)
+    profile = _Profile(c, _profile_rows(c))
+    if key is not None:
+        with _profiles_lock:
+            _profiles[key] = profile
+            while len(_profiles) > _PROFILE_SLOTS:
+                _profiles.popitem(last=False)
+    return profile
 
 
 def _haversine_ring_cover(
@@ -303,7 +394,7 @@ def dwithin_haversine_join(
         F.col(right_id).alias("right_id"),
         F.col(r_lon).alias("cx"),
         F.col(r_lat).alias("cy"),
-    ).withColumn("cell_id", GRID.cell_id_col(F.col("cx"), F.col("cy"), cell_deg))
+    ).withColumn("cell_id", GRID.cell_id_named("cx", "cy", cell_deg))
 
     ringed = _haversine_ring_cover(q, radius_km, cell_deg)
     cand = ringed.join(c, on="cell_id")
@@ -345,15 +436,15 @@ def knn_haversine_join(
         F.col(q_lon).alias("qx"),
         F.col(q_lat).alias("qy"),
     )
-    c = candidates.select(
-        F.col(cand_id).alias("neighbor_id"),
-        F.col(c_lon).alias("cx"),
-        F.col(c_lat).alias("cy"),
-    ).withColumn("cell_id", GRID.cell_id_col(F.col("cx"), F.col("cy"), cell_deg))
-
     if initial_radius_km == "auto":
-        r0 = _auto_ring_cells(c, k, cell_deg, 1 << 30)
+        # first ring from the profile's grand-total row (count and box)
+        profile = _candidate_profile(candidates, cand_id, c_lon, c_lat, cell_deg)
+        c = profile.c
+        total = profile.rows[0] if profile.rows else {"n": 0}
+        r0 = _density_ring(total, k, cell_deg, 1 << 30)[1]
         initial_radius_km = r0 * cell_deg * _KM_PER_DEG
+    else:
+        c = _candidate_frame(candidates, cand_id, c_lon, c_lat, cell_deg)
 
     w = Window.partitionBy("query_id").orderBy("dist_km", "neighbor_id")
     if stats is not None:
@@ -377,66 +468,89 @@ def knn_haversine_join(
 
     return _settle_rounds(
         q, k, float(initial_radius_km), lambda radius: radius >= global_cover_km,
-        round_topk, "dist_km", stats,
+        round_topk, "dist_km", stats, _cache_buffers_id(queries) is not None,
     )
 
 
+def _observed_count(obs: Observation) -> int | None:
+    """The count an ``Observation`` took, None when its node left the
+    executed plan: AQE drops the query side of a join it has proved
+    empty, and Spark then completes the observation with an empty row."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else None
+
+
 def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
-                   dist: str, stats: dict | None) -> DataFrame:
+                   dist: str, stats: dict | None, q_cached: bool) -> DataFrame:
     """The driver loop shared by both kNN joins. ``round_topk(remaining,
     ring)`` plans one round's top-k with a ``reach`` column (the radius
     within which that query has seen every candidate); ``ring`` starts
     at ``first`` and doubles until ``is_final(ring)``, whose round is
     kept whole.
 
-    Round bookkeeping by COUNT, not by materialization: the input is
-    checkpointed ONCE (an expensive upstream plan must not re-run per
-    round), then the remaining-queries frame stays a lazy anti-join
-    chain over per-round checkpoints (depth = rounds, each parent
-    materialized — no exponential regrowth) and the loop exits on
-    settled-count arithmetic instead of a per-round isEmpty job + a
-    per-round remaining checkpoint job. Both counts are of DISTINCT
-    query ids — duplicated query rows share one window partition, so
-    a row count would never reach zero and would run empty rounds."""
+    Round bookkeeping by OBSERVATION: the round's top-k and settle
+    classification materialize in ONE checkpoint job, and two
+    ``Observation``s ride in it — the rows of the round's query input
+    (observed on the query side, below the cover broadcast) and the
+    settled rank-1 rows (one per settled query id). Equal counts mean
+    every query settled, and the loop ends with no further job. They
+    differ when query ids repeat (duplicated rows share one window
+    partition, so they settle as one id) or when a query has no
+    candidate this round (it is absent from the top-k); only then does
+    the loop run one distinct count of the remaining ids and continue
+    by subtraction. The remaining-queries frame stays a lazy anti-join
+    chain over the per-round checkpoints (depth = rounds, each parent
+    materialized — no exponential regrowth). Its root is the query
+    frame as given when ``q_cached`` (the caller's frame is one cached
+    relation), else one eager checkpoint of it, so an expensive
+    upstream plan does not re-run per round."""
     if stats is not None:
         stats["rounds"] = 0
-    remaining = q.localCheckpoint(eager=True)
-    n_remaining = remaining.select("query_id").distinct().count()
+    remaining = q if q_cached else q.localCheckpoint(eager=True)
+    n_remaining = None  # distinct ids left, counted only on a mismatch
     settled_parts: list[DataFrame] = []
     ring = first
     while True:
         if stats is not None:
             stats["rounds"] += 1
-        topk = round_topk(remaining, ring)
         if is_final(ring):
-            settled_parts.append(topk.drop("reach"))
+            settled_parts.append(round_topk(remaining, ring).drop("reach"))
             break
+        seen, done = Observation(), Observation()
+        topk = round_topk(
+            remaining.observe(seen, F.count(F.lit(1)).alias("n")), ring
+        )
         # settled: k found and k-th dist STRICTLY within the reach. The
         # cover only guarantees unseen candidates lie beyond the reach
         # in exact arithmetic; after float rounding an unseen
         # candidate's dist can collapse to exactly the reach and
         # tie-break ahead of a kept one — strict '<' closes that hole
         # at the cost of one extra round for exact-boundary kth.
-        # ONE job per round: the settle test rides the SAME window
-        # partitioning as the top-k (count/max over partitionBy
-        # query_id reuse the row_number exchange), so top-k + settle
-        # classification materialize in a single checkpoint.
+        # The settle test rides the SAME window partitioning as the
+        # top-k (count/max over partitionBy query_id reuse the
+        # row_number exchange).
         wq = Window.partitionBy("query_id")
-        flagged = topk.withColumn(
-            "settled",
-            (F.count(F.lit(1)).over(wq) >= k)
-            & (F.max(dist).over(wq) < F.col("reach")),
-        ).drop("reach").localCheckpoint(eager=True)
+        flagged = (
+            topk.withColumn(
+                "settled",
+                (F.count(F.lit(1)).over(wq) >= k)
+                & (F.max(dist).over(wq) < F.col("reach")),
+            )
+            .drop("reach")
+            .observe(done, F.count_if(F.col("settled") & (F.col("rank") == 1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
         settled = flagged.where("settled").drop("settled")
         settled_parts.append(settled)
-        # one rank-1 row per settled query id: a plain count against
-        # the checkpoint cache. Queries with ZERO candidates this round
-        # are absent from flagged, so the remaining count is tracked by
-        # subtraction, not derived from flagged alone
-        settled_ids = settled.where(F.col("rank") == 1).select("query_id")
-        n_remaining -= settled_ids.count()
+        n_done = _observed_count(done) or 0
+        if n_remaining is None:
+            if _observed_count(seen) == n_done:
+                break
+            n_remaining = remaining.select("query_id").distinct().count()
+        n_remaining -= n_done
         if n_remaining <= 0:
             break
+        settled_ids = settled.where(F.col("rank") == 1).select("query_id")
         remaining = remaining.join(settled_ids, on="query_id", how="left_anti")
         ring *= 2
     out = settled_parts[0]
@@ -494,7 +608,7 @@ def dwithin_join(
         F.col(right_id).alias("right_id"),
         F.col(r_lon).alias("cx"),
         F.col(r_lat).alias("cy"),
-    ).withColumn("cell_id", GRID.cell_id_col(F.col("cx"), F.col("cy"), cell_deg))
+    ).withColumn("cell_id", GRID.cell_id_named("cx", "cy", cell_deg))
     ringed = _ring_cells(q, r_cells, cell_deg)
     cand = ringed.join(c, on="cell_id")
     if exclude_self:
@@ -618,10 +732,11 @@ def knn_join(
 
     ``initial_ring='auto'`` sizes the first ring from candidate
     density so the first round settles the bulk of queries without
-    per-query tuning. The same aggregate over the candidate layer
-    (run whatever ``initial_ring``) picks the split cells: queries in
-    a dense cell search a proportionally smaller first radius (module
-    doc). ``max_ring`` bounds the coarse ring; its round is final.
+    per-query tuning. The same profile of the candidate layer (taken
+    whatever ``initial_ring``, and once per cached layer) picks the
+    split cells: queries in a dense cell search a proportionally
+    smaller first radius (module doc). ``max_ring`` bounds the coarse
+    ring; its round is final.
     ``stats``, when given, receives ``initial_ring``, ``rounds``,
     ``split_cells`` and ``max_level``.
 
@@ -658,22 +773,13 @@ def knn_join(
         F.col(q_lon).alias("qx"),
         F.col(q_lat).alias("qy"),
     )
-    c = candidates.select(
-        F.col(cand_id).alias("neighbor_id"),
-        F.col(c_lon).alias("cx"),
-        F.col(c_lat).alias("cy"),
-    ).withColumn("cell_id", GRID.cell_id_col(F.col("cx"), F.col("cy"), cell_deg))
-
-    r0, split = _split_table(c, k, cell_deg, initial_ring, max_ring)
+    profile = _candidate_profile(candidates, cand_id, c_lon, c_lat, cell_deg)
+    r0, split = _split_table(profile.rows, k, cell_deg, initial_ring, max_ring)
     if stats is not None:
         stats["initial_ring"] = r0
         stats["split_cells"] = len(split)
         stats["max_level"] = max((lvl for _, lvl in split), default=0)
-    keyed = (
-        c.withColumn("lvl", cexpr(_level_sql("cell_id", split)))
-        .withColumn("sub", cexpr(_candidate_sub_sql(cell_deg)))
-        .drop("lvl")
-    )
+    keyed = profile.keyed_frame(split, cell_deg)
     own_level = _level_sql(
         f"({_spark_sql_cell_x('qx', cell_deg)} * 4294967296L "
         f"+ {_spark_sql_cell_y('qy', cell_deg)})",
@@ -708,5 +814,6 @@ def knn_join(
         )
 
     return _settle_rounds(
-        q, k, r0, lambda r: r >= max_ring, round_topk, "dist", stats
+        q, k, r0, lambda r: r >= max_ring, round_topk, "dist", stats,
+        _cache_buffers_id(queries) is not None,
     )

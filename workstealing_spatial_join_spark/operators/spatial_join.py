@@ -43,7 +43,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from functools import cached_property
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import grid as GRID
@@ -643,6 +643,8 @@ def polygon_join(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     from workstealing_spatial_join_spark.plans.planner import plan_join
 
     if predicate not in PREDICATES:
@@ -652,10 +654,13 @@ def polygon_join(
     # run them CONCURRENTLY (guide §2.6: the scheduler happily
     # overlaps jobs; actions are only sequential because driver code
     # calls them sequentially). Both collects are bounded by the dict
-    # cap.
+    # cap. Job groups and other local properties are per thread: the
+    # wrapped targets carry the caller's, so the collects report under
+    # the caller's job group.
+    join_side = inheritable_thread_target(SparkSession.active())(_join_side)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_l = pool.submit(_join_side, left, left_id, cell_deg)
-        fut_r = pool.submit(_join_side, right, right_id, cell_deg)
+        fut_l = pool.submit(join_side, left, left_id, cell_deg)
+        fut_r = pool.submit(join_side, right, right_id, cell_deg)
         la, l_tess = fut_l.result()
         ra, r_tess = fut_r.result()
 
