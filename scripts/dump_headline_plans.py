@@ -3,8 +3,13 @@ plans/r10/<name>_<tag>.txt (or OUT_DIR):
 
 * the bench.py headline entries that are not in queries(): the
   prepared-layer PIP join (count, pairs and salted), the same join
-  against a fresh (unprepared) polygon layer, tile_assign and one kNN
-  round, over bench_data/;
+  against a fresh (unprepared) polygon layer, tile_assign and one final
+  kNN round, over bench_data/;
+* the non-final kNN round a default-ring ``knn_join`` runs on a cached
+  corpus and cached queries (the perfbench ``knn_hotbox`` shape):
+  knn_join is run under a job group, and the executed plan of its round
+  checkpoint (the one carrying the settle ``CollectMetrics``) is read
+  from the SQL status store into knn_images_round_nonfinal_<tag>.txt;
 * every pip_*, rect_*, concave_*, degenerate_*, lines_*, zonal_* and
   tile_rect_overlap_count driver query, at SF_DIR.
 
@@ -65,14 +70,50 @@ def main():
         if STRICT.match(name) or name == "tile_rect_overlap_count":
             frames[name] = lambda fn=fn: fn(spark, sf_dir)
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-    for name, build in frames.items():
-        text = build()._jdf.queryExecution().explainString(
+    texts = {
+        name: lambda build=build: build()._jdf.queryExecution().explainString(
             mode.fromString("formatted")
         )
+        for name, build in frames.items()
+    }
+    # last: it caches its corpus and queries
+    texts["knn_images_round_nonfinal"] = lambda: knn_round_checkpoint_plan(spark, images)
+    for name, text in texts.items():
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
-            fh.write(text)
+            fh.write(text())
         print(name, "written")
     spark.stop()
+
+
+def _scala_iter(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def knn_round_checkpoint_plan(spark, images) -> str:
+    """The executed physical plan of the first round checkpoint that
+    carries the settle counts, from a default-ring ``knn_join`` over a
+    cached corpus and cached queries, run under its own job group."""
+    corpus = images.select("image_id", "lon", "lat").cache()
+    corpus.count()
+    queries = corpus.limit(1000).cache()
+    queries.count()
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-round-plan", "knn-round-plan")
+    try:
+        knn_join(queries, corpus, k=5, exclude_self=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup("knn-round-plan"))
+    store = spark._jsparkSession.sharedState().statusStore()
+    for ex in _scala_iter(store.executionsList()):
+        ran = {int(j) for j in _scala_iter(ex.jobs().keys())}
+        plan = ex.physicalPlanDescription()
+        if ran & jobs and "CollectMetrics" in plan:
+            return plan
+    raise RuntimeError("knn_join ran no round checkpoint with settle counts")
 
 
 if __name__ == "__main__":

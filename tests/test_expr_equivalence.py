@@ -68,3 +68,61 @@ def test_cexpr_memoizes(spark):
     c2 = cexpr("1L + 2L")
     assert c1 is c2
     assert spark.range(1).select(c1.alias("v")).first()["v"] == 3
+
+
+# ------------------------------------------- testdata layer builders
+
+SF001 = "/root/testdata/sf0.01"
+
+
+def _fluent_centre(key, mult, span, origin):
+    return F.lit(origin) + (F.col(key) * mult % span) / 1000.0
+
+
+def _fluent_points(spark):
+    from workstealing_spatial_join_spark.sources import tables as TB
+
+    return TB.load(spark, SF001, "customer").select(
+        F.col("c_custkey").alias("point_id"),
+        _fluent_centre("c_custkey", 9973, 360000, -180.0).alias("lon"),
+        _fluent_centre("c_custkey", 7919, 180000, -90.0).alias("lat"),
+    )
+
+
+def _fluent_rects(spark, table, key, mults, extents):
+    from workstealing_spatial_join_spark.sources import tables as TB
+
+    ew, eh, dw, dh, sw, sh = extents
+    cx = _fluent_centre(key, mults[0], 360000, -180.0)
+    cy = _fluent_centre(key, mults[1], 180000, -90.0)
+    hw = F.lit(ew) + (F.col(key) % dw) / sw
+    hh = F.lit(eh) + (F.col(key) % dh) / sh
+    return TB.load(spark, SF001, table).select(
+        F.col(key).alias("rect_id"),
+        (cx - hw).alias("minx"),
+        (cy - hh).alias("miny"),
+        (cx + hw).alias("maxx"),
+        (cy + hh).alias("maxy"),
+    )
+
+
+FLUENT_BUILDERS = {
+    "customer_points": _fluent_points,
+    "supplier_rects": lambda spark: _fluent_rects(
+        spark, "supplier", "s_suppkey", (7817, 6271), (1.0, 1.0, 7, 5, 1.0, 1.0)
+    ),
+    "part_rects": lambda spark: _fluent_rects(
+        spark, "part", "p_partkey", (104729, 92821), (0.5, 0.5, 5, 3, 2.0, 2.0)
+    ),
+}
+
+
+@pytest.mark.parametrize("builder", sorted(FLUENT_BUILDERS))
+def test_table_builders_identical(spark, builder):
+    """The memoized-SQL testdata layers equal their fluent forms."""
+    from workstealing_spatial_join_spark.sources import tables as TB
+
+    fluent = FLUENT_BUILDERS[builder](spark)
+    sql_form = getattr(TB, builder)(spark, SF001)
+    assert sql_form.schema == fluent.schema
+    assert sorted(sql_form.collect()) == sorted(fluent.collect())

@@ -1,6 +1,7 @@
 """The one join planner: ``plan_join``'s broadcast/transport decision
-(pure Python), the closed-form cell counts it is fed, the post-salt
-gate of both joins, and the probe spread on shared coordinates."""
+(pure Python), the closed-form cell counts and the columnar layer
+analysis it is fed, the post-salt gate of both joins, and the probe
+spread on shared coordinates."""
 
 import math
 
@@ -13,6 +14,7 @@ from workstealing_spatial_join_spark.functions.interior_cells import CellClasses
 from workstealing_spatial_join_spark.operators import spatial_join as SJ
 from workstealing_spatial_join_spark.operators.spatial_join import (
     LayerAnalysis,
+    point_in_polygon_join,
     polygon_join,
     tessellate_bbox,
     tessellate_points,
@@ -174,19 +176,111 @@ def test_closed_form_cells_match_spark(spark, bounds):
         "id long, geom_wkb binary, "
         "minx double, miny double, maxx double, maxy double",
     )
-    rows = df.collect()
-    _, _, w, h = SJ._cell_spans(rows, 1.0)
+    bounds = SJ._bounds_array(df.toArrow())
+    _, _, w, h = SJ._cell_spans(bounds, 1.0)
     ncell = w * h
     exploded = tessellate_bbox(df, 1.0)
     assert int(ncell.sum()) == exploded.count()
     per_row = {r["id"]: r["count"] for r in exploded.groupBy("id").count().collect()}
     assert ncell.tolist() == [per_row[1], per_row[2]]
-    assert SJ._cell_row_counts(rows, 1.0) == sorted(
+    assert SJ._cell_row_counts(bounds, 1.0) == sorted(
         (r["cell_id"], r["count"])
         for r in exploded.groupBy("cell_id").count().collect()
     )
     if bounds[0] is None or (isinstance(bounds[0], float) and math.isnan(bounds[0])):
         assert ncell[0] == 364  # column 0 .. 181, rows 90 .. 91
+
+
+# ------------------------------- columnar layer analysis == Spark
+
+
+def _ring_wkb(*xy):
+    from workstealing_spatial_join_spark.functions import wkt as W
+
+    return W.to_wkb(W.POLYGON, [np.array(xy, dtype=np.float64)])
+
+
+def _rect_wkb(x0, y0, x1, y1):
+    return _ring_wkb((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))
+
+
+# (id type, rows (id, wkb, minx..maxy), all_rects as the Row-based
+# analysis decided it)
+ANALYSIS_LAYERS = {
+    "one_null_id": ("bigint", [
+        (None, _rect_wkb(0, 0, 2, 2), 0.0, 0.0, 2.0, 2.0),
+        (7, _rect_wkb(3, 3, 5, 5), 3.0, 3.0, 5.0, 5.0),
+    ], True),
+    "two_null_ids": ("bigint", [
+        (None, _rect_wkb(0, 0, 2, 2), 0.0, 0.0, 2.0, 2.0),
+        (None, _rect_wkb(3, 3, 5, 5), 3.0, 3.0, 5.0, 5.0),
+    ], True),
+    "null_wkb": ("bigint", [
+        (1, None, 0.0, 0.0, 4.0, 4.0),
+        (2, _rect_wkb(3, 3, 5, 5), 3.0, 3.0, 5.0, 5.0),
+    ], False),
+    # 93 bytes with the rectangle header, but a diamond
+    "diamond_93_bytes": ("bigint", [
+        (1, _ring_wkb((1, 0), (2, 1), (1, 2), (0, 1), (1, 0)), 0.0, 0.0, 2.0, 2.0),
+        (2, _rect_wkb(3, 3, 5, 5), 3.0, 3.0, 5.0, 5.0),
+    ], False),
+    # a rectangle with a sixth, collinear vertex
+    "six_vertex_rect": ("bigint", [
+        (1, _ring_wkb((0, 0), (1, 0), (2, 0), (2, 2), (0, 2), (0, 0)), 0.0, 0.0, 2.0, 2.0),
+    ], False),
+    "string_ids_null_bounds": ("string", [
+        ("a", _rect_wkb(0, 0, 2, 2), None, 0.0, 2.0, 2.0),
+        ("b", _rect_wkb(3, 3, 5, 5), 3.0, 3.0, 5.0, None),
+        ("c", _rect_wkb(1, 1, 4, 4), 1.0, 1.0, 4.0, 4.0),
+    ], False),
+    "empty": ("bigint", [], True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(ANALYSIS_LAYERS))
+def test_columnar_analysis_matches_spark(spark, case, monkeypatch):
+    id_type, rows, all_rects = ANALYSIS_LAYERS[case]
+    df = spark.createDataFrame(
+        rows,
+        f"id {id_type}, geom_wkb binary, "
+        "minx double, miny double, maxx double, maxy double",
+    )
+    a = SJ._analyze_layer(df, "id", 1.0)
+    exploded = tessellate_bbox(df, 1.0)
+    assert a.exploded_rows == exploded.count()
+    assert a.exploded_wkb_bytes == exploded.select(
+        F.coalesce(F.sum(F.length("geom_wkb")), F.lit(0))
+    ).first()[0]
+    # DISTINCT keeps one NULL, as the id uniqueness must
+    assert a.unique_ids == (df.select("id").distinct().count() == df.count())
+    assert a.cell_counts == sorted(
+        (r["cell_id"], r["count"])
+        for r in exploded.groupBy("cell_id").count().collect()
+    )
+    assert a.all_rects is all_rects
+    # the replay keeps the id's Spark type and the NULL bounds
+    assert a.src.schema == df.schema
+    assert sorted(a.src.collect(), key=repr) == sorted(df.collect(), key=repr)
+
+    # the collected layer joins as the uncollected (WKB-refined) one
+    # does: a NULL geometry contains nothing
+    xs = np.arange(-0.875, 6.0, 0.25)
+    points = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(
+            (x, y) for x in xs for y in xs
+        )],
+        "image_id long, lon double, lat double",
+    )
+
+    def pairs(layer):
+        got = point_in_polygon_join(points, layer, poly_id="id").collect()
+        return sorted(((r.point_id, r.poly_id) for r in got), key=repr)
+
+    collected = pairs(df)
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)
+    assert collected == pairs(df)
+    if case == "null_wkb":
+        assert all(pid != 1 for _, pid in collected)
 
 
 # ------------------------------------------ post-salt gate (joins)

@@ -230,8 +230,7 @@ def test_prepared_layer_and_wkb_path_agree(spark, frames, points_pdf, monkeypatc
 
 
 def _classes(wkb, cell_deg=1.0):
-    rows = [(0, wkb, *layer_rows_bounds(wkb))]
-    cx0, cy0, w, h = SJ._cell_spans(rows, cell_deg)
+    cx0, cy0, w, h = SJ._cell_spans(np.array([layer_rows_bounds(wkb)]), cell_deg)
     return IC.classify_cells([wkb], cx0, cy0, w, h, cell_deg)
 
 
@@ -289,9 +288,8 @@ def test_null_undecodable_and_non_finite_rows_contain_nothing(spark):
     )
     assert got == [(0, 4), (1, 4)]
     classes = IC.classify_cells(
-        [wkb for _, wkb in bad], *SJ._cell_spans(
-            [(pid, wkb, 0.0, 0.0, 4.0, 4.0) for pid, wkb in bad], 1.0
-        ), 1.0,
+        [wkb for _, wkb in bad],
+        *SJ._cell_spans(np.array([(0.0, 0.0, 4.0, 4.0)] * len(bad)), 1.0), 1.0,
     )
     # every cell of the three bad rows is boundary, with NULL rings
     assert classes.inner.to_pylist()[:3] == [[False] * 25] * 3

@@ -45,17 +45,17 @@ def test_prepared_layer_matches_plain_join(layers):
 
 def test_prepared_layer_skips_recollect(layers, monkeypatch):
     da, db = layers
-    pa = PreparedPolygonLayer(da, "a_id")
-    pb = PreparedPolygonLayer(db, "b_id")
-
     calls = {"n": 0}
-    real = SJ._collect_geom_dict
+    real = SJ._collect_layer
 
     def counting(*args, **kwargs):
         calls["n"] += 1
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(SJ, "_collect_geom_dict", counting)
+    monkeypatch.setattr(SJ, "_collect_layer", counting)
+    pa = PreparedPolygonLayer(da, "a_id")
+    pb = PreparedPolygonLayer(db, "b_id")
+    assert calls["n"] == 2  # one collect per preparation
 
     # two different predicates against the same prepared pair: zero
     # new collects (the dict, rect-verify, and tessellation are all
@@ -65,11 +65,11 @@ def test_prepared_layer_skips_recollect(layers, monkeypatch):
             pa, pb, "a_id", "b_id", predicate=predicate, mode="count"
         ).collect()[0][0]
         assert n > 0
-    assert calls["n"] == 0
+    assert calls["n"] == 2
 
     # plain-DataFrame joins DO re-collect — one per side per call
     polygon_join(da, db, "a_id", "b_id", predicate="intersects", mode="count").collect()
-    assert calls["n"] == 2
+    assert calls["n"] == 4
 
 
 def test_prepared_layer_mixed_sides(layers):

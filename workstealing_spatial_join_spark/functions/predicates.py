@@ -175,8 +175,9 @@ def st_contains_xy(poly_wkb: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series
 
 
 def _id_wkb_table(ids, wkbs) -> dict:
+    """{id: wkb or (wkb, ...)} over an Arrow id column and WKB column."""
     id_to_wkbs: dict = {}
-    for pid, wkb in zip(ids, wkbs):
+    for pid, wkb in zip(ids.to_pylist(), wkbs.to_pylist()):
         id_to_wkbs.setdefault(pid, []).append(bytes(wkb))
     return {
         pid: tuple(ws) if len(ws) > 1 else ws[0] for pid, ws in id_to_wkbs.items()
@@ -522,7 +523,8 @@ def make_pair_refine_broadcast(
     spark, left_ids, left_wkbs, right_ids, right_wkbs, predicate: str
 ):
     """Build a refine(l_id, r_id) pandas UDF over BROADCAST geometry
-    dictionaries for BOTH layers: candidate pairs carry only two ids
+    dictionaries for BOTH layers, each given as its Arrow id and WKB
+    columns: candidate pairs carry only two ids
     through Arrow — no WKB bytes per pair. This is the default transport
     whenever both layers fit on the driver (plans/planner.py); at
     scale beyond that the cogroup strategy ships each geometry once

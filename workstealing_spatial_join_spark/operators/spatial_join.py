@@ -30,6 +30,10 @@ edges they carry, and the plan has no Python node. An uncollected
 layer (and every polygon join that is not on rectangles) refines with
 an Arrow pandas UDF, the plan's only Python node.
 
+A layer is collected once, in one job, as one Arrow table of its id,
+WKB and bounds columns (``_analyze_layer``); every planner figure, the
+cell classes and the local replay frame are read from its columns.
+
 Duplicate semantics: a pair whose geometries co-occupy k cells appears
 k times in the reference (no reference-point dedup anywhere in that
 repo — src/thread_util.cpp:317, SURVEY.md §3.2). ``dedup='parity'``
@@ -93,13 +97,24 @@ def tessellate_bbox(
     )
 
 
-def _collect_geom_dict(layer: DataFrame, id_col: str, max_rows: int):
-    """Collect (id, wkb, minx, miny, maxx, maxy) rows in ONE action;
-    None when the layer exceeds ``max_rows`` (the caller falls back to
-    the WKB transport)."""
-    sel = layer.select(id_col, "geom_wkb", "minx", "miny", "maxx", "maxy")
-    rows = sel.limit(max_rows + 1).collect()
-    return None if len(rows) > max_rows else rows
+_BOUNDS = ("minx", "miny", "maxx", "maxy")
+
+
+def _collect_layer(layer: DataFrame, id_col: str, max_rows: int):
+    """Collect the (id, geom_wkb, minx..maxy) columns as ONE Arrow table
+    in one job; None when the layer exceeds ``max_rows`` (the caller
+    falls back to the WKB transport)."""
+    sel = layer.select(id_col, "geom_wkb", *_BOUNDS)
+    table = sel.limit(max_rows + 1).toArrow()
+    return None if table.num_rows > max_rows else table
+
+
+def _bounds_array(table):
+    """The collected minx..maxy columns as one (n, 4) float64 array; a
+    NULL bound reads as NaN (``_cell_index`` places both alike)."""
+    import numpy as np
+
+    return np.column_stack([table[c].to_numpy() for c in _BOUNDS]).astype(float)
 
 
 def _cell_index(v, offset: float, cell_deg: float, n: int):
@@ -113,9 +128,9 @@ def _cell_index(v, offset: float, cell_deg: float, n: int):
     return np.clip(i, 0, n - 1).astype(np.int64)
 
 
-def _cell_spans(rows, cell_deg: float):
-    """Driver-side closed form of ``tessellate_bbox`` over collected
-    (id, wkb, minx, miny, maxx, maxy) rows: each row's first covering
+def _cell_spans(bounds, cell_deg: float):
+    """Driver-side closed form of ``tessellate_bbox`` over an (n, 4)
+    minx..maxy array (``_bounds_array``): each row's first covering
     cell column and row, and its width and height in cells. Same index
     arithmetic as the Catalyst tessellation, and ``sequence`` runs
     downward when a bound pair is inverted, so the spans agree with
@@ -124,27 +139,26 @@ def _cell_spans(rows, cell_deg: float):
     import numpy as np
 
     nx, ny = GRID.grid_dims(cell_deg)
-    b = np.array([r[2:6] for r in rows], dtype=np.float64).reshape(-1, 4)
-    x0 = _cell_index(b[:, 0], 180.0, cell_deg, nx)
-    x1 = _cell_index(b[:, 2], 180.0, cell_deg, nx)
-    y0 = _cell_index(b[:, 1], 90.0, cell_deg, ny)
-    y1 = _cell_index(b[:, 3], 90.0, cell_deg, ny)
+    x0 = _cell_index(bounds[:, 0], 180.0, cell_deg, nx)
+    x1 = _cell_index(bounds[:, 2], 180.0, cell_deg, nx)
+    y0 = _cell_index(bounds[:, 1], 90.0, cell_deg, ny)
+    y1 = _cell_index(bounds[:, 3], 90.0, cell_deg, ny)
     return (
         np.minimum(x0, x1), np.minimum(y0, y1),
         np.abs(x1 - x0) + 1, np.abs(y1 - y0) + 1,
     )
 
 
-def _cell_row_counts(rows, cell_deg: float):
+def _cell_row_counts(bounds, cell_deg: float):
     """Per-cell row counts ``[(cell_id, n), ...]`` of
-    ``exploded.groupBy(cell_id).count()`` from the collected rows'
+    ``exploded.groupBy(cell_id).count()`` from the collected bounds'
     spans, so the salting cost table skips one distributed aggregate
     (guide §2.4). Vectorized (a per-row Python loop over
     cells_covering_bbox measured 0.6 s on the 10k-polygon bench layer;
     this is ~10 ms)."""
     import numpy as np
 
-    cx0, cy0, w, h = _cell_spans(rows, cell_deg)
+    cx0, cy0, w, h = _cell_spans(bounds, cell_deg)
     ncell = w * h
     starts = np.cumsum(ncell) - ncell
     off = np.arange(int(ncell.sum()), dtype=np.int64) - np.repeat(starts, ncell)
@@ -160,53 +174,51 @@ _RECT_WKB_HDR_BYTES = (
 )
 
 
-def _all_rects_matching_bounds(rows) -> bool:
-    """True iff EVERY collected geometry is a single axis-aligned
-    rectangle whose ring equals the row's declared bounds exactly.
-    When a layer passes this check, the Catalyst MBR predicate IS the
-    exact geometry predicate — refine needs no Python at all. This is
-    verified per row (driver-side decode), never assumed from
-    metadata.
+def _all_rects_matching_bounds(wkb, bounds) -> bool:
+    """True iff EVERY collected geometry (``wkb``, the Arrow WKB column)
+    is a single axis-aligned rectangle whose ring equals its row of
+    ``bounds`` exactly. When a layer passes this check, the Catalyst
+    MBR predicate IS the exact geometry predicate — refine needs no
+    Python at all. This is verified per row (driver-side decode),
+    never assumed from metadata.
 
     Fast path: a 5-point single-ring polygon WKB is exactly 93 bytes
     with a fixed header, so a homogeneous layer is verified as ONE
-    NumPy pass over the stacked buffers (the per-row decode loop was
-    ~1 s of driver time per 20k-rect collect, paid per query rep);
+    NumPy pass over an (n, 93) view of the column's value buffer (the
+    per-row decode loop was ~1 s of driver time per 20k-rect collect);
     anything else falls back to the per-row decode."""
     import numpy as np
+    import pyarrow as pa
 
-    if any(r[1] is None for r in rows):
+    if wkb.null_count:
         return False
-    bufs = [bytes(r[1]) for r in rows]
-    if bufs and all(
-        len(b) == 93 and b.startswith(_RECT_WKB_HDR_BYTES) for b in bufs
-    ):
-        arr = np.frombuffer(b"".join(bufs), dtype=np.uint8).reshape(
-            len(bufs), 93
-        )
-        ring = (
-            arr[:, 13:].copy().view("<f8").reshape(len(bufs), 5, 2)
-        )
-        dx = ring[:, 1:, 0] - ring[:, :-1, 0]
-        dy = ring[:, 1:, 1] - ring[:, :-1, 1]
-        axis_aligned = ((dx == 0) | (dy == 0)).all(axis=1)
-        bounds = np.array(
-            [[r[2], r[3], r[4], r[5]] for r in rows], dtype=np.float64
-        )
-        match = (
-            axis_aligned
-            & (ring[:, :, 0].min(axis=1) == bounds[:, 0])
-            & (ring[:, :, 1].min(axis=1) == bounds[:, 1])
-            & (ring[:, :, 0].max(axis=1) == bounds[:, 2])
-            & (ring[:, :, 1].max(axis=1) == bounds[:, 3])
-        )
-        return bool(match.all())
+    arr = wkb.combine_chunks()
+    n = len(arr)
+    if n:
+        _, offsets, values = arr.buffers()
+        width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        off = np.frombuffer(offsets, dtype=width)[arr.offset:arr.offset + n + 1]
+    if n and (np.diff(off) == 93).all():
+        buf = np.frombuffer(values, dtype=np.uint8)[off[0]:off[-1]].reshape(n, 93)
+        if (buf[:, :13] == np.frombuffer(_RECT_WKB_HDR_BYTES, dtype=np.uint8)).all():
+            ring = buf[:, 13:].copy().view("<f8").reshape(n, 5, 2)
+            dx = ring[:, 1:, 0] - ring[:, :-1, 0]
+            dy = ring[:, 1:, 1] - ring[:, :-1, 1]
+            axis_aligned = ((dx == 0) | (dy == 0)).all(axis=1)
+            match = (
+                axis_aligned
+                & (ring[:, :, 0].min(axis=1) == bounds[:, 0])
+                & (ring[:, :, 1].min(axis=1) == bounds[:, 1])
+                & (ring[:, :, 0].max(axis=1) == bounds[:, 2])
+                & (ring[:, :, 1].max(axis=1) == bounds[:, 3])
+            )
+            return bool(match.all())
 
     from workstealing_spatial_join_spark.functions.predicates import _geom_info
 
-    for r in rows:
-        info = _geom_info(bytes(r[1]))
-        if info.rect is None or info.rect != (r[2], r[3], r[4], r[5]):
+    for b, box in zip(arr.to_pylist(), bounds.tolist()):
+        rect = _geom_info(b).rect
+        if rect is None or rect != tuple(box):
             return False
     return True
 
@@ -228,20 +240,20 @@ def _refpoint_filter(cell_deg: float):
 
 @dataclass(eq=False)  # holds DataFrames: compare by identity
 class LayerAnalysis:
-    """Everything one collect tells the planner about a geometry layer
-    (plans.planner.plan_join reads it; both joins share it). ``rows``
-    holds the collected (id, wkb, minx, miny, maxx, maxy) dictionary
-    rows — None past DICT_MAX_ROWS, or when the join needs no refine —
-    and ``src`` the frame to tessellate: the local replay of the rows
-    when they are few enough, else the source layer. ``cells`` holds
-    the interior/boundary classes of every covering cell
+    """Everything one Arrow collect tells the planner about a geometry
+    layer (plans.planner.plan_join reads it; both joins share it).
+    ``table`` is the collected (id, geom_wkb, minx..maxy) Arrow table —
+    None past DICT_MAX_ROWS, or when the join needs no refine — and
+    ``src`` the frame to tessellate: the local replay of the table when
+    it is small enough, else the source layer. ``cells`` holds the
+    interior/boundary classes of every covering cell
     (functions/interior_cells.py) when a point-in-polygon join asked
     for them, and ``cells_src`` the local frame that carries them."""
 
     src: DataFrame | None = None
     id_col: str = "polygon_id"
     cell_deg: float = GRID.DEFAULT_CELL_DEG
-    rows: list | None = None
+    table: object = None  # pa.Table | None
     unique_ids: bool = False
     all_rects: bool = False  # every geometry equals its MBR
     exploded_rows: int | None = None  # closed-form Σ covering cells
@@ -253,14 +265,15 @@ class LayerAnalysis:
     def cell_counts(self):
         """Per-cell exploded row counts [(cell_id, n)], or None when not
         collected (the salting cost table then aggregates instead)."""
-        return None if self.rows is None else _cell_row_counts(self.rows, self.cell_deg)
+        t = self.table
+        return None if t is None else _cell_row_counts(_bounds_array(t), self.cell_deg)
 
     def tessellate(self, transport: str) -> DataFrame:
         """Cell tessellation for a refine transport: (poly_id,
         minx..maxy, cell_id), plus geom_wkb for "wkb", and for "rings"
         only the non-exterior cells with their ``inner`` flag and the
         ``rings`` of boundary rows (NULL on interior rows)."""
-        cols = [F.col(self.id_col).alias("poly_id"), "minx", "miny", "maxx", "maxy"]
+        cols = [F.col(self.id_col).alias("poly_id"), *_BOUNDS]
         if transport == "rings":
             return self.cells_src.select(
                 *cols, F.inline(F.arrays_zip("cells", "inner", "rings"))
@@ -271,31 +284,19 @@ class LayerAnalysis:
 
 
 def _local_geom_frame(
-    layer: DataFrame, id_col: str, rows, with_wkb: bool, cells: CellClasses | None
+    layer: DataFrame, table, with_wkb: bool, cells: CellClasses | None
 ) -> DataFrame:
-    """Replay already-collected rows as a LOCAL frame built straight
-    from Arrow arrays: (id, [geom_wkb,] minx..maxy[, cells, inner,
-    rings]), one row per geometry, the id keeping its source type.
-    Downstream tessellation then costs zero scans and zero ingest
-    Python — the collect that built the analysis already moved these
-    bytes to the driver once (guide §2.4: don't recompute what a
+    """Replay the collected table as a LOCAL frame: (id, [geom_wkb,]
+    minx..maxy[, cells, inner, rings]), one row per geometry, the id
+    keeping its Spark type and the bounds their NULLs (every column
+    nullable). Downstream tessellation then costs zero scans and zero
+    ingest Python — the collect that built the analysis already moved
+    these bytes to the driver once (guide §2.4: don't recompute what a
     previous action materialized). The cell classes ride as per-row
     arrays and are exploded in Catalyst."""
-    import numpy as np
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    bounds = np.array([r[2:6] for r in rows], dtype=np.float64).reshape(-1, 4)
-    nulls = np.array([[v is None for v in r[2:6]] for r in rows], dtype=bool).reshape(-1, 4)
-    cols = {id_col: pa.array(
-        [r[0] for r in rows], type=to_arrow_type(layer.schema[id_col].dataType)
-    )}
-    if with_wkb:
-        cols["geom_wkb"] = pa.array(
-            [None if r[1] is None else bytes(r[1]) for r in rows], type=pa.binary()
-        )
-    for j, c in enumerate(("minx", "miny", "maxx", "maxy")):
-        cols[c] = pa.array(bounds[:, j], mask=nulls[:, j])
+    cols = {c: table[c] for c in table.column_names if with_wkb or c != "geom_wkb"}
     if cells is not None:
         cols.update(cells=cells.cells, inner=cells.inner, rings=cells.rings)
     return layer.sparkSession.createDataFrame(pa.table(cols))
@@ -305,45 +306,48 @@ def _analyze_layer(
     layer: DataFrame, id_col: str, cell_deg: float, collect: bool = True,
     classify: bool = False,
 ) -> LayerAnalysis:
-    """Collect a layer once (bounded by DICT_MAX_ROWS) and derive what
-    both joins decide from. ``collect=False`` (an MBR-only join, whose
-    layer may lack ``geom_wkb``) leaves it uncollected; ``classify``
-    (point-in-polygon) adds the cell classes of a collected non-rect
-    layer and their local frame."""
-    rows = _collect_geom_dict(layer, id_col, DICT_MAX_ROWS) if collect else None
-    if rows is None:
+    """Collect a layer once as Arrow (bounded by DICT_MAX_ROWS) and
+    derive what both joins decide from its columns. ``collect=False``
+    (an MBR-only join, whose layer may lack ``geom_wkb``) leaves it
+    uncollected; ``classify`` (point-in-polygon) adds the cell classes
+    of a collected non-rect layer and their local frame."""
+    import pyarrow.compute as pc
+
+    table = _collect_layer(layer, id_col, DICT_MAX_ROWS) if collect else None
+    if table is None:
         return LayerAnalysis(layer, id_col, cell_deg)
-    cx0, cy0, w, h = _cell_spans(rows, cell_deg)
+    wkb = table["geom_wkb"]
+    bounds = _bounds_array(table)
+    cx0, cy0, w, h = _cell_spans(bounds, cell_deg)
     ncell = w * h
-    all_rects = _all_rects_matching_bounds(rows)
+    all_rects = _all_rects_matching_bounds(wkb, bounds)
     cells = cells_src = None
     if classify and not all_rects:
-        cells = classify_cells([r[1] for r in rows], cx0, cy0, w, h, cell_deg)
+        cells = classify_cells(wkb.to_pylist(), cx0, cy0, w, h, cell_deg)
     # replay a collected layer locally: its tessellation then costs no
     # source scan (and no ingest Python stage) in any downstream job —
-    # the dict collect already paid these bytes. Past
-    # LOCAL_BUILD_MAX_ROWS only the cell classes are replayed (without
-    # the WKB column), and the WKB tessellation re-reads the source.
-    small = len(rows) <= LOCAL_BUILD_MAX_ROWS
+    # the collect already paid these bytes. Past LOCAL_BUILD_MAX_ROWS
+    # only the cell classes are replayed (without the WKB column), and
+    # the WKB tessellation re-reads the source.
+    small = table.num_rows <= LOCAL_BUILD_MAX_ROWS
     if small or cells is not None:
-        replay = _local_geom_frame(layer, id_col, rows, small, cells)
+        replay = _local_geom_frame(layer, table, small, cells)
         cells_src = None if cells is None else replay
         layer = replay if small else layer
     return LayerAnalysis(
         layer,
         id_col,
         cell_deg,
-        rows,
+        table,
         # the id-keyed transports need one geometry per id — repeated
         # ids (multipart parts exploded at ingest) keep the WKB column
         # so each PART row refines against its own part (reference
-        # semantics: parts are separate geometries, src/reader.cpp:44)
-        unique_ids=len({r[0] for r in rows}) == len(rows),
+        # semantics: parts are separate geometries, src/reader.cpp:44);
+        # a NULL id counts as one value
+        unique_ids=pc.count_distinct(table[id_col], mode="all").as_py() == table.num_rows,
         all_rects=all_rects,
         exploded_rows=int(ncell.sum()),
-        exploded_wkb_bytes=sum(
-            len(r[1]) * int(c) for r, c in zip(rows, ncell) if r[1] is not None
-        ),
+        exploded_wkb_bytes=int(pc.fill_null(pc.binary_length(wkb), 0).to_numpy() @ ncell),
         cells=cells,
         cells_src=cells_src,
     )
@@ -353,11 +357,11 @@ class PreparedPolygonLayer:
     """A geometry layer prepared once and reused across many joins of
     either kind — the Spark rebirth of the reference's build-once
     STRtree (src/spatial_join.cpp:14-21). Preparation is ONE driver
-    job, the dictionary collect; the layer then holds its
-    ``LayerAnalysis`` (collected rows, rect verification, closed-form
-    counts, the point-in-polygon cell classes) and caches each cell
-    tessellation it is joined with. A second join issues no new collect
-    and no new decode.
+    job, an Arrow collect of the layer's id, WKB and bounds columns;
+    the layer then holds its ``LayerAnalysis`` (the collected table,
+    rect verification, closed-form counts, the point-in-polygon cell
+    classes) and caches each cell tessellation it is joined with. A
+    second join issues no new collect and no new decode.
 
     Use for the steady-state shape of a 10^12-image pipeline: one
     (slowly-changing) polygon layer probed by an endless stream of
@@ -686,8 +690,8 @@ def polygon_join(
 
         refine_bc = make_pair_refine_broadcast(
             la.src.sparkSession,
-            [r[0] for r in la.rows], [r[1] for r in la.rows],
-            [r[0] for r in ra.rows], [r[1] for r in ra.rows],
+            la.table[la.id_col], la.table["geom_wkb"],
+            ra.table[ra.id_col], ra.table["geom_wkb"],
             predicate,
         )
 
@@ -729,6 +733,7 @@ def polygon_join(
     )
     if dedup == "refpoint":
         cand = cand.where(_refpoint_filter(cell_deg))
+    parity = ["l.cell_id"] if dedup == "parity" else []  # kept in pair output
     if extra_pair_filter is not None:
         cand = cand.where(extra_pair_filter)
 
@@ -740,8 +745,7 @@ def polygon_join(
         if predicate == "intersects":
             if mode == "count":
                 return cand.agg(F.count(F.lit(1)).alias("join_count"))
-            sel = ["lid", "rid"] + (["l.cell_id"] if dedup == "parity" else [])
-            return cand.select(*sel)
+            return cand.select("lid", "rid", *parity)
         w = F.least(F.col("l.maxx"), F.col("r.maxx")) - F.greatest(
             F.col("l.minx"), F.col("r.minx")
         )
@@ -796,9 +800,7 @@ def polygon_join(
                 "num_points",
                 refine_bc.asNondeterministic()(F.col("lid"), F.col("rid")),
             ).where(F.col("num_points") > 0)
-            sel = ["lid", "rid", "num_points"] + (
-                ["l.cell_id"] if dedup == "parity" else []
-            )
+            sel = ["lid", "rid", "num_points", *parity]
             both = gen_scored.select(*sel).unionByName(deg_scored.select(*sel))
             if mode == "count":
                 return both.agg(F.sum("num_points").alias("join_count"))
@@ -812,10 +814,7 @@ def polygon_join(
         scored = cand.withColumn("num_points", np_col)
         if mode == "count":
             return scored.agg(F.sum("num_points").alias("join_count"))
-        sel = ["lid", "rid", "num_points"] + (
-            ["l.cell_id"] if dedup == "parity" else []
-        )
-        return scored.select(*sel)
+        return scored.select("lid", "rid", "num_points", *parity)
 
     if refine_bc is not None:
         refine_args = (F.col("lid"), F.col("rid"))
@@ -828,8 +827,7 @@ def polygon_join(
         matched = cand.where(refine_udf(*refine_args))
         if mode == "count":
             return matched.agg(F.count(F.lit(1)).alias("join_count"))
-        sel = ["lid", "rid"] + (["l.cell_id"] if dedup == "parity" else [])
-        return matched.select(*sel)
+        return matched.select("lid", "rid", *parity)
 
     # numPoints-producing predicates
     if mode == "count":
@@ -854,7 +852,4 @@ def polygon_join(
     scored = cand.withColumn(
         "num_points", nd_udf(*refine_args)
     ).where(F.col("num_points") > 0)
-    sel = ["lid", "rid", "num_points"] + (
-        ["l.cell_id"] if dedup == "parity" else []
-    )
-    return scored.select(*sel)
+    return scored.select("lid", "rid", "num_points", *parity)

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import wkt as W
+from workstealing_spatial_join_spark.functions.exprs import cexpr, dlit
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -55,28 +56,39 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# The derived columns below are memoized SQL (functions/exprs.py): one
+# parse per process instead of one py4j round trip per operator node on
+# every call. ``D``-suffixed doubles and bare integer literals keep the
+# arithmetic exactly that of the fluent form (integer multiply and mod,
+# then one double division).
+
+
+def _centre_sql(key: str, mult: int, span: int, origin: float) -> str:
+    return f"({dlit(origin)} + ({key} * {mult} % {span}) / {dlit(1000.0)})"
+
+
 def customer_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer")
     return c.select(
-        F.col("c_custkey").alias("point_id"),
-        (F.lit(-180.0) + (F.col("c_custkey") * 9973 % 360000) / 1000.0).alias("lon"),
-        (F.lit(-90.0) + (F.col("c_custkey") * 7919 % 180000) / 1000.0).alias("lat"),
+        cexpr("c_custkey AS point_id"),
+        cexpr(f"{_centre_sql('c_custkey', 9973, 360000, -180.0)} AS lon"),
+        cexpr(f"{_centre_sql('c_custkey', 7919, 180000, -90.0)} AS lat"),
     )
 
 
 def _rect_select(df: DataFrame, key: str, mults: tuple, extents: tuple) -> DataFrame:
     mx, my = mults
     ew, eh, dw, dh, sw, sh = extents
-    cx = F.lit(-180.0) + (F.col(key) * mx % 360000) / 1000.0
-    cy = F.lit(-90.0) + (F.col(key) * my % 180000) / 1000.0
-    hw = F.lit(ew) + (F.col(key) % dw) / sw
-    hh = F.lit(eh) + (F.col(key) % dh) / sh
+    cx = _centre_sql(key, mx, 360000, -180.0)
+    cy = _centre_sql(key, my, 180000, -90.0)
+    hw = f"({dlit(ew)} + ({key} % {int(dw)}) / {dlit(sw)})"
+    hh = f"({dlit(eh)} + ({key} % {int(dh)}) / {dlit(sh)})"
     return df.select(
-        F.col(key).alias("rect_id"),
-        (cx - hw).alias("minx"),
-        (cy - hh).alias("miny"),
-        (cx + hw).alias("maxx"),
-        (cy + hh).alias("maxy"),
+        cexpr(f"{key} AS rect_id"),
+        cexpr(f"{cx} - {hw} AS minx"),
+        cexpr(f"{cy} - {hh} AS miny"),
+        cexpr(f"{cx} + {hw} AS maxx"),
+        cexpr(f"{cy} + {hh} AS maxy"),
     )
 
 
