@@ -104,6 +104,31 @@ def test_uncollected_side_is_never_forced():
     assert decided(plan_join(UNCOLLECTED, side(10), "intersects")) == ("right", "wkb")
 
 
+def test_cell_partitioned_layer_keeps_the_points_moving():
+    """A point probe against a cell-partitioned (prepared) layer joins
+    where the layer lies, whatever its size or transport; salting (hot
+    cells found) and polygon joins keep the broadcast rule."""
+    from dataclasses import replace
+
+    cells = classes(interior=5, boundary=5)
+    for layer, transport in (
+        (side(10, cells=cells), "rings"),
+        (side(10, rects=True), "catalyst-rect"),
+        (side(ROW_CAP + 1, cells=cells), "rings"),
+        (UNCOLLECTED, "wkb"),
+    ):
+        plan = plan_join(None, replace(layer, cell_partitioned=True), "contains")
+        assert (plan.broadcast_side, plan.transport, plan.partitioned_side) == (
+            None, transport, "right",
+        )
+        assert plan_join(None, layer, "contains").partitioned_side is None
+    prepared = replace(side(10, cells=cells), cell_partitioned=True)
+    salted = plan_join(None, prepared, "contains", salt_extra_rows=3)
+    assert (salted.broadcast_side, salted.partitioned_side) == ("right", None)
+    pair = plan_join(prepared, prepared, "intersects")
+    assert (pair.broadcast_side, pair.partitioned_side) == ("right", None)
+
+
 def test_smaller_fitting_side_replicates():
     assert plan_join(side(10), side(20), "intersects").broadcast_side == "left"
     assert plan_join(side(20), side(10), "intersects").broadcast_side == "right"

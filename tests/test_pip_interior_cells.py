@@ -153,14 +153,15 @@ def points_pdf():
     })
 
 
-def oracle_pairs(points_pdf):
-    """[(point_id, poly_id)] with multiplicity, by brute force."""
+def oracle_pairs(points_pdf, rows=None):
+    """[(point_id, poly_id)] with multiplicity, by brute force over
+    ``rows`` (default: the LAYER fixture's ``layer_rows()``)."""
     xs = points_pdf["lon"].to_numpy(dtype=np.float64)
     ys = points_pdf["lat"].to_numpy(dtype=np.float64)
     ids = points_pdf["image_id"].to_numpy()
     out = []
     with np.errstate(invalid="ignore"):
-        for pid, wkb, x0, y0, x1, y1 in layer_rows():
+        for pid, wkb, x0, y0, x1, y1 in rows or layer_rows():
             hit = np.zeros(len(xs), dtype=bool)
             if wkb is not None:
                 for gtype, rs in W.from_wkb(bytes(wkb)):
@@ -302,3 +303,98 @@ def test_open_ring_makes_its_row_boundary():
     open_ring = _classes(poly(ring((0, 0), (6, 0), (6, 3), (0, 3))))
     assert not any(open_ring.inner.to_pylist()[0])
     assert open_ring.exterior == 0
+
+
+# ------------------------- prepared (cell-partitioned) layer, adversarial
+#
+# A prepared layer's tessellation is cached partitioned by cell and the
+# join merges on it, shuffling only the points. Each case below runs
+# all five modes against the prepared layer and a fresh (broadcast)
+# layer and requires identical results, with the pairs equal to the
+# serial oracle.
+
+MODES = ("pairs", "count", "semi", "anti", "percell")
+LAYER_SCHEMA = (
+    "pid long, geom_wkb binary, minx double, miny double, maxx double, maxy double"
+)
+
+
+def every_mode(points, layer):
+    out = {}
+    for mode in MODES:
+        rows = point_in_polygon_join(points, layer, poly_id="pid", mode=mode).collect()
+        out[mode] = rows[0][0] if mode == "count" else sorted(map(tuple, rows))
+    return out
+
+
+def assert_prepared_equals_fresh(points, layer, points_pdf, rows, prepared=None):
+    prepared = prepared or PreparedPolygonLayer(layer, "pid")
+    got = every_mode(points, prepared)
+    assert got == every_mode(points, layer)
+    assert got["pairs"] == oracle_pairs(points_pdf, rows)
+    assert got["count"] == len(got["pairs"]) > 0 and got["anti"]
+    prepared.release()
+
+
+def stacked_rows():
+    """Many rows over the cell [5, 6] x [5, 6]: squares around (5.5, 5.5)
+    from well inside the cell (boundary rows) to far past it (interior
+    rows), triangles with (5.5, 5.5) on an edge or a vertex, and one
+    that misses it."""
+    rows = []
+    for i, half in enumerate(np.linspace(0.05, 3.0, 40)):
+        c = 5.5 + (i % 3 - 1) * 0.01
+        rows.append(poly(ring((c - half, c - half), (c + half, c - half),
+                              (c + half, c + half), (c - half, c + half),
+                              (c - half, c - half))))
+    rows.append(poly(ring((5, 5), (6, 5), (6, 6), (5, 5))))  # on its edge
+    rows.append(poly(ring((5.5, 5.5), (7, 5), (7, 7), (5.5, 5.5))))  # a vertex
+    rows.append(poly(ring((5.6, 5), (6, 5), (6, 6), (5.6, 5))))  # misses
+    out = []
+    for pid, wkb in enumerate(rows, start=100):
+        x0, y0, x1, y1 = map(float, layer_rows_bounds(wkb))
+        out.append((pid, bytearray(wkb), x0, y0, x1, y1))
+    return out
+
+
+def test_prepared_layer_many_points_at_one_coordinate(spark):
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    xs = np.concatenate([np.full(3000, 5.5), np.full(500, 5.0), rng.uniform(2, 9, 500)])
+    ys = np.concatenate([np.full(3000, 5.5), np.full(500, 5.0), rng.uniform(2, 9, 500)])
+    pdf = pd.DataFrame({"image_id": np.arange(len(xs), dtype=np.int64),
+                        "lon": xs, "lat": ys})
+    rows = stacked_rows()
+    points = spark.createDataFrame(pdf)
+    layer = spark.createDataFrame(rows, LAYER_SCHEMA)
+    assert_prepared_equals_fresh(points, layer, pdf, rows)
+
+
+@pytest.mark.parametrize("cached_at", [3, 13])
+def test_prepared_layer_after_shuffle_partitions_change(
+    spark, frames, points_pdf, cached_at
+):
+    """The layer's partition count is the session's at caching time; a
+    later change may make Spark shuffle both sides, never lose a pair."""
+    points, layer = frames
+    prepared = PreparedPolygonLayer(layer, "pid")
+    joined = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(cached_at))
+    try:
+        for transport in ("rings", "catalyst-rect"):
+            prepared.exploded(transport)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", joined)
+    assert prepared.exploded("rings").rdd.getNumPartitions() == cached_at
+    assert_prepared_equals_fresh(points, layer, points_pdf, layer_rows(), prepared)
+
+
+def test_prepared_layer_on_the_wkb_transport(frames, points_pdf, monkeypatch):
+    points, layer = frames
+    monkeypatch.setattr(SJ, "DICT_MAX_ROWS", 0)  # uncollected: WKB refine
+    prepared = PreparedPolygonLayer(layer, "pid")
+    audit = audit_plan(point_in_polygon_join(points, prepared, poly_id="pid"))
+    assert audit["sortmerge_joins"] == 1 and audit["broadcast_joins"] == 0
+    assert audit["python_nodes"]["ArrowEvalPython"] == 1
+    assert_prepared_equals_fresh(points, layer, points_pdf, layer_rows(), prepared)

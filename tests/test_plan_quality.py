@@ -2,11 +2,14 @@
 Python appears only as (a) the fixture/ingest sources and (b) exactly
 one refine UDF."""
 
+import re
+
 import pytest
 
 from workstealing_spatial_join_spark.operators import spatial_join as SJ
 from workstealing_spatial_join_spark.operators.ingest import ingest_geometry
 from workstealing_spatial_join_spark.operators.spatial_join import (
+    PreparedPolygonLayer,
     point_in_polygon_join,
     polygon_join,
 )
@@ -289,3 +292,100 @@ def test_salted_pip_keeps_broadcast_build_side(layers):
     audit = audit_plan(df)
     assert audit["broadcast_joins"] >= 1, audit["plan"][:2000]
     assert audit["sortmerge_joins"] == 0
+
+
+# ------------------------------------- prepared layer: cell-partitioned
+
+
+def _plan_nodes(plan: str):
+    """The formatted plan's tree as ``[(node_id, name, parent_index)]``:
+    a node's parent is the nearest earlier line whose name starts
+    further left."""
+    nodes = []
+    for line in plan.partition("\n\n(")[0].splitlines():
+        m = re.search(r"[A-Za-z]\w*", line)
+        i = re.search(r"\((\d+)\)", line)
+        if m and i:
+            parent = next(
+                (k for k in range(len(nodes) - 1, -1, -1) if nodes[k][3] < m.start()),
+                None,
+            )
+            nodes.append((i.group(1), m.group(0), parent, m.start()))
+    return [(nid, name, parent) for nid, name, parent, _ in nodes]
+
+
+def _subtree(nodes, root, stop=("InMemoryTableScan",)):
+    """Indices under ``root`` down to (and including) the first node
+    named in ``stop`` on each path."""
+    out = []
+    for k in range(root + 1, len(nodes)):
+        p = nodes[k][2]
+        if p == root or (p in out and nodes[p][1] not in stop):
+            out.append(k)
+    return out
+
+
+def test_prepared_layer_pip_merges_on_the_cached_cell_partitions(spark, layers):
+    """A prepared layer's tessellation is cached partitioned and sorted
+    by cell: the PIP join is ONE sort-merge join whose layer side is a
+    bare cached scan (no exchange, no sort between them), and the only
+    per-op exchange hashes the probe by cell_id into the layer's
+    partition count. Nothing is broadcast. (audit_plan also counts the
+    exchange inside the cached relation's own plan, so the asserts
+    read the join's children.)"""
+    images, polys = layers
+    layer = PreparedPolygonLayer(polys)
+    df = point_in_polygon_join(images, layer, mode="pairs")
+    audit = audit_plan(df)
+    nodes = _plan_nodes(audit["plan"])
+    names = [n for _, n, _ in nodes]
+    assert audit["sortmerge_joins"] == 1 and audit["broadcast_joins"] == 0
+    assert "BroadcastExchange" not in names
+    (smj,) = [k for k, n in enumerate(names) if n == "SortMergeJoin"]
+    probe, build = [k for k, (_, _, p) in enumerate(nodes) if p == smj]
+    build_path = [names[k] for k in _subtree(nodes, build)] + [names[build]]
+    assert "InMemoryTableScan" in build_path
+    assert not {"Exchange", "Sort"} & set(build_path), build_path
+    # per-op exchanges: every Exchange outside a cached relation's plan
+    cached = set()
+    for k, n in enumerate(names):
+        if n == "InMemoryRelation" or nodes[k][2] in cached:
+            cached.add(k)
+    per_op = [k for k, n in enumerate(names) if n == "Exchange" and k not in cached]
+    assert len(per_op) == 1 and per_op[0] in _subtree(nodes, probe)
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert re.search(
+        rf"\n\({nodes[per_op[0]][0]}\) Exchange\n(?:.*\n)*?"
+        rf"Arguments: hashpartitioning\(cell_id#\d+L, {partitions}\)",
+        audit["plan"],
+    ), audit["plan"][:4000]
+    layer.release()
+
+
+def test_fresh_layer_pip_still_broadcasts(layers):
+    images, polys = layers
+    audit = audit_plan(point_in_polygon_join(images, polys, mode="pairs"))
+    assert audit["broadcast_joins"] == 1 and audit["sortmerge_joins"] == 0
+
+
+def test_prepared_layer_second_op_runs_no_more_jobs(spark, layers):
+    """The first join materializes the layer's cache; every later op
+    runs the same jobs (no layer collect, no broadcast job)."""
+    images, polys = layers
+    layer = PreparedPolygonLayer(polys)
+    sc = spark.sparkContext
+    jobs, results = [], []
+    for rep in range(3):
+        group = f"prepared-op-{rep}-{id(layer)}"
+        sc.setJobGroup(group, group)
+        try:
+            results.append(
+                point_in_polygon_join(images, layer, mode="count").collect()[0][0]
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert results[0] == results[1] == results[2] > 0
+    assert jobs[2] <= jobs[1], jobs
+    layer.release()

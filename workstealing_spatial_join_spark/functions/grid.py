@@ -167,6 +167,22 @@ def cell_id_named(
     )
 
 
+def covering_cells_sql(
+    minx: str, miny: str, maxx: str, maxy: str,
+    cell_deg: float = DEFAULT_CELL_DEG,
+) -> str:
+    """Spark-SQL form of ``covering_cells_cols`` over column names."""
+    x0 = _spark_sql_cell_x(minx, cell_deg)
+    x1 = _spark_sql_cell_x(maxx, cell_deg)
+    y0 = _spark_sql_cell_y(miny, cell_deg)
+    y1 = _spark_sql_cell_y(maxy, cell_deg)
+    return (
+        f"flatten(transform(sequence({x0}, {x1}), "
+        f"x -> transform(sequence({y0}, {y1}), "
+        f"y -> x * 4294967296L + y)))"
+    )
+
+
 def covering_cells_named(
     minx: str, miny: str, maxx: str, maxy: str,
     cell_deg: float = DEFAULT_CELL_DEG,
@@ -174,15 +190,7 @@ def covering_cells_named(
     """``covering_cells_cols`` over column NAMES — parsed once."""
     from workstealing_spatial_join_spark.functions.exprs import cexpr
 
-    x0 = _spark_sql_cell_x(minx, cell_deg)
-    x1 = _spark_sql_cell_x(maxx, cell_deg)
-    y0 = _spark_sql_cell_y(miny, cell_deg)
-    y1 = _spark_sql_cell_y(maxy, cell_deg)
-    return cexpr(
-        f"flatten(transform(sequence({x0}, {x1}), "
-        f"x -> transform(sequence({y0}, {y1}), "
-        f"y -> x * 4294967296L + y)))"
-    )
+    return cexpr(covering_cells_sql(minx, miny, maxx, maxy, cell_deg))
 
 
 def covering_cells_cols(

@@ -8,8 +8,9 @@ Re-creates the reference's join family (SURVEY.md §2.3):
 * F3 MBR pre-filter / F4 same-cell scope → cell equi-join + Catalyst
   residual bounds predicate (no UDF in the filter phase)
 
-Physical plan (all declared via DataFrame API; Catalyst + AQE pick
-broadcast vs shuffled-hash vs SMJ and split skewed partitions):
+Physical plan (all declared via DataFrame API; plans.planner.plan_join
+forces a broadcast or a merge where it knows the sizes, Catalyst + AQE
+decide the rest and split skewed partitions):
 
     scan → cell tessellation (floor/sequence/explode, codegen'd)
          → equi-join on cell_id  (+ salt when a cost table says so)
@@ -17,6 +18,13 @@ broadcast vs shuffled-hash vs SMJ and split skewed partitions):
          → exact refine
          → dedup (reference-point rule, Catalyst) / parity multiplicity
          → agg or pair materialization
+
+Where the equi-join runs: a fresh polygon layer is broadcast to the
+points (the reference's J4 fragment-and-replicate). A
+``PreparedPolygonLayer`` caches its tessellation partitioned and sorted
+by cell_id — the reference's layers pre-partitioned by cell
+(tests/main.cpp:99-104) — so a point-in-polygon join against it is a
+sort-merge join that shuffles only the points; the layer never moves.
 
 The exact refine of a point-in-polygon join against a collected layer
 is Catalyst too: the driver classified each polygon's covering cells
@@ -44,7 +52,7 @@ intersection — a pure-Catalyst filter, no extra shuffle.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
@@ -260,6 +268,9 @@ class LayerAnalysis:
     exploded_wkb_bytes: int | None = None  # Σ len(wkb) × covering cells
     cells: CellClasses | None = None
     cells_src: DataFrame | None = None
+    # its tessellations are cached partitioned by cell_id (a prepared
+    # layer): a point probe joins where they lie
+    cell_partitioned: bool = False
 
     @cached_property
     def cell_counts(self):
@@ -272,15 +283,23 @@ class LayerAnalysis:
         """Cell tessellation for a refine transport: (poly_id,
         minx..maxy, cell_id), plus geom_wkb for "wkb", and for "rings"
         only the non-exterior cells with their ``inner`` flag and the
-        ``rings`` of boundary rows (NULL on interior rows)."""
-        cols = [F.col(self.id_col).alias("poly_id"), *_BOUNDS]
+        ``rings`` of boundary rows (NULL on interior rows). One
+        projection of memoized SQL expressions (functions/exprs.py)."""
+        from workstealing_spatial_join_spark.functions.exprs import cexpr
+
+        sql = [f"`{self.id_col}` AS poly_id", *_BOUNDS]
         if transport == "rings":
-            return self.cells_src.select(
-                *cols, F.inline(F.arrays_zip("cells", "inner", "rings"))
-            ).withColumnRenamed("cells", "cell_id")
-        if transport == "wkb":
-            cols.append("geom_wkb")
-        return tessellate_bbox(self.src.select(*cols), self.cell_deg)
+            src = self.cells_src
+            sql.append(
+                "inline(arrays_zip(cells, inner, rings)) AS (cell_id, inner, rings)"
+            )
+        else:
+            src = self.src
+            if transport == "wkb":
+                sql.append("geom_wkb")
+            cells = GRID.covering_cells_sql(*_BOUNDS, self.cell_deg)
+            sql.append(f"explode({cells}) AS cell_id")
+        return src.select(*map(cexpr, sql))
 
 
 def _local_geom_frame(
@@ -363,6 +382,13 @@ class PreparedPolygonLayer:
     classes) and caches each cell tessellation it is joined with. A
     second join issues no new collect and no new decode.
 
+    Each cached tessellation is partitioned by ``cell_id`` — the
+    reference's pre-partitioned layers, sharded by cell
+    (tests/main.cpp:99-104) — so a point-in-polygon join against the
+    layer is a sort-merge join that shuffles only the points: the
+    layer's cached partitions never move, and no join re-broadcasts
+    them. Polygon joins read the same caches under the broadcast rule.
+
     Use for the steady-state shape of a 10^12-image pipeline: one
     (slowly-changing) polygon layer probed by an endless stream of
     image batches."""
@@ -373,14 +399,29 @@ class PreparedPolygonLayer:
         poly_id: str = "polygon_id",
         cell_deg: float = GRID.DEFAULT_CELL_DEG,
     ):
-        self.analysis = _analyze_layer(polygons, poly_id, cell_deg, classify=True)
+        self.analysis = replace(
+            _analyze_layer(polygons, poly_id, cell_deg, classify=True),
+            cell_partitioned=True,
+        )
         self._exploded: dict[str, DataFrame] = {}
 
     def exploded(self, transport: str) -> DataFrame:
         """The analysis' tessellation, cached (Spark .cache()) per
-        transport; the first join materializes it."""
+        transport, hash-partitioned by ``cell_id`` into the session's
+        ``spark.sql.shuffle.partitions`` at caching time and sorted by
+        ``cell_id`` within each partition — the distribution and
+        order a sort-merge join on the cell needs. The first request
+        materializes it (one job): an unexecuted adaptive cached plan
+        reports no partitioning, and the join would then shuffle and
+        sort the layer too."""
         if transport not in self._exploded:
-            self._exploded[transport] = self.analysis.tessellate(transport).cache()
+            tess = self.analysis.tessellate(transport)
+            n = int(tess.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            cached = (
+                tess.repartition(n, "cell_id").sortWithinPartitions("cell_id").cache()
+            )
+            cached.count()
+            self._exploded[transport] = cached
         return self._exploded[transport]
 
     def release(self) -> int:
@@ -418,8 +459,7 @@ def _join_side(
 
 
 def _hot_cells(
-    probe: DataFrame, build: LayerAnalysis, build_cells: DataFrame,
-    target_pairs: int,
+    probe: DataFrame, build: LayerAnalysis, build_tessellate, target_pairs: int,
 ):
     """LB1 rebirth: cost-estimated salting of hot cells (see
     operators/skew.py) — bounds the largest join group the way
@@ -429,7 +469,9 @@ def _hot_cells(
     row per cell whose est_pairs exceed the task target) and replays
     it as a local frame, so the salting joins do not each re-run the
     aggregates behind it. The build side's per-cell counts come from
-    the analysis' closed form when it was collected. Returns
+    the analysis' closed form when it was collected; only an
+    uncollected build side is tessellated (``build_tessellate``) and
+    aggregated. Returns
     ``(hot cells frame, rows salting adds to the build side)``, or
     ``(None, None)`` when no cell is hot: then the honest LB1 decision
     is to not pay the salting machinery at all (probe-side salt join,
@@ -439,9 +481,10 @@ def _hot_cells(
     a no-op)."""
     from workstealing_spatial_join_spark.operators.skew import cell_cost_table
 
+    counts = build.cell_counts
     cost = cell_cost_table(
-        probe, build_cells, target_pairs=target_pairs,
-        right_cell_counts=build.cell_counts,
+        probe, None if counts is not None else build_tessellate("catalyst-rect"),
+        target_pairs=target_pairs, right_cell_counts=counts,
     ).where(F.col("n_salt") > 1)
     rows = cost.collect()
     if not rows:
@@ -454,9 +497,10 @@ def _spread_probe(pts: DataFrame, mode: str) -> DataFrame:
     """Spread the probe side over 2× the default parallelism before the
     WKB transport's Python refine: under a broadcast join the refine
     runs on the probe's scan splits, so a compact input would serialize
-    it. Fine tasks let the scheduler absorb stragglers — the reference's
-    TASKS_PER_JOB=20 chunking (include/global_var.h:26) at Spark task
-    level.
+    it (a join against a cell-partitioned layer shuffles the probe by
+    cell anyway and skips this). Fine tasks let the scheduler absorb
+    stragglers — the reference's TASKS_PER_JOB=20 chunking
+    (include/global_var.h:26) at Spark task level.
 
     HASH partitioning, not round-robin: a keyless repartition first
     pays a full local sort of its input
@@ -502,8 +546,11 @@ def point_in_polygon_join(
     without any dedup shuffle. ``mode='percell'`` keeps the polygon's
     cell replication visible (reference §3.2 parity diagnostics).
 
-    The broadcast side and the refine transport come from
-    ``plans.planner.plan_join``: the MBR predicate alone when every
+    The join placement and the refine transport come from
+    ``plans.planner.plan_join``. A ``PreparedPolygonLayer`` stays where
+    its cell-partitioned cache lies (a sort-merge join; the points
+    shuffle by cell) unless salting re-keys it; a fresh layer is
+    broadcast when it fits. Transport: the MBR predicate alone when every
     polygon is its MBR; for any other collected layer the interior-cell
     classes (functions/interior_cells.py) — exterior cells dropped,
     interior cells matched on the MBR alone, boundary cells ray-cast in
@@ -542,14 +589,18 @@ def point_in_polygon_join(
     # per-cell counts, and the refine repartition would pay that
     # exchange a second time (the main query re-executes it anyway)
     hot, extra = (
-        _hot_cells(pts, layer, tessellate("catalyst-rect"), target_pairs_per_task)
+        _hot_cells(pts, layer, tessellate, target_pairs_per_task)
         if salt else (None, None)
     )
     plan = plan_join(
         None, layer, "contains" if refine else None, salt_extra_rows=extra
     )
     polys = tessellate(plan.transport)
-    if plan.transport == "wkb":
+    if plan.partitioned_side == "right":
+        # the layer's cache is already partitioned and sorted by cell:
+        # merge where it lies, and only the points shuffle (by cell)
+        polys = polys.hint("merge")
+    elif plan.transport == "wkb":
         # only the Python refine needs the spread; a pure-Catalyst plan
         # runs fine on the scan splits
         pts = _spread_probe(pts, mode)
@@ -672,8 +723,7 @@ def polygon_join(
     # side is replicated across salts in hot cells only
     hot, extra = (
         _hot_cells(
-            l_tess("catalyst-rect"), ra, r_tess("catalyst-rect"),
-            target_pairs_per_task,
+            l_tess("catalyst-rect"), ra, r_tess, target_pairs_per_task,
         )
         if salt else (None, None)
     )

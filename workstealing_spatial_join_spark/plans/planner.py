@@ -4,12 +4,16 @@ the audit that the produced plan has the shape the engine promises
 
 ``plan_join`` is the reference's J4 fragment-and-replicate choice
 (tests/main.cpp:189-274) — replicate a side when it fits, the smaller
-one when both do — plus the choice of refine transport. It reads only
-the exact figures each join already holds for its geometry sides
+one when both do — plus the choice of refine transport. A prepared
+polygon layer probed by points takes the reference's pre-partitioned
+shape instead (tests/main.cpp:99-104): its tessellation is cached
+partitioned by cell, and only the points move. It reads only the exact
+figures each join already holds for its geometry sides
 (``operators.spatial_join.LayerAnalysis``: closed-form exploded rows,
 collected WKB bytes, id uniqueness, rectangle verification, interior
-cell classes), so it runs no job and trusts no estimate. Where it
-forces nothing (an uncollected side), Catalyst/AQE still decide.
+cell classes, cell partitioning), so it runs no job and trusts no
+estimate. Where it forces nothing (an uncollected side), Catalyst/AQE
+still decide.
 """
 
 from __future__ import annotations
@@ -30,6 +34,9 @@ BROADCAST_BUDGET_BYTES = 2_000_000 * BOUNDS_ROW_BYTES
 class JoinPlan:
     broadcast_side: str | None  # "left" | "right" | None (AQE decides)
     transport: str  # "catalyst-rect" | "rings" | "dict" | "wkb"
+    # "right": that side is cached partitioned and sorted by cell_id;
+    # the join merges on it and shuffles only the other side
+    partitioned_side: str | None = None
 
 
 def _build_bytes(side, transport: str, extra_rows: int = 0) -> int | None:
@@ -67,6 +74,16 @@ def plan_join(
     side; when set, the left side is the salted probe and never
     broadcast.
 
+    Placement: a point probe (``left`` None) against a layer whose
+    cached tessellation is already partitioned by cell
+    (``cell_partitioned``, a ``PreparedPolygonLayer``) joins where the
+    layer lies — a sort-merge join on ``cell_id`` that shuffles only
+    the points, so no op re-collects, re-hashes or re-broadcasts the
+    layer. Salting re-keys the build side, so a salted join (hot cells
+    found) falls back to the broadcast rule, as do fresh layers and
+    polygon joins: the smaller side that fits the budget is
+    broadcast.
+
     Transport: ``catalyst-rect`` when the MBR predicate is the whole
     refine (every geometry equals its MBR; union also needs the
     id-keyed dict for its degenerate residual); for ``contains``,
@@ -90,6 +107,8 @@ def plan_join(
     else:
         transport = "wkb"
 
+    if left is None and right.cell_partitioned and salt_extra_rows is None:
+        return JoinPlan(None, transport, partitioned_side="right")
     sizes = {
         "left": (
             None if salt_extra_rows is not None else _build_bytes(left, transport)
