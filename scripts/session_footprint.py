@@ -16,6 +16,13 @@ again.
 The session's cores and driver heap follow ``get_spark``'s defaults
 (``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` override). ``--json``
 prints one JSON object instead of the tables.
+
+It also reports how long ``get_spark`` took (``get_spark_s``) and the
+AppCDS archive the driver JVM has mapped (``cds_archive``, from
+``/proc/<pid>/maps``; the JDK's own base archive is left out), or null.
+A class path that differs from the archive's turns sharing off without
+any error, so null after an earlier run has built the archive means the
+session lost it.
 """
 
 from __future__ import annotations
@@ -89,6 +96,21 @@ def footprint() -> list[dict]:
     return procs
 
 
+def cds_archive(procs: list[dict]) -> str | None:
+    """The application archive mapped in the tree's JVM, if any."""
+    for p in procs:
+        if p["role"] != "jvm":
+            continue
+        try:
+            maps = Path(f"/proc/{p['pid']}/maps").read_text()
+        except OSError:
+            return None
+        paths = {line.split()[-1] for line in maps.splitlines() if line.endswith(".jsa")}
+        # the JDK's base archive (lib/server/classes.jsa) is mapped always
+        return next((q for q in sorted(paths) if "/lib/server/" not in q), None)
+    return None
+
+
 def python_query(spark) -> dict:
     """Sum ``range(ROWS)`` through an identity pandas UDF."""
     from pyspark.sql import functions as F
@@ -125,17 +147,21 @@ def main() -> None:
 
     t0 = time.perf_counter()
     spark = get_spark("session_footprint")
-    start_s = round(time.perf_counter() - t0, 3)
+    get_spark_s = round(time.perf_counter() - t0, 3)
     after_start = footprint()
+    archive = cds_archive(after_start)
     query = python_query(spark)
     after_query = footprint()
     spark.stop()
 
     if args.json:
-        print(json.dumps({"start_s": start_s, "after_start": after_start,
-                          "query": query, "after_query": after_query}))
+        print(json.dumps({"get_spark_s": get_spark_s, "cds_archive": archive,
+                          "after_start": after_start, "query": query,
+                          "after_query": after_query}))
         return
-    print(_table(f"after session start ({start_s} s)", after_start))
+    print(f"get_spark: {get_spark_s} s, CDS archive: {archive}")
+    print()
+    print(_table("after session start", after_start))
     print()
     print(f"pandas-UDF sum: {query['sum']} (expected {query['expected']}), {query['s']} s")
     print()

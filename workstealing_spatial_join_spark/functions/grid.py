@@ -86,16 +86,6 @@ def k_ring(cx: int, cy: int, k: int, cell_deg: float = DEFAULT_CELL_DEG) -> np.n
     return (xs[:, None] * _SHIFT + ys[None, :]).ravel()
 
 
-def cell_bounds(cid: int, cell_deg: float = DEFAULT_CELL_DEG):
-    cx, cy = divmod(int(cid), int(_SHIFT))
-    return (
-        cx * cell_deg - 180.0,
-        cy * cell_deg - 90.0,
-        (cx + 1) * cell_deg - 180.0,
-        (cy + 1) * cell_deg - 90.0,
-    )
-
-
 # ---------------------------------------------------------- Catalyst
 
 

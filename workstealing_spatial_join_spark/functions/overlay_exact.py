@@ -1207,16 +1207,6 @@ def union_num_points_exact(
 # -------------------------------------------------- line kernels
 
 
-def _on_any_ring(rings, m) -> bool:
-    for ring in rings:
-        n = len(ring)
-        for i in range(n):
-            a, b = ring[i], ring[(i + 1) % n]
-            if _on_seg(a, b, m):
-                return True
-    return False
-
-
 def _on_path(path, m) -> bool:
     for i in range(len(path) - 1):
         if _on_seg(path[i], path[i + 1], m):

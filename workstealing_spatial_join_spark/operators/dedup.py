@@ -366,20 +366,6 @@ def minhash_sig_shingles_udf(num_perm: int = 64, shingle_k: int = SHINGLE_K,
     return sig_sh
 
 
-def band_bucket_col(sig, band: int, rows_per_band: int):
-    """Deterministic band bucket: the band's signature slice itself
-    (array<long> — Spark joins/groups on array equality natively).
-    Two documents share a bucket iff their band slices are EQUAL,
-    which is exactly the banded-LSH candidate rule the SQL oracle
-    replays (it stringifies slices; slice equality and string
-    equality coincide for fixed-width bands). The earlier
-    concat_ws-of-strings key built 16 strings per row through the
-    join — pure codegen weight for the identical candidate set.
-    minhash_dedup inlines the same slices via selectExpr; this
-    Column form is kept for callers composing their own banding."""
-    return F.slice(sig, band * rows_per_band + 1, rows_per_band)
-
-
 def minhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -605,28 +591,6 @@ def minhash_dedup(
         .where(F.col("jaccard") >= threshold)
         .select("doc_id_a", "doc_id_b", "jaccard")
     )
-
-
-def ngram_jaccard_udf(k: int = SHINGLE_K):
-    @F.pandas_udf(T.DoubleType())
-    def jac(a: pd.Series, b: pd.Series) -> pd.Series:
-        # a doc participates in many candidate pairs — shingle each
-        # unique text once per batch. The shingle code is injective,
-        # so hash-set Jaccard IS shingle-set Jaccard (exact).
-        codes_a, uniq_a = pd.factorize(a.fillna(""))
-        codes_b, uniq_b = pd.factorize(b.fillna(""))
-        sh_a = [_shingle_hashes(t, k) for t in uniq_a]
-        sh_b = [_shingle_hashes(t, k) for t in uniq_b]
-        out = np.zeros(len(a))
-        for i in range(len(a)):
-            sa = sh_a[codes_a[i]]
-            sb = sh_b[codes_b[i]]
-            inter = np.intersect1d(sa, sb, assume_unique=True).size
-            union = sa.size + sb.size - inter
-            out[i] = inter / union if union else 0.0
-        return pd.Series(out)
-
-    return jac
 
 
 # -------------------------------------------------------------- simhash
@@ -927,23 +891,6 @@ def embedding_neardup(
         .where(F.col("cosine") >= threshold)
         .select("vec_id_a", "vec_id_b", "cosine")
     )
-
-
-def shingle_set_udf(shingle_k: int = SHINGLE_K):
-    """Arrow UDF: unique byte k-shingle codes per document (the same
-    injective base-257 family every dedup oracle recomputes in SQL).
-    Exact-dup texts within a batch shingle once (factorize)."""
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sh(text: pd.Series) -> pd.Series:
-        codes, uniques = pd.factorize(text.fillna(""))
-        sets = [
-            _shingle_hashes(s or "", shingle_k).astype(np.int64).tolist()
-            for s in uniques
-        ]
-        return pd.Series([sets[c] for c in codes])
-
-    return sh
 
 
 def wordgram_hashes_col(text, w: int = 8):

@@ -10,12 +10,58 @@ Session start warms the JVM side only (``_warm_jvm_stack``): one tiny
 scan-shuffle-aggregate job pays classloading and codegen up front. The
 Python worker pool is not started with the session; Spark forks it, from
 the ``daemon_preload`` daemon, at the first plan that has a Python stage.
+
+The driver JVM maps an AppCDS (application class-data sharing) archive
+of the ~17k classes a Spark session loads, so a launch reads them from
+one mapped file instead of parsing and verifying them from the jars.
+What is cached, and where:
+
+- ``.jvm-cds/<key>.jsa`` in the checkout (git-ignored), 145–195 MB.
+  The key hashes the JDK (its ``java`` and ``libjvm.so``), Spark's jars
+  (name, size, mtime) and every setting that adds a class path entry,
+  so a new JDK, a new Spark or a moved checkout starts a new archive.
+  Deleting the directory forces a rebuild.
+- The first launch that finds no archive for its key runs with
+  ``-XX:ArchiveClassesAtExit=<key>.<pid>.jsa`` and records its class
+  path and JVM pid in ``<key>.<pid>.json``. The JVM writes the archive
+  as it exits.
+- A later launch adopts that file only once its JVM has exited and a
+  ``java -Xshare:on`` probe against the recorded class path exits 0;
+  it then renames it to ``<key>.jsa`` (``os.replace``). A file that
+  fails the probe is deleted: JDK 17 dies of SIGBUS on a truncated
+  archive instead of falling back, so nothing unprobed is mapped.
+- Every launch with an archive passes ``-XX:SharedArchiveFile`` through
+  ``spark.driver.defaultJavaOptions``, ahead of any value the caller
+  set there; ``spark.driver.extraJavaOptions`` is left to the caller.
+
+The JVM refuses to dump while a non-empty directory is on the class
+path, and Spark puts ``$SPARK_CONF_DIR`` first on it. So the launch
+points ``SPARK_CONF_DIR`` at the empty ``.jvm-cds/conf``. Sharing is
+skipped, and the JVM launched exactly as without it, when that could
+change what Spark reads or when the archive cannot be kept: the
+configured conf directory holds a file other than ``*.template``,
+``HADOOP_CONF_DIR`` or ``YARN_CONF_DIR`` is set, the caller's driver
+Java options already choose a CDS mode, the directory is not writable,
+or the JVM is already running (a second ``get_spark`` in one process,
+or a driver started by ``spark-submit``). A class path that differs
+from the archive's makes the JVM run without it, silently:
+``scripts/session_footprint.py`` reports the archive the driver JVM
+has mapped (``cds_archive``).
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import shutil
+import subprocess
+from contextlib import contextmanager, nullcontext
+from pathlib import Path
+from typing import NamedTuple
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -59,6 +105,199 @@ def _pythonpath_with_package() -> str:
     if root in existing.split(os.pathsep):
         return existing
     return root + (os.pathsep + existing if existing else "")
+
+
+CDS_DIR = Path(__file__).resolve().parent.parent / ".jvm-cds"
+# a caller's driver option naming any of these already chose a CDS mode
+_CDS_FLAGS = ("-Xshare", "SharedArchiveFile", "ArchiveClassesAtExit")
+_DRIVER_JAVA_OPTIONS = ("spark.driver.defaultJavaOptions", "spark.driver.extraJavaOptions")
+_PROBE_TIMEOUT_S = 60
+
+
+class _Cds(NamedTuple):
+    option: str  # -XX:SharedArchiveFile=… or -XX:ArchiveClassesAtExit=…
+    conf_dir: str  # the empty SPARK_CONF_DIR of every archived launch
+    record: Path | None  # where a dumping launch records its JVM
+
+
+def _java() -> str | None:
+    """The ``java`` Spark's launcher runs: ``$JAVA_HOME/bin/java``,
+    else the one on PATH."""
+    home = os.environ.get("JAVA_HOME")
+    return os.path.join(home, "bin", "java") if home else shutil.which("java")
+
+
+def _conf_dir_is_inert(spark_home: str) -> bool:
+    """True when the configured Spark conf directory holds nothing Spark
+    reads (only ``*.template`` files, or no directory at all)."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        return all(n.endswith(".template") for n in os.listdir(conf_dir))
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+
+
+def _cds_key(java: str, spark_home: str, conf_dir: str, extra_conf: dict) -> str:
+    """Hash of what fixes the archive's JVM build and class path."""
+    h = hashlib.sha256()
+    real = os.path.realpath(java)
+    libjvm = os.path.join(os.path.dirname(os.path.dirname(real)), "lib", "server", "libjvm.so")
+    jars = sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name)
+    for path in (real, libjvm, *(e.path for e in jars)):
+        try:
+            st = os.stat(path)
+        except OSError:
+            st = None
+        h.update(repr((path, st and (st.st_size, st.st_mtime_ns))).encode())
+    h.update(repr((
+        conf_dir,
+        os.environ.get("SPARK_CLASSPATH"),
+        os.environ.get("SPARK_DIST_CLASSPATH"),
+        os.environ.get("PYSPARK_SUBMIT_ARGS"),
+        extra_conf.get("spark.driver.extraClassPath"),
+    )).encode())
+    return h.hexdigest()[:16]
+
+
+def _process_start(pid: int) -> str | None:
+    """Start time of a live process (``/proc/<pid>/stat`` field 22)."""
+    try:
+        stat = Path(f"/proc/{pid}/stat").read_text()
+    except OSError:
+        return None
+    return stat[stat.rindex(")") + 2:].split()[19]
+
+
+def _running(pid: int, start: str | None) -> bool:
+    """Whether a recorded process still runs; the start time keeps a
+    reused pid from passing for it."""
+    return start is not None and _process_start(pid) == start
+
+
+def _probe(java: str, archive: Path, classpath: str) -> bool | None:
+    """Whether a JVM starts with ``archive`` mapped and sharing forced on
+    (None: the probe itself could not run). Its crash report goes into
+    the archive directory, not the caller's working directory."""
+    try:
+        return subprocess.run(
+            [java, "-Xshare:on", f"-XX:SharedArchiveFile={archive}",
+             f"-XX:ErrorFile={archive.parent / 'probe_hs_err_%p.log'}",
+             "-XX:-CreateCoredumpOnCrash", "-cp", classpath, "-version"],
+            stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL,
+            stderr=subprocess.DEVNULL, timeout=_PROBE_TIMEOUT_S,
+        ).returncode == 0
+    except (OSError, subprocess.TimeoutExpired):
+        return None
+
+
+def _read_record(record: Path) -> tuple[str, int, str] | None:
+    """``(classpath, jvm_pid, jvm_start)`` of a dumping launch, or None."""
+    try:
+        rec = json.loads(record.read_text())
+        return rec["classpath"], int(rec["jvm_pid"]), rec["jvm_start"]
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
+def _settle_dumps(java: str, key: str) -> tuple[Path | None, bool]:
+    """``(archive, pending)``: the adopted archive of ``key``, if any, and
+    whether a JVM that is to dump one is still running.
+
+    A dump whose JVM has exited is probed while no archive is adopted;
+    the first that passes is renamed into place. Every other finished
+    dump is deleted, and so is a dump its launch never recorded."""
+    final = CDS_DIR / f"{key}.jsa"
+    pending = False
+    for record in sorted(CDS_DIR.glob(f"{key}.*.json")):
+        jsa = record.with_suffix(".jsa")
+        classpath, pid, start = _read_record(record) or (None, 0, None)
+        if _running(pid, start):
+            pending = True  # still running, or still writing its archive
+            continue
+        if classpath and jsa.exists() and not final.exists():
+            passed = _probe(java, jsa, classpath)
+            if passed is None:
+                continue  # the probe could not run; a later launch decides
+            if passed:
+                try:
+                    os.replace(jsa, final)
+                except FileNotFoundError:
+                    pass  # a concurrent launch adopted it first
+        jsa.unlink(missing_ok=True)
+        record.unlink(missing_ok=True)
+    for jsa in CDS_DIR.glob(f"{key}.*.jsa"):
+        if not jsa.with_suffix(".json").exists():
+            jsa.unlink(missing_ok=True)
+    return (final if final.exists() else None), pending
+
+
+def _plan_cds(extra_conf: dict) -> _Cds | None:
+    """This launch's CDS setting, or None to launch the driver JVM as
+    without sharing (the module docstring says when)."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None  # no JVM is launched here
+    if os.environ.get("HADOOP_CONF_DIR") or os.environ.get("YARN_CONF_DIR"):
+        return None  # Spark would put them on the class path
+    opts = [str(extra_conf.get(k, "")) for k in _DRIVER_JAVA_OPTIONS]
+    opts.append(os.environ.get("SPARK_SUBMIT_OPTS", ""))
+    if any(flag in o for o in opts for flag in _CDS_FLAGS):
+        return None
+    if any(c.isspace() or c in "\"'\\" for c in str(CDS_DIR)):
+        return None  # the option string would split it
+    java = _java()
+    if not java:
+        return None
+    spark_home = _find_spark_home()
+    if not _conf_dir_is_inert(spark_home):
+        return None
+    conf_dir = CDS_DIR / "conf"
+    try:
+        conf_dir.mkdir(parents=True, exist_ok=True)
+        if not os.access(CDS_DIR, os.W_OK) or any(conf_dir.iterdir()):
+            return None
+        key = _cds_key(java, spark_home, str(conf_dir), extra_conf)
+        archive, pending = _settle_dumps(java, key)
+    except OSError:
+        return None
+    if archive:
+        return _Cds(f"-XX:SharedArchiveFile={archive}", str(conf_dir), None)
+    if pending:
+        return None  # one dump at a time
+    dump = CDS_DIR / f"{key}.{os.getpid()}.jsa"
+    # -Xlog: the dump warns once per class it skips (thousands of lines)
+    return _Cds(f"-XX:ArchiveClassesAtExit={dump} -Xlog:cds=error",
+                str(conf_dir), dump.with_suffix(".json"))
+
+
+def _record_dump(spark: SparkSession, record: Path) -> None:
+    """Record the dumping JVM: the class path its archive's probe needs,
+    and its pid and start time (its file is not probed while it runs)."""
+    jvm = spark._jvm
+    pid = int(jvm.java.lang.ProcessHandle.current().pid())
+    rec = {"classpath": jvm.java.lang.System.getProperty("java.class.path"),
+           "jvm_pid": pid, "jvm_start": _process_start(pid)}
+    tmp = record.with_suffix(".json.tmp")
+    try:
+        tmp.write_text(json.dumps(rec))
+        os.replace(tmp, record)
+    except OSError:
+        pass  # unrecorded, the dump is deleted by the next launch
+
+
+@contextmanager
+def _spark_conf_dir(path: str):
+    """``SPARK_CONF_DIR`` is ``path`` inside the block (the JVM launch)."""
+    old = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = path
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = old
 
 
 def _warm_jvm_stack(spark: SparkSession, cores: int) -> None:
@@ -110,6 +349,16 @@ def get_spark(
     pool (daemon ``daemon_preload`` plus one worker per concurrent task)
     forks on first use, at the first Python stage, and is reused from
     then on.
+
+    A call that launches the driver JVM maps the checkout's AppCDS
+    archive (``.jvm-cds/<key>.jsa``) when it has one, and otherwise has
+    the JVM dump one as it exits, for the next launch to probe and adopt.
+    The archive is rebuilt when its key changes (another JDK, Spark jars
+    or class path) or the directory is deleted. It is skipped, and the
+    JVM launched as before, when the configured Spark conf directory
+    holds a file Spark reads, ``HADOOP_CONF_DIR`` or ``YARN_CONF_DIR`` is
+    set, the caller's driver Java options choose a CDS mode, or the
+    directory is not writable; the module docstring has the details.
     """
     cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
@@ -118,6 +367,12 @@ def get_spark(
     # a context already exists — workers then import via cwd/PYTHONPATH
     # exactly as the engine's UDFs already require)
     os.environ["PYTHONPATH"] = _pythonpath_with_package()
+    extra_conf = dict(extra_conf or {})
+    cds = _plan_cds(extra_conf)
+    if cds:
+        caller = extra_conf.get("spark.driver.defaultJavaOptions")
+        extra_conf["spark.driver.defaultJavaOptions"] = (
+            f"{cds.option} {caller}" if caller else cds.option)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -154,9 +409,12 @@ def get_spark(
             ),
         )
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _spark_conf_dir(cds.conf_dir) if cds else nullcontext():
+        spark = builder.getOrCreate()
+    if cds and cds.record:
+        _record_dump(spark, cds.record)
     spark.sparkContext.setLogLevel("WARN")
     _warm_jvm_stack(spark, cores)
     return spark

@@ -33,10 +33,6 @@ POLYGONS_SCHEMA = (
     "polygon_id string, wkt string, minx double, miny double, "
     "maxx double, maxy double"
 )
-LINES_SCHEMA = (
-    "line_id string, wkt string, minx double, miny double, "
-    "maxx double, maxy double"
-)
 
 
 def _img_row(i: int, with_bytes: bool = True) -> dict:
@@ -177,13 +173,3 @@ def _line_row(j: int) -> dict:
 
 def lines_pdf(n: int) -> pd.DataFrame:
     return pd.DataFrame([_line_row(j) for j in range(n)])
-
-
-def lines_df(spark: SparkSession, n: int) -> DataFrame:
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame([_line_row(int(j)) for j in pdf["id"]])
-
-    return spark.range(n, numPartitions=max(1, min(n // 500, 128))).mapInPandas(
-        gen, LINES_SCHEMA
-    )

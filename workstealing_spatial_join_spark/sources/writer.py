@@ -30,16 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def _manifest_partitions(spark: SparkSession, table_path: str) -> DataFrame | None:
     try:
         return spark.read.parquet(f"{table_path}/_manifest").select("pval").distinct()
