@@ -97,7 +97,7 @@ def main():
     polygons.count()
 
     def count_layer(layer):
-        layer.exploded("rings").count()
+        layer.exploded("bands").count()
         layer.release()
 
     out = {name: [] for name in [*names, LAYER]}

@@ -1,5 +1,5 @@
 """Dump .explain('formatted') for the spatial-join plans into
-plans/r11/<name>_<tag>.txt (or OUT_DIR):
+plans/r12/<name>_<tag>.txt (or OUT_DIR):
 
 * the bench.py headline entries that are not in queries(): the
   prepared-layer PIP join (count, pairs and salted; a sort-merge join
@@ -39,7 +39,7 @@ STRICT = re.compile(r"(pip_|rect_|concave_|degenerate_|lines_|zonal_)")
 def main():
     tag = sys.argv[1]
     sf_dir = sys.argv[2]
-    out_dir = sys.argv[3] if len(sys.argv) > 3 else os.path.join(ROOT, "plans", "r11")
+    out_dir = sys.argv[3] if len(sys.argv) > 3 else os.path.join(ROOT, "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plans", cores=8, shuffle_partitions=8)
     bd = os.path.join(ROOT, "bench_data")

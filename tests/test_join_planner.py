@@ -36,10 +36,11 @@ def side(rows, wkb=0, unique=True, rects=False, cells=None):
     )
 
 
-def classes(interior, boundary, exterior=0, ring_bytes=0):
+def classes(interior, boundary, exterior=0, band_bytes=0):
+    # one band row per kept cell
     return CellClasses(
-        cells=None, inner=None, rings=None, interior=interior,
-        boundary=boundary, exterior=exterior, ring_bytes=ring_bytes,
+        bands=None, k=3, rows=interior + boundary, interior=interior,
+        boundary=boundary, exterior=exterior, band_bytes=band_bytes,
     )
 
 
@@ -69,20 +70,20 @@ def test_wkb_carrying_side_counts_its_bytes():
     assert decided(plan_join(None, heavy, "intersects")) == (None, "wkb")
 
 
-def test_rings_transport_counts_kept_rows_and_ring_bytes():
-    # the closed form counts exterior cells too; the rings build side
-    # holds only interior and boundary rows, the WKB column never rides
+def test_bands_transport_counts_band_rows_and_band_bytes():
+    # the closed form counts exterior cells too; the bands build side
+    # holds only the band rows, the WKB column never rides
     wide = side(3 * ROW_CAP, wkb=10**12, cells=classes(ROW_CAP - 10, 10, 2 * ROW_CAP))
-    assert decided(plan_join(None, wide, "contains")) == ("right", "rings")
-    over = side(ROW_CAP, cells=classes(ROW_CAP - 10, 10, ring_bytes=1))
-    assert decided(plan_join(None, over, "contains")) == (None, "rings")
-    # the boundary rows' ring bytes count against the budget
-    half = classes(ROW_CAP // 2 - 10, 10, ring_bytes=BROADCAST_BUDGET_BYTES // 2)
+    assert decided(plan_join(None, wide, "contains")) == ("right", "bands")
+    over = side(ROW_CAP, cells=classes(ROW_CAP - 10, 10, band_bytes=1))
+    assert decided(plan_join(None, over, "contains")) == (None, "bands")
+    # the band rows' payload bytes count against the budget
+    half = classes(ROW_CAP // 2 - 10, 10, band_bytes=BROADCAST_BUDGET_BYTES // 2)
     assert plan_join(None, side(ROW_CAP, cells=half), "contains").broadcast_side == "right"
-    heavy = classes(ROW_CAP // 2 - 10, 10, ring_bytes=BROADCAST_BUDGET_BYTES // 2 + 1)
+    heavy = classes(ROW_CAP // 2 - 10, 10, band_bytes=BROADCAST_BUDGET_BYTES // 2 + 1)
     assert plan_join(None, side(ROW_CAP, cells=heavy), "contains").broadcast_side is None
-    # salted replicas carry the layer's mean ring bytes per row
-    rows = classes(900, 100, ring_bytes=1_000 * BOUNDS_ROW_BYTES)
+    # salted replicas carry the layer's mean band bytes per row
+    rows = classes(900, 100, band_bytes=1_000 * BOUNDS_ROW_BYTES)
     extra = ROW_CAP // 2 - 1_000
     assert plan_join(
         None, side(5_000, cells=rows), "contains", salt_extra_rows=extra
@@ -112,9 +113,9 @@ def test_cell_partitioned_layer_keeps_the_points_moving():
 
     cells = classes(interior=5, boundary=5)
     for layer, transport in (
-        (side(10, cells=cells), "rings"),
+        (side(10, cells=cells), "bands"),
         (side(10, rects=True), "catalyst-rect"),
-        (side(ROW_CAP + 1, cells=cells), "rings"),
+        (side(ROW_CAP + 1, cells=cells), "bands"),
         (UNCOLLECTED, "wkb"),
     ):
         plan = plan_join(None, replace(layer, cell_partitioned=True), "contains")
@@ -163,9 +164,9 @@ def test_transport_rules():
     # PIP: a classified layer refines in Catalyst, repeated ids or not;
     # a collected layer without classes falls back to the WKB column
     cells = classes(5, 5)
-    assert plan_join(None, side(10, cells=cells), "contains").transport == "rings"
+    assert plan_join(None, side(10, cells=cells), "contains").transport == "bands"
     multi = side(10, unique=False, cells=cells)
-    assert plan_join(None, multi, "contains").transport == "rings"
+    assert plan_join(None, multi, "contains").transport == "bands"
     assert plan_join(None, side(10), "contains").transport == "wkb"
     assert plan_join(None, side(10, rects=True, cells=cells), "contains").transport == (
         "catalyst-rect"

@@ -264,6 +264,34 @@ def test_duplicated_query_ids_end_with_the_deduplicated_rounds(spark):
     corpus.unpersist()
 
 
+@pytest.mark.parametrize("metric", ["planar", "haversine"])
+def test_repeated_query_ids_get_k_distinct_neighbours(spark, metric):
+    """An id on several rows is one query: its k neighbours are those of
+    the id given once, none repeated; an id given at two coordinates is
+    queried at the lesser (lon, then lat). Unique ids run no extra job
+    (the one-round op above)."""
+    rng = np.random.default_rng(31)
+    c = hot_layer(rng, 1400, 600)
+    corpus = spark.createDataFrame(c).cache()
+    q = pd.concat([c.iloc[1400:1406], c.iloc[:6]])
+    moved = q.iloc[[1]].assign(lon=q.iloc[1].lon - 0.75)  # lesser lon
+    dup = pd.concat([q, q.iloc[:4], q.iloc[:2], q.iloc[[1]], moved])
+    once = pd.concat([q.iloc[[0]], moved, q.iloc[2:]])
+
+    def neighbours(frame_):
+        rows = knn_join(
+            spark.createDataFrame(frame_).cache(), corpus, k=5, query_id="id",
+            cand_id="id", metric=metric,
+        ).collect()
+        return sorted((r.query_id, r["rank"], r.neighbor_id) for r in rows)
+
+    got = neighbours(dup)
+    assert got == neighbours(once)
+    assert len(got) == 5 * len(q)
+    assert len({(qid, nid) for qid, _, nid in got}) == len(got)
+    corpus.unpersist()
+
+
 def test_uncached_queries_take_the_checkpoint_path(spark, monkeypatch):
     rng = np.random.default_rng(27)
     c = hot_layer(rng, 1400, 600)

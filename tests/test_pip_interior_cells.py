@@ -1,7 +1,7 @@
-"""Interior-cell PIP refine against a serial oracle.
+"""Interior-cell and band-row PIP refine against a serial oracle.
 
-A collected polygon layer drops exterior cells, matches interior cells
-on the MBR residual alone and ray-casts boundary cells in Catalyst
+A collected polygon layer drops exterior cells and turns every kept
+cell into band rows that ray-cast at most K local edges in Catalyst
 (functions/interior_cells.py). Every case here compares the join with
 brute force: the declared MBR AND ``geom.polygon_contains_xy`` over the
 row's polygon parts, NULL geometry containing nothing. The fixtures aim
@@ -9,7 +9,8 @@ at the classification's edges: points on vertices, edges and cell
 lines; NULL, NaN, ±inf and clamped coordinates; a notch through a cell
 whose corners are all inside; a hole inside one cell; a multipolygon
 row; repeated ids; NULL WKB; a concavity a rounding error away from a
-cell line.
+cell line; a comb whose band crosses more than K edges and splits in x;
+a vertex where more than K edges meet, which the WKB transport refines.
 """
 
 import math
@@ -67,6 +68,14 @@ BEYOND = [
 # and beyond the pole
 POLAR = ring((50, 85), (55, 85), (55, 100), (50, 100), (50, 85))
 POLAR_HOLE = ring((51, 92), (54, 92), (54, 98), (51, 98), (51, 92))
+# eight teeth cross one y-band of the cell [70, 71] x [10, 11]: more
+# than K_CAP local edges, so its band rows split in x
+COMB = ring(
+    (70.05, 10.05), (70.95, 10.05), (70.95, 10.9), (70.85, 10.9), (70.8, 10.3),
+    (70.75, 10.9), (70.65, 10.9), (70.6, 10.3), (70.55, 10.9), (70.45, 10.9),
+    (70.4, 10.3), (70.35, 10.9), (70.25, 10.9), (70.2, 10.3), (70.15, 10.9),
+    (70.05, 10.9), (70.05, 10.05),
+)
 
 LAYER = [
     # (id, wkb)
@@ -87,6 +96,7 @@ LAYER = [
     (8, poly(POLAR, POLAR_HOLE)),
     (9, poly(ring((-60, -30), (-57.3, -31.7), (-55.1, -27.2), (-58.8, -25.9),
                   (-60, -30)))),
+    (10, poly(COMB)),
 ]
 NULL_BOUNDS = {5: (20.0, 20.0, 24.0, 24.0)}
 
@@ -115,6 +125,7 @@ def special_points():
         (31.0, 30.0), (30.0, 31.0), (33.0, 32.0), (31.5, 33.0), (32.25, 32.5),
         (32.0, 30.0), (31.0, 31.0), (32.0, 31.0), (33.0, 31.0), (31.0, 29.0),
         (40.0, 40.0), (41.0, 42.5), (40.5, 41.0), (42.0, 42.0), (41.2, 41.9),
+        (70.3, 10.6), (70.4, 10.6), (70.8, 10.3), (70.5, 10.3), (70.2, 10.95),
     ]
     for pid, wkb in LAYER:
         if wkb is None:
@@ -242,10 +253,13 @@ def layer_rows_bounds(wkb):
 
 def cell_class(classes, lon, lat, cell_deg=1.0):
     cid = int(GRID.cell_id(np.array([lon]), np.array([lat]), cell_deg)[0])
-    cells = classes.cells.to_pylist()[0]
-    if cid not in cells:
+    rows = [b for b in classes.bands[0].as_py() if b["cell_id"] == cid]
+    if not rows:
         return "exterior"
-    return "interior" if classes.inner.to_pylist()[0][cells.index(cid)] else "boundary"
+    (b, *more) = rows
+    whole = not more and b["blo"] == b["xlo"] == -INF and b["bhi"] == b["xhi"] == INF
+    edges = any(b[f"rb{j}"] for j in range(classes.k))
+    return "interior" if whole and not edges and b["tt"] & 1 else "boundary"
 
 
 def test_cell_classes_at_the_edges():
@@ -266,7 +280,10 @@ def test_cell_classes_at_the_edges():
     assert cell_class(tri, 1.5, 1.5) == "interior"
     assert cell_class(tri, 2.5, 2.5) == "boundary"  # the hypotenuse's corner
     assert cell_class(tri, 4.5, 4.5) == "exterior"
-    assert tri.rows + tri.exterior == 49  # the 7 x 7 covering cells
+    assert tri.interior + tri.boundary + tri.exterior == 49  # 7 x 7 cells
+    comb = _classes(poly(COMB))
+    assert any(b["xlo"] > -INF for b in comb.bands[0].as_py())  # split in x
+    assert comb.k <= IC.K_CAP
 
 
 def test_null_undecodable_and_non_finite_rows_contain_nothing(spark):
@@ -292,16 +309,16 @@ def test_null_undecodable_and_non_finite_rows_contain_nothing(spark):
         [wkb for _, wkb in bad],
         *SJ._cell_spans(np.array([(0.0, 0.0, 4.0, 4.0)] * len(bad)), 1.0), 1.0,
     )
-    # every cell of the three bad rows is boundary, with NULL rings
-    assert classes.inner.to_pylist()[:3] == [[False] * 25] * 3
-    assert all(r is None for rows in classes.rings.to_pylist()[:3] for r in rows)
+    # every cell of the three bad rows is boundary, and none has a row
+    assert classes.boundary >= 3 * 25 and classes.interior > 0
+    assert classes.bands.to_pylist()[:3] == [[], [], []]
 
 
 def test_open_ring_makes_its_row_boundary():
     # an unclosed ring: its missing closing edge is not an edge, so the
     # ray parity changes along y = 0 and y = 3 left of the open ends
     open_ring = _classes(poly(ring((0, 0), (6, 0), (6, 3), (0, 3))))
-    assert not any(open_ring.inner.to_pylist()[0])
+    assert open_ring.interior == 0
     assert open_ring.exterior == 0
 
 
@@ -382,11 +399,11 @@ def test_prepared_layer_after_shuffle_partitions_change(
     joined = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(cached_at))
     try:
-        for transport in ("rings", "catalyst-rect"):
+        for transport in ("bands", "catalyst-rect"):
             prepared.exploded(transport)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", joined)
-    assert prepared.exploded("rings").rdd.getNumPartitions() == cached_at
+    assert prepared.exploded("bands").rdd.getNumPartitions() == cached_at
     assert_prepared_equals_fresh(points, layer, points_pdf, layer_rows(), prepared)
 
 
@@ -398,3 +415,47 @@ def test_prepared_layer_on_the_wkb_transport(frames, points_pdf, monkeypatch):
     assert audit["sortmerge_joins"] == 1 and audit["broadcast_joins"] == 0
     assert audit["python_nodes"]["ArrowEvalPython"] == 1
     assert_prepared_equals_fresh(points, layer, points_pdf, layer_rows(), prepared)
+
+
+# vertices where more than K_CAP edges meet (of three parts, of four
+# parts, of three holes touching at one point): no band split keeps
+# their rows under the caps, so the layer is left unclassified and
+# refines through the WKB transport — exact, with one Python node
+FAN = multi(
+    poly(ring((80.5, 10.5), (80.9, 10.6), (80.8, 10.9), (80.5, 10.5))),
+    poly(ring((80.5, 10.5), (80.4, 10.9), (80.1, 10.7), (80.5, 10.5))),
+    poly(ring((80.5, 10.5), (80.2, 10.2), (80.7, 10.1), (80.5, 10.5))),
+)
+FAN4 = multi(
+    poly(ring((80.5, 10.5), (80.9, 10.6), (80.8, 10.9), (80.5, 10.5))),
+    poly(ring((80.5, 10.5), (80.4, 10.9), (80.1, 10.7), (80.5, 10.5))),
+    poly(ring((80.5, 10.5), (80.2, 10.2), (80.3, 10.1), (80.5, 10.5))),
+    poly(ring((80.5, 10.5), (80.7, 10.1), (80.9, 10.3), (80.5, 10.5))),
+)
+HOLES3 = poly(
+    ring((80.05, 10.05), (80.95, 10.05), (80.95, 10.95), (80.05, 10.95), (80.05, 10.05)),
+    ring((80.5, 10.5), (80.8, 10.6), (80.7, 10.8), (80.5, 10.5)),
+    ring((80.5, 10.5), (80.3, 10.8), (80.2, 10.6), (80.5, 10.5)),
+    ring((80.5, 10.5), (80.4, 10.2), (80.6, 10.2), (80.5, 10.5)),
+)
+
+
+@pytest.mark.parametrize("fan", [FAN, FAN4, HOLES3], ids=["fan3", "fan4", "holes3"])
+def test_overflowing_vertex_refines_on_the_wkb_transport(spark, fan):
+    import pandas as pd
+
+    rows = [(pid, bytearray(wkb), *map(float, layer_rows_bounds(wkb)))
+            for pid, wkb in ((1, fan), (2, poly(COMB)))]
+    assert _classes(fan) is None
+    rng = np.random.default_rng(11)
+    xs = np.concatenate([rng.uniform(80, 81, 2000), rng.uniform(70, 71, 2000),
+                         [80.5, 80.5, 80.7, 80.45, 80.65], COMB[:, 0]])
+    ys = np.concatenate([rng.uniform(10, 11, 2000), rng.uniform(10, 11, 2000),
+                         [10.5, 10.55, 10.55, 10.52, 10.7], COMB[:, 1]])
+    pdf = pd.DataFrame({"image_id": np.arange(len(xs), dtype=np.int64),
+                        "lon": xs, "lat": ys})
+    points = spark.createDataFrame(pdf)
+    layer = spark.createDataFrame(rows, LAYER_SCHEMA)
+    assert audit_plan(point_in_polygon_join(points, layer, poly_id="pid"))[
+        "python_nodes"]["ArrowEvalPython"] == 1
+    assert_prepared_equals_fresh(points, layer, pdf, rows)

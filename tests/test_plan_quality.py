@@ -33,14 +33,13 @@ def layers(spark, tmp_path_factory):
 
 
 def test_pip_plan_single_python_node(layers):
-    """A collected layer refines in Catalyst (interior cells match on
-    the MBR, boundary cells ray-cast against their carried edges): no
-    Python node at all."""
+    """A collected layer refines in Catalyst (band rows ray-cast at most
+    K carried edges): no Python node at all."""
     images, polys = layers
     df = point_in_polygon_join(images, polys, mode="count")
     audit = assert_plan_quality(df, max_python_nodes=0)
     assert sum(audit["python_nodes"].values()) == 0
-    assert "rings" in audit["plan"]
+    assert "blo" in audit["plan"]
     # codegen_stages is 0 pre-AQE-finalization; only assert it never
     # goes negative (best-effort counter)
     assert audit["codegen_stages"] >= 0
@@ -359,6 +358,23 @@ def test_prepared_layer_pip_merges_on_the_cached_cell_partitions(spark, layers):
         rf"Arguments: hashpartitioning\(cell_id#\d+L, {partitions}\)",
         audit["plan"],
     ), audit["plan"][:4000]
+    layer.release()
+
+
+def test_pip_joins_compile_into_whole_stage_codegen(layers):
+    """The band refine has no lambda: neither PIP plan holds a
+    ``lambdafunction``, and after execution the prepared layer's
+    SortMergeJoin and the fresh layer's BroadcastHashJoin each run
+    inside a whole-stage-codegen stage (``*(n)`` in the executed
+    plan)."""
+    images, polys = layers
+    layer = PreparedPolygonLayer(polys)
+    for side, join in ((layer, "SortMergeJoin"), (polys, "BroadcastHashJoin")):
+        df = point_in_polygon_join(images, side, mode="count")
+        assert "lambdafunction" not in audit_plan(df)["plan"].lower(), join
+        df.collect()
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        assert re.search(rf"\*\(\d+\) {join} ", executed), executed[:4000]
     layer.release()
 
 

@@ -159,6 +159,7 @@ def test_cds_first_launch_dumps_then_later_ones_map(launch):
     assert launch()["opts"].startswith("-XX:ArchiveClassesAtExit=")
 
     (session.CDS_DIR / f"{key}.jsa").write_bytes(b"adopted")
+    session._stamp(session.CDS_DIR / f"{key}.jsa", "/nowhere")
     later = launch({"spark.driver.defaultJavaOptions": "-Dcaller=1"})
     assert later["opts"] == f"-XX:SharedArchiveFile={session.CDS_DIR / key}.jsa -Dcaller=1"
     assert later["conf_dir"] == str(session.CDS_DIR / "conf")
@@ -227,7 +228,39 @@ def test_cds_concurrent_dumps_adopt_one(launch, monkeypatch):
     final = session.CDS_DIR / f"{key}.jsa"
     assert seen["opts"] == f"-XX:SharedArchiveFile={final}"
     assert final.read_bytes() == b"11"
-    assert sorted(p.name for p in session.CDS_DIR.iterdir()) == sorted(["conf", final.name])
+    assert sorted(p.name for p in session.CDS_DIR.iterdir()) == sorted(
+        ["conf", final.name, f"{key}.stat"])
+
+
+def test_cds_adopted_archive_that_moved_is_probed_again(launch, monkeypatch):
+    """An adopted archive matching its stamp is mapped without a probe.
+    One whose size or mtime moved is probed with the stamped class path:
+    kept and stamped again when it passes, deleted with its stamp when
+    it fails or has no stamp."""
+    launch()
+    final = session.CDS_DIR / f"{_key()}.jsa"
+    stamp = final.with_suffix(".stat")
+    final.write_bytes(b"whole archive")
+    session._stamp(final, "/recorded")
+    probes = []
+
+    def probe(java, jsa, cp):
+        probes.append(cp)
+        return verdict
+    monkeypatch.setattr(session, "_probe", probe)
+    verdict = True
+    assert launch()["opts"] == f"-XX:SharedArchiveFile={final}" and probes == []
+    final.write_bytes(b"whole")  # truncated: size and mtime move
+    assert launch()["opts"] == f"-XX:SharedArchiveFile={final}"
+    assert probes == ["/recorded"]
+    assert json.loads(stamp.read_text())["size"] == len(b"whole")
+    final.write_bytes(b"who")
+    verdict = False
+    assert launch()["opts"].startswith("-XX:ArchiveClassesAtExit=")
+    assert not final.exists() and not stamp.exists()
+    final.write_bytes(b"unstamped")
+    assert launch()["opts"].startswith("-XX:ArchiveClassesAtExit=")
+    assert not final.exists() and probes == ["/recorded", "/recorded"]
 
 
 def _footprint(root: Path, cds: Path) -> dict:
@@ -248,7 +281,9 @@ def test_fresh_sessions_dump_reject_truncated_and_map_archive(tmp_path):
     """Real driver JVMs. The first dumps an archive as it exits. A
     truncated copy of it (which crashes JDK 17 when mapped) is planted
     ahead of it: the next session's probe rejects and deletes it, adopts
-    the whole one, maps it and still returns the exact sum."""
+    the whole one, maps it and still returns the exact sum. The adopted
+    archive is then truncated in place: the third session deletes it
+    and still returns the exact sum."""
     root = Path(__file__).resolve().parent.parent
     cds = tmp_path / "cds"
     try:
@@ -257,15 +292,21 @@ def test_fresh_sessions_dump_reject_truncated_and_map_archive(tmp_path):
         shutil.rmtree(cds, ignore_errors=True)  # ~350 MB of archives
 
 
+def _wait_for_exit(record: Path) -> None:
+    """Wait until the dumping JVM of ``record`` has exited (it writes
+    the archive as it exits)."""
+    _, pid, start = session._read_record(record)
+    deadline = time.monotonic() + 120
+    while session._running(pid, start) and time.monotonic() < deadline:
+        time.sleep(0.2)
+
+
 def _dump_truncate_and_adopt(root: Path, cds: Path) -> None:
     first = _footprint(root, cds)
     assert first["cds_archive"] is None
     assert first["query"]["sum"] == first["query"]["expected"]
     (record,) = cds.glob("*.*.json")
-    _, pid, start = session._read_record(record)
-    deadline = time.monotonic() + 120
-    while session._running(pid, start) and time.monotonic() < deadline:
-        time.sleep(0.2)  # the JVM writes the archive as it exits
+    _wait_for_exit(record)
     dump = record.with_suffix(".jsa")
     key = dump.name.split(".")[0]
     truncated = cds / f"{key}.1.jsa"  # sorts, and so is probed, first
@@ -274,7 +315,18 @@ def _dump_truncate_and_adopt(root: Path, cds: Path) -> None:
     truncated.with_suffix(".json").write_text(dump.with_suffix(".json").read_text())
 
     second = _footprint(root, cds)
-    assert second["cds_archive"] == str(cds / f"{key}.jsa")
+    adopted = cds / f"{key}.jsa"
+    assert second["cds_archive"] == str(adopted)
     assert second["query"]["sum"] == second["query"]["expected"]
     assert not truncated.exists()
     assert not list(cds.glob("*.*.jsa"))
+
+    # damaged after adoption: its stamp no longer matches, the probe
+    # fails, and the session starts without it and still sums exactly
+    os.truncate(adopted, 4 << 20)
+    third = _footprint(root, cds)
+    assert third["cds_archive"] is None
+    assert third["query"]["sum"] == third["query"]["expected"]
+    assert not adopted.exists() and not adopted.with_suffix(".stat").exists()
+    for record in cds.glob("*.*.json"):  # let its new dump finish first
+        _wait_for_exit(record)

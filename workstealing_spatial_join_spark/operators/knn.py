@@ -429,7 +429,8 @@ def knn_haversine_join(
     and its k-th distance is STRICTLY inside the covered radius (the
     cover is a superset of the radius ball, so every unseen candidate
     is farther). Returns (query_id, neighbor_id, rank, dist_km);
-    ties break by neighbor_id."""
+    ties break by neighbor_id. A query id on several rows is one query,
+    at the least (lon, lat) of its rows (``_one_row_per_id``)."""
     global_cover_km = 180.0 * _KM_PER_DEG + 1.0  # whole globe covered
     q = queries.select(
         F.col(query_id).alias("query_id"),
@@ -480,6 +481,19 @@ def _observed_count(obs: Observation) -> int | None:
     return row.getLong(0) if row.length() else None
 
 
+def _one_row_per_id(q: DataFrame) -> DataFrame:
+    """One row per query id, at the least (qx, qy) of its rows: an id
+    given twice is one query, and an id given at two coordinates is
+    queried at the lesser (by qx, then qy). Checkpointed, so the rounds
+    do not aggregate again."""
+    return (
+        q.groupBy("query_id")
+        .agg(F.min(F.struct("qx", "qy")).alias("_q"))
+        .select("query_id", "_q.qx", "_q.qy")
+        .localCheckpoint(eager=True)
+    )
+
+
 def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
                    dist: str, stats: dict | None, q_cached: bool) -> DataFrame:
     """The driver loop shared by both kNN joins. ``round_topk(remaining,
@@ -503,7 +517,14 @@ def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
     materialized — no exponential regrowth). Its root is the query
     frame as given when ``q_cached`` (the caller's frame is one cached
     relation), else one eager checkpoint of it, so an expensive
-    upstream plan does not re-run per round."""
+    upstream plan does not re-run per round.
+
+    Repeated query ids show at the first mismatch: fewer distinct ids
+    than observed rows. The ids' rows would share one window partition
+    and rank each candidate once per row, so the query frame is cut to
+    one row per id (``_one_row_per_id``) and the round runs again; with
+    unique ids nothing more runs. A first round that is already final
+    observes nothing, so repeated ids there still repeat neighbours."""
     if stats is not None:
         stats["rounds"] = 0
     remaining = q if q_cached else q.localCheckpoint(eager=True)
@@ -544,9 +565,19 @@ def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
         settled_parts.append(settled)
         n_done = _observed_count(done) or 0
         if n_remaining is None:
-            if _observed_count(seen) == n_done:
+            n_seen = _observed_count(seen)
+            if n_seen == n_done:
                 break
             n_remaining = remaining.select("query_id").distinct().count()
+            if n_seen is not None and n_remaining < n_seen:
+                # an id on several rows: one query at its least
+                # coordinate; this round is run again on one row per id
+                remaining = _one_row_per_id(remaining)
+                settled_parts.clear()
+                n_remaining = None
+                if stats is not None:
+                    stats["rounds"] -= 1  # the ring rounds of the answer
+                continue
         n_remaining -= n_done
         if n_remaining <= 0:
             break
@@ -728,7 +759,9 @@ def knn_join(
 ) -> DataFrame:
     """k nearest candidates per query point. Returns
     ``(query_id, neighbor_id, rank, dist)``; ties broken by
-    neighbor_id ascending (deterministic, oracle-matching).
+    neighbor_id ascending (deterministic, oracle-matching). A query id
+    on several rows is one query: k distinct neighbours, at the least
+    (lon, lat) of its rows when they differ (``_one_row_per_id``).
 
     ``initial_ring='auto'`` sizes the first ring from candidate
     density so the first round settles the bulk of queries without

@@ -28,15 +28,18 @@ sort-merge join that shuffles only the points; the layer never moves.
 
 The exact refine of a point-in-polygon join against a collected layer
 is Catalyst too: the driver classified each polygon's covering cells
-once (functions/interior_cells.py), so the tessellation holds only
-interior and boundary cells, and the refine is
+once (functions/interior_cells.py), so the tessellation holds no
+exterior cell, and each kept cell is band rows — a half-open y-band
+(and x-column) with at most K local edges in flat slot columns, a
+far-edge parity and a truth table over its ring bits. The refine is
 
-         inner OR ring_contains(rings, px, py)
+         band holds (px, py) AND tt[x | o << 3]
 
-— interior rows match on the MBR alone, boundary rows ray-cast the
-edges they carry, and the plan has no Python node. An uncollected
-layer (and every polygon join that is not on rectangles) refines with
-an Arrow pandas UDF, the plan's only Python node.
+— the crossing and on-edge arithmetic of the ray cast over K fixed
+slots, with no lambda: the join and its condition compile into one
+whole-stage-codegen stage, and the plan has no Python node. An
+uncollected layer (and every polygon join that is not on rectangles)
+refines with an Arrow pandas UDF, the plan's only Python node.
 
 A layer is collected once, in one job, as one Arrow table of its id,
 WKB and bounds columns (``_analyze_layer``); every planner figure, the
@@ -60,8 +63,8 @@ from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import grid as GRID
 from workstealing_spatial_join_spark.functions.interior_cells import (
-    RING_CONTAINS_SQL,
     CellClasses,
+    band_contains_sql,
     classify_cells,
 )
 from workstealing_spatial_join_spark.functions.predicates import PREDICATES
@@ -253,10 +256,11 @@ class LayerAnalysis:
     ``table`` is the collected (id, geom_wkb, minx..maxy) Arrow table —
     None past DICT_MAX_ROWS, or when the join needs no refine — and
     ``src`` the frame to tessellate: the local replay of the table when
-    it is small enough, else the source layer. ``cells`` holds the
-    interior/boundary classes of every covering cell
+    it is small enough, else the source layer. ``cells`` holds the band
+    rows of every non-exterior covering cell
     (functions/interior_cells.py) when a point-in-polygon join asked
-    for them, and ``cells_src`` the local frame that carries them."""
+    for them, and ``cells_src`` the local frame that carries them, one
+    row per geometry."""
 
     src: DataFrame | None = None
     id_col: str = "polygon_id"
@@ -281,18 +285,16 @@ class LayerAnalysis:
 
     def tessellate(self, transport: str) -> DataFrame:
         """Cell tessellation for a refine transport: (poly_id,
-        minx..maxy, cell_id), plus geom_wkb for "wkb", and for "rings"
-        only the non-exterior cells with their ``inner`` flag and the
-        ``rings`` of boundary rows (NULL on interior rows). One
-        projection of memoized SQL expressions (functions/exprs.py)."""
+        minx..maxy, cell_id), plus geom_wkb for "wkb", and for "bands"
+        the band rows (cell_id and ``band_fields(k)``) of the
+        non-exterior cells. One projection of memoized SQL expressions
+        (functions/exprs.py)."""
         from workstealing_spatial_join_spark.functions.exprs import cexpr
 
         sql = [f"`{self.id_col}` AS poly_id", *_BOUNDS]
-        if transport == "rings":
+        if transport == "bands":
             src = self.cells_src
-            sql.append(
-                "inline(arrays_zip(cells, inner, rings)) AS (cell_id, inner, rings)"
-            )
+            sql.append("inline(bands)")
         else:
             src = self.src
             if transport == "wkb":
@@ -306,18 +308,21 @@ def _local_geom_frame(
     layer: DataFrame, table, with_wkb: bool, cells: CellClasses | None
 ) -> DataFrame:
     """Replay the collected table as a LOCAL frame: (id, [geom_wkb,]
-    minx..maxy[, cells, inner, rings]), one row per geometry, the id
-    keeping its Spark type and the bounds their NULLs (every column
-    nullable). Downstream tessellation then costs zero scans and zero
+    minx..maxy[, bands]), one row per geometry, the id
+    keeping its Spark type and the bounds their NULLs (those columns
+    nullable; the band rows' fields are not, which keeps the refine's
+    generated code free of null checks). Downstream tessellation then costs zero scans and zero
     ingest Python — the collect that built the analysis already moved
     these bytes to the driver once (guide §2.4: don't recompute what a
-    previous action materialized). The cell classes ride as per-row
-    arrays and are exploded in Catalyst."""
+    previous action materialized). The band rows ride as one array per
+    geometry and are exploded in Catalyst: a cached tessellation whose
+    lineage holds one local row per band row plans measurably slower
+    on every query."""
     import pyarrow as pa
 
     cols = {c: table[c] for c in table.column_names if with_wkb or c != "geom_wkb"}
     if cells is not None:
-        cols.update(cells=cells.cells, inner=cells.inner, rings=cells.rings)
+        cols["bands"] = cells.bands
     return layer.sparkSession.createDataFrame(pa.table(cols))
 
 
@@ -328,8 +333,9 @@ def _analyze_layer(
     """Collect a layer once as Arrow (bounded by DICT_MAX_ROWS) and
     derive what both joins decide from its columns. ``collect=False``
     (an MBR-only join, whose layer may lack ``geom_wkb``) leaves it
-    uncollected; ``classify`` (point-in-polygon) adds the cell classes
-    of a collected non-rect layer and their local frame."""
+    uncollected; ``classify`` (point-in-polygon) adds the band rows of
+    a collected non-rect layer and their local frame (None when a band
+    overflows its caps: the join then takes the WKB transport)."""
     import pyarrow.compute as pc
 
     table = _collect_layer(layer, id_col, DICT_MAX_ROWS) if collect else None
@@ -353,6 +359,8 @@ def _analyze_layer(
         replay = _local_geom_frame(layer, table, small, cells)
         cells_src = None if cells is None else replay
         layer = replay if small else layer
+    if cells is not None:
+        cells = replace(cells, bands=None)  # they live in the local frame
     return LayerAnalysis(
         layer,
         id_col,
@@ -552,10 +560,10 @@ def point_in_polygon_join(
     shuffle by cell) unless salting re-keys it; a fresh layer is
     broadcast when it fits. Transport: the MBR predicate alone when every
     polygon is its MBR; for any other collected layer the interior-cell
-    classes (functions/interior_cells.py) — exterior cells dropped,
-    interior cells matched on the MBR alone, boundary cells ray-cast in
-    Catalyst against the rings they carry, so the plan has no Python
-    node; else (an uncollected layer) the per-candidate WKB column
+    band rows (functions/interior_cells.py) — exterior cells dropped,
+    each kept cell's band rows ray-cast in Catalyst over at most K
+    local edges, so the plan has no Python node; else (an uncollected
+    layer, or one whose bands overflow) the per-candidate WKB column
     through the Arrow refine.
 
     ``point_payload`` names extra point columns carried THROUGH the
@@ -563,8 +571,8 @@ def point_in_polygon_join(
     (operators.zonal) needs no second join back to the point table —
     at scale that second equi-join would be a full extra shuffle of
     the pair table. Payload names must not collide with the polygon
-    tessellation's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` /
-    ``inner`` / ``rings`` columns.
+    tessellation's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` columns
+    or its band row's (``interior_cells.band_fields``).
     """
     from workstealing_spatial_join_spark.functions.exprs import cexpr
     from workstealing_spatial_join_spark.plans.planner import plan_join
@@ -627,8 +635,8 @@ def point_in_polygon_join(
             "px >= minx AND px <= maxx AND py >= miny AND py <= maxy"
         )
     )
-    if plan.transport == "rings":
-        cand = cand.where(cexpr(f"inner OR {RING_CONTAINS_SQL}"))
+    if plan.transport == "bands":
+        cand = cand.where(cexpr(band_contains_sql(layer.cells.k)))
     elif plan.transport == "wkb":
         cand = cand.where(
             PREDICATES["contains_xy"](F.col("geom_wkb"), F.col("px"), F.col("py"))

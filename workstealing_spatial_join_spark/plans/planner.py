@@ -33,7 +33,7 @@ BROADCAST_BUDGET_BYTES = 2_000_000 * BOUNDS_ROW_BYTES
 @dataclass(frozen=True)
 class JoinPlan:
     broadcast_side: str | None  # "left" | "right" | None (AQE decides)
-    transport: str  # "catalyst-rect" | "rings" | "dict" | "wkb"
+    transport: str  # "catalyst-rect" | "bands" | "dict" | "wkb"
     # "right": that side is cached partitioned and sorted by cell_id;
     # the join merges on it and shuffles only the other side
     partitioned_side: str | None = None
@@ -43,14 +43,14 @@ def _build_bytes(side, transport: str, extra_rows: int = 0) -> int | None:
     """Exact bytes a side puts into a broadcast: its exploded rows (plus
     the rows salting replicates) at the bounds-row width, plus what the
     transport carries — the WKB column once per covering cell, or the
-    rings of boundary cell rows (the "rings" rows are the non-exterior
-    cells only); salted replicas at the layer's mean. None when the
-    side was not collected."""
+    band rows' bounds, parity, truth table and K edge slots (the
+    "bands" rows replace the covering cells); salted replicas at the
+    layer's mean. None when the side was not collected."""
     if side is None or side.exploded_rows is None:
         return None
     base, payload = side.exploded_rows, 0
-    if transport == "rings":
-        base, payload = side.cells.rows, side.cells.ring_bytes
+    if transport == "bands":
+        base, payload = side.cells.rows, side.cells.band_bytes
     elif transport == "wkb":
         payload = side.exploded_wkb_bytes
     rows = base + extra_rows
@@ -87,8 +87,8 @@ def plan_join(
     Transport: ``catalyst-rect`` when the MBR predicate is the whole
     refine (every geometry equals its MBR; union also needs the
     id-keyed dict for its degenerate residual); for ``contains``,
-    ``rings`` when the layer's cells are classified (interior cells
-    match on the MBR, boundary cells ray-cast in Catalyst); for a
+    ``bands`` when the layer's cells are classified (band rows
+    ray-cast in Catalyst over at most K edge slots); for a
     polygon join, ``dict`` when every side is collected with unique
     ids; else ``wkb``.
     """
@@ -101,7 +101,7 @@ def plan_join(
         transport = "catalyst-rect"
     elif predicate == "contains":
         classified = all(s.cells is not None for s in sides)
-        transport = "rings" if collected and classified else "wkb"
+        transport = "bands" if collected and classified else "wkb"
     elif unique:
         transport = "dict"
     else:

@@ -27,9 +27,14 @@ What is cached, and where:
   as it exits.
 - A later launch adopts that file only once its JVM has exited and a
   ``java -Xshare:on`` probe against the recorded class path exits 0;
-  it then renames it to ``<key>.jsa`` (``os.replace``). A file that
-  fails the probe is deleted: JDK 17 dies of SIGBUS on a truncated
-  archive instead of falling back, so nothing unprobed is mapped.
+  it then renames it to ``<key>.jsa`` (``os.replace``) and stamps its
+  size, mtime and class path in ``<key>.stat``. A file that fails the
+  probe is deleted: JDK 17 dies of SIGBUS on a truncated archive
+  instead of falling back, so nothing unprobed is mapped.
+- Every later launch checks the adopted archive with one ``stat``
+  against its stamp. An archive damaged after adoption (a partial copy,
+  a full disk) has moved: it is probed again, and deleted when the
+  probe fails or no stamp names its class path.
 - Every launch with an archive passes ``-XX:SharedArchiveFile`` through
   ``spark.driver.defaultJavaOptions``, ahead of any value the caller
   set there; ``spark.driver.extraJavaOptions`` is left to the caller.
@@ -201,14 +206,53 @@ def _read_record(record: Path) -> tuple[str, int, str] | None:
         return None
 
 
+def _stamp(archive: Path, classpath: str) -> None:
+    """Record an adopted archive's size and mtime, and the class path
+    its probe passed with, in ``<key>.stat`` beside it."""
+    st = archive.stat()
+    stamp = archive.with_suffix(".stat")
+    tmp = stamp.with_suffix(".stat.tmp")
+    tmp.write_text(json.dumps(
+        {"size": st.st_size, "mtime_ns": st.st_mtime_ns, "classpath": classpath}))
+    os.replace(tmp, stamp)
+
+
+def _still_adopted(java: str, archive: Path) -> bool:
+    """Whether an adopted archive may be mapped. One ``stat``: its size
+    and mtime are those stamped at adoption. Anything else (a partial
+    copy, a truncation, a full disk) re-probes it with the stamped class
+    path; it is deleted, with its stamp, when the probe fails or there is
+    no stamp to probe with."""
+    stamp = archive.with_suffix(".stat")
+    st = archive.stat()
+    try:
+        rec = json.loads(stamp.read_text())
+        if (rec["size"], rec["mtime_ns"]) == (st.st_size, st.st_mtime_ns):
+            return True
+        classpath = str(rec["classpath"])
+    except (OSError, ValueError, KeyError, TypeError):
+        classpath = None
+    passed = _probe(java, archive, classpath) if classpath else False
+    if passed:
+        _stamp(archive, classpath)
+    elif passed is False:
+        archive.unlink(missing_ok=True)
+        stamp.unlink(missing_ok=True)
+    return bool(passed)
+
+
 def _settle_dumps(java: str, key: str) -> tuple[Path | None, bool]:
     """``(archive, pending)``: the adopted archive of ``key``, if any, and
     whether a JVM that is to dump one is still running.
 
-    A dump whose JVM has exited is probed while no archive is adopted;
-    the first that passes is renamed into place. Every other finished
-    dump is deleted, and so is a dump its launch never recorded."""
+    An adopted archive whose size or mtime moved since its adoption is
+    probed again (``_still_adopted``). A dump whose JVM has exited is
+    probed while no archive is adopted; the first that passes is renamed
+    into place and stamped. Every other finished dump is deleted, and so
+    is a dump its launch never recorded."""
     final = CDS_DIR / f"{key}.jsa"
+    if final.exists() and not _still_adopted(java, final) and final.exists():
+        return None, True  # the probe could not run: a later launch decides
     pending = False
     for record in sorted(CDS_DIR.glob(f"{key}.*.json")):
         jsa = record.with_suffix(".jsa")
@@ -223,6 +267,7 @@ def _settle_dumps(java: str, key: str) -> tuple[Path | None, bool]:
             if passed:
                 try:
                     os.replace(jsa, final)
+                    _stamp(final, classpath)
                 except FileNotFoundError:
                     pass  # a concurrent launch adopted it first
         jsa.unlink(missing_ok=True)
