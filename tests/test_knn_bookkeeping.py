@@ -335,3 +335,69 @@ def test_one_round_op_on_cached_inputs_runs_at_most_four_jobs(spark):
     assert 0 < len(jobs) <= 4
     queries.unpersist()
     corpus.unpersist()
+
+
+def _dump_headline_plans():
+    """scripts/dump_headline_plans.py, imported by path."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parent.parent / "scripts" / "dump_headline_plans.py"
+    spec = importlib.util.spec_from_file_location("dump_headline_plans", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+def test_nonfinal_round_plan_has_one_window_and_two_observations(spark):
+    """The executed plan of a non-final round checkpoint, as the plan
+    dump reads it: the top-k's row_number is its only Window (the settle
+    test reads the rank-k row), and the two settle counts ride in it."""
+    import re
+
+    rng = np.random.default_rng(32)
+    c = hot_layer(rng, 1400, 600).rename(columns={"id": "image_id"})
+    plan = _dump_headline_plans().knn_round_checkpoint_plan(spark, spark.createDataFrame(c))
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bWindow \(\d+\)", final)) == 1
+    assert len(re.findall(r"\bCollectMetrics \(\d+\)", final)) == 2
+
+
+def test_warm_knn_join_costs_few_py4j_round_trips(spark, monkeypatch):
+    """A warm call on cached inputs builds its round from memoized
+    expressions: at most 300 py4j round trips from the calling thread,
+    where building each Column anew cost about 580. py4j's finalizer
+    thread, which deletes the Java objects of whatever Python garbage
+    was collected meanwhile, is not counted."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    rng = np.random.default_rng(33)
+    c = hot_layer(rng, 1400, 600)
+    corpus = spark.createDataFrame(c).cache()
+    q = pd.concat([c.iloc[1400:1420], c.iloc[:20]])
+    queries = spark.createDataFrame(q).cache()
+    queries.count()
+    run(queries, corpus, exclude_self=True)  # profiles the corpus
+    trips = []
+    caller = threading.current_thread()
+    send_command = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        if threading.current_thread() is caller:
+            trips.append(1)
+        return send_command(self, *args, **kwargs)
+
+    gc.collect()
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    df = knn_join(queries, corpus, k=5, query_id="id", cand_id="id", exclude_self=True)
+    n = len(trips)
+    monkeypatch.undo()
+    assert 0 < n <= 300
+    got = {(r.query_id, r["rank"]): (r.neighbor_id, r.dist) for r in df.collect()}
+    assert got == oracle(q, c, 5, True)
+    queries.unpersist()
+    corpus.unpersist()

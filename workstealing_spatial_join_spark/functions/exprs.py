@@ -46,6 +46,21 @@ def cexpr(sql: str) -> Column:
     return col
 
 
+def cselect(df, *sql: str):
+    """``df.select(*map(cexpr, sql))`` with the column list memoized
+    too: the JVM Seq of the parsed columns is built once per (gateway,
+    sql), so the projection costs one py4j round trip instead of one
+    per column plus the list conversion."""
+    key = (_gateway_key(), "select", sql)
+    seq = _CACHE.get(key)
+    if seq is None:
+        from pyspark.sql.classic.column import _to_seq
+
+        seq = _to_seq(df.sparkSession.sparkContext, [cexpr(s)._jc for s in sql])
+        _CACHE[key] = seq
+    return type(df)(df._jdf.select(seq), df.sparkSession)
+
+
 def dlit(x: float) -> str:
     """Spark-SQL double literal (``D`` suffix — see module doc)."""
     return f"{float(x)!r}D"
@@ -75,3 +90,11 @@ def named_colfn(fn):
         return fn(col, *args, **kwargs)
 
     return wrapper
+
+
+@named_colfn
+def ccol(col: Column, alias: str | None = None) -> Column:
+    """``F.col(name)``, aliased when ``alias`` is given, built once per
+    process: a caller's column name keeps ``F.col``'s resolution (dotted
+    paths, backticks) without its per-call py4j round trips."""
+    return col if alias is None else col.alias(alias)

@@ -9,7 +9,7 @@ Plan per round (all Catalyst — there is NO Python in this operator):
               split cell, the fine indices the box meets
             → equi-join candidates on (cell_id, sub)
             → euclidean distance (codegen'd)
-            → Window row_number per query ≤ k
+            → Window row_number per query ≤ k (the only window)
 
 Density-adaptive cells (the planar join's answer to skew — the
 reference balances a hot partition by work stealing, this engine
@@ -62,11 +62,20 @@ great-circle join takes only its grand-total row.
 Round bookkeeping by observation (``_settle_rounds``). Each round is
 ONE checkpoint job, and two ``Observation``s ride in it: the rows of
 the round's query input (on the query side, below the cover broadcast)
-and the settled rank-1 rows. Equal counts mean every query settled.
-Only when they differ (duplicated query ids, or queries with no
-candidate this round) does the loop run one distinct count of the
-remaining ids, and from there it continues by subtraction. A cached
+and the settled rank-k rows — a query settles when its rank-k row has a
+distance strictly below its reach, so no window beyond the top-k's own
+``row_number`` is needed. Equal counts mean every query settled, and the
+checkpoint is the answer as it is. Only when they differ (duplicated
+query ids, or queries with fewer than k candidates this round) does the
+loop run one distinct count of the remaining ids, read the settled ids
+from the checkpoint's rank-k rows, and continue by subtraction. A cached
 query frame is read as it is; any other is checkpointed once.
+
+Construction cost. A steady round is built from memoized expressions
+(functions/exprs.py): every SQL piece, window, filter, observation
+aggregate and projection column list is parsed once per process, so a
+warm ``knn_join`` on cached inputs costs a few dozen py4j round trips
+(``scripts/construction_cost.py`` counts them).
 
 Distances are planar-euclidean on lon/lat degrees (matches the DuckDB
 oracle exactly); no longitude wrap (documented limitation).
@@ -79,11 +88,11 @@ import threading
 from collections import OrderedDict
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from workstealing_spatial_join_spark.functions import grid as GRID
-from workstealing_spatial_join_spark.functions.exprs import cexpr, dlit
+from workstealing_spatial_join_spark.functions.exprs import ccol, cexpr, cselect, dlit
 from workstealing_spatial_join_spark.functions.grid import (
     _spark_sql_cell_x,
     _spark_sql_cell_y,
@@ -131,18 +140,18 @@ EARTH_RADIUS_KM = 6371.0088  # IUGG mean radius
 _KM_PER_DEG = EARTH_RADIUS_KM * 3.141592653589793 / 180.0  # ≈ 111.195
 
 
-def _haversine_km(qx, qy, cx, cy):
-    """Great-circle distance in km — pure Catalyst (sin/cos/asin are
-    JVM intrinsics; no Python)."""
-    rad = F.lit(3.141592653589793 / 180.0)
-    dlat = (cy - qy) * rad
-    dlon = (cx - qx) * rad
+def _haversine_km_sql(qx: str, qy: str, cx: str, cy: str) -> str:
+    """Great-circle distance in km between the points in SQL columns
+    ``qx, qy`` and ``cx, cy`` — pure Catalyst (sin/cos/asin are JVM
+    intrinsics; no Python)."""
+    rad = dlit(3.141592653589793 / 180.0)
+    dlat = f"(({cy} - {qy}) * {rad})"
+    dlon = f"(({cx} - {qx}) * {rad})"
     a = (
-        F.sin(dlat / 2) * F.sin(dlat / 2)
-        + F.cos(qy * rad) * F.cos(cy * rad)
-        * F.sin(dlon / 2) * F.sin(dlon / 2)
+        f"SIN({dlat} / 2) * SIN({dlat} / 2) + COS({qy} * {rad}) * COS({cy} * {rad})"
+        f" * SIN({dlon} / 2) * SIN({dlon} / 2)"
     )
-    return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
+    return f"{dlit(2.0 * EARTH_RADIUS_KM)} * ASIN(SQRT({a}))"
 
 
 def _density_ring(stats, k: int, cell_deg: float,
@@ -252,9 +261,7 @@ def _candidate_frame(candidates: DataFrame, cand_id: str, c_lon: str,
                      c_lat: str, cell_deg: float) -> DataFrame:
     """(neighbor_id, cx, cy, cell_id) of the candidate layer."""
     return candidates.select(
-        F.col(cand_id).alias("neighbor_id"),
-        F.col(c_lon).alias("cx"),
-        F.col(c_lat).alias("cy"),
+        ccol(cand_id, "neighbor_id"), ccol(c_lon, "cx"), ccol(c_lat, "cy"),
     ).withColumn("cell_id", GRID.cell_id_named("cx", "cy", cell_deg))
 
 
@@ -317,50 +324,42 @@ def _haversine_ring_cover(
     band's extreme |lat| (the linear ρ/cos φ bound UNDER-covers at
     high latitude); when sin-ratio ≥ 1 the radius wraps the pole and
     every longitude qualifies. Longitude WRAPS at ±180° (pmod ring
-    indices; array_distinct collapses full-circle rings)."""
+    indices; array_distinct collapses full-circle rings). The cells of
+    one ring column are consecutive ids, so they explode as one
+    sequence. Both generators are memoized SQL (functions/exprs.py)."""
     nx, ny = GRID.grid_dims(cell_deg)
     lat_deg = radius_km / _KM_PER_DEG
     r_lat_cells = max(1, math.ceil(lat_deg / cell_deg))
-    extreme = F.least(F.abs(F.col("qy")) + F.lit(lat_deg), F.lit(89.99))
-    rad = F.lit(3.141592653589793 / 180.0)
-    sin_half = F.lit(math.sin(min(radius_km, 3.0 * EARTH_RADIUS_KM) /
-                              (2.0 * EARTH_RADIUS_KM)))
-    ratio = sin_half / F.cos(extreme * rad)
-    lon_deg = F.asin(F.least(ratio, F.lit(1.0))) * F.lit(2.0) / rad + F.lit(1e-9)
+    rad = dlit(3.141592653589793 / 180.0)
+    lat = f"(ABS(qy) + {dlit(lat_deg)})"
+    sin_half = dlit(math.sin(min(radius_km, 3.0 * EARTH_RADIUS_KM) /
+                             (2.0 * EARTH_RADIUS_KM)))
+    ratio = f"({sin_half} / COS(LEAST({lat}, 89.99D) * {rad}))"
+    lon_deg = f"(ASIN(LEAST({ratio}, 1.0D)) * 2.0D / {rad} + {dlit(1e-9)})"
     # full-circle cover when the ball reaches within 0.01° of the pole
     # (the extreme-latitude clamp would otherwise under-cover tiny
     # radii right at the pole: cross-pole neighbors sit at dlon=180°)
     # or when the sin-ratio bound wraps
-    rx = F.when(
-        (ratio >= 1.0)
-        | (F.abs(F.col("qy")) + F.lit(lat_deg) >= F.lit(89.99)),
-        F.lit(int(nx)).cast("long"),
-    ).otherwise(F.ceil(lon_deg / F.lit(cell_deg)).cast("long"))
-    cx_idx = GRID.cell_x_col(F.col("qx"), cell_deg)
-    cy_idx = GRID.cell_y_col(F.col("qy"), cell_deg)
+    rx = (
+        f"(CASE WHEN {ratio} >= 1.0D OR {lat} >= 89.99D THEN {int(nx)}L "
+        f"ELSE CAST(CEIL({lon_deg} / {dlit(cell_deg)}) AS BIGINT) END)"
+    )
+    cx = _spark_sql_cell_x("qx", cell_deg)
+    cy = _spark_sql_cell_y("qy", cell_deg)
+    column = "ring_x * 4294967296L"
     return q.withColumn(
         "ring_x",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(cx_idx - rx, cx_idx + rx),
-                    lambda x: F.pmod(x, F.lit(int(nx))),
-                )
-            )
-        ),
-    ).withColumn(
-        "ring_y",
-        F.explode(
-            F.sequence(
-                F.greatest(cy_idx - F.lit(r_lat_cells), F.lit(0)),
-                F.least(cy_idx + F.lit(r_lat_cells), F.lit(ny - 1)),
-            )
+        cexpr(
+            f"explode(array_distinct(transform(sequence({cx} - {rx}, {cx} + {rx}), "
+            f"x -> pmod(x, {int(nx)}))))"
         ),
     ).withColumn(
         "cell_id",
-        F.col("ring_x").cast("long") * F.lit(4294967296).cast("long")
-        + F.col("ring_y").cast("long"),
-    ).drop("ring_x", "ring_y")
+        cexpr(
+            f"explode(sequence({column} + GREATEST({cy} - {r_lat_cells}, 0), "
+            f"{column} + LEAST({cy} + {r_lat_cells}, {ny - 1})))"
+        ),
+    ).drop("ring_x")
 
 
 def dwithin_haversine_join(
@@ -385,27 +384,18 @@ def dwithin_haversine_join(
     sphere — ring indices pass through pmod; array_distinct collapses
     full-circle rings). Everything stays Catalyst; the per-row
     longitude cover is a per-row sequence bound."""
-    q = left.select(
-        F.col(left_id).alias("left_id"),
-        F.col(l_lon).alias("qx"),
-        F.col(l_lat).alias("qy"),
-    )
+    q = left.select(ccol(left_id, "left_id"), ccol(l_lon, "qx"), ccol(l_lat, "qy"))
     c = right.select(
-        F.col(right_id).alias("right_id"),
-        F.col(r_lon).alias("cx"),
-        F.col(r_lat).alias("cy"),
+        ccol(right_id, "right_id"), ccol(r_lon, "cx"), ccol(r_lat, "cy"),
     ).withColumn("cell_id", GRID.cell_id_named("cx", "cy", cell_deg))
 
     ringed = _haversine_ring_cover(q, radius_km, cell_deg)
     cand = ringed.join(c, on="cell_id")
     if exclude_self:
-        cand = cand.where(F.col("left_id") != F.col("right_id"))
-    return cand.withColumn(
-        "dist_km",
-        _haversine_km(F.col("qx"), F.col("qy"), F.col("cx"), F.col("cy")),
-    ).where(F.col("dist_km") <= F.lit(float(radius_km))).select(
-        "left_id", "right_id", "dist_km"
-    )
+        cand = cand.where(cexpr("left_id != right_id"))
+    return cselect(
+        cand, "left_id", "right_id", f"{_haversine_km_sql('qx', 'qy', 'cx', 'cy')} AS dist_km"
+    ).where(cexpr(f"dist_km <= {dlit(radius_km)}"))
 
 
 def knn_haversine_join(
@@ -432,11 +422,7 @@ def knn_haversine_join(
     ties break by neighbor_id. A query id on several rows is one query,
     at the least (lon, lat) of its rows (``_one_row_per_id``)."""
     global_cover_km = 180.0 * _KM_PER_DEG + 1.0  # whole globe covered
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(q_lon).alias("qx"),
-        F.col(q_lat).alias("qy"),
-    )
+    q = queries.select(ccol(query_id, "query_id"), ccol(q_lon, "qx"), ccol(q_lat, "qy"))
     if initial_radius_km == "auto":
         # first ring from the profile's grand-total row (count and box)
         profile = _candidate_profile(candidates, cand_id, c_lon, c_lat, cell_deg)
@@ -447,25 +433,16 @@ def knn_haversine_join(
     else:
         c = _candidate_frame(candidates, cand_id, c_lon, c_lat, cell_deg)
 
-    w = Window.partitionBy("query_id").orderBy("dist_km", "neighbor_id")
     if stats is not None:
         stats["initial_radius_km"] = float(initial_radius_km)
+    dist_km = _haversine_km_sql("qx", "qy", "cx", "cy")
 
     def round_topk(remaining: DataFrame, radius: float) -> DataFrame:
         ringed = _haversine_ring_cover(remaining, radius, cell_deg)
         cand = ringed.join(c, on="cell_id")
         if exclude_self:
-            cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
-        scored = cand.withColumn(
-            "dist_km",
-            _haversine_km(F.col("qx"), F.col("qy"), F.col("cx"), F.col("cy")),
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "dist_km",
-                    F.lit(radius).alias("reach"))
-        )
+            cand = cand.where(cexpr("query_id != neighbor_id"))
+        return _top_k(cand, k, "dist_km", dist_km, dlit(radius))
 
     return _settle_rounds(
         q, k, float(initial_radius_km), lambda radius: radius >= global_cover_km,
@@ -494,30 +471,45 @@ def _one_row_per_id(q: DataFrame) -> DataFrame:
     )
 
 
+def _top_k(cand: DataFrame, k: int, name: str, dist: str, reach: str) -> DataFrame:
+    """The candidate pairs up to rank k per query, ranked by (distance,
+    neighbor_id): (query_id, neighbor_id, ``name``, reach, rank), from
+    the SQL of the pair's distance ``dist`` and the query's ``reach``.
+    One memoized projection with the window, and one filter."""
+    return cselect(
+        cand, "query_id", "neighbor_id", f"{dist} AS {name}", f"{reach} AS reach",
+        f"row_number() OVER (PARTITION BY query_id ORDER BY {dist}, neighbor_id) AS rank",
+    ).where(cexpr(f"rank <= {int(k)}"))
+
+
 def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
                    dist: str, stats: dict | None, q_cached: bool) -> DataFrame:
     """The driver loop shared by both kNN joins. ``round_topk(remaining,
-    ring)`` plans one round's top-k with a ``reach`` column (the radius
-    within which that query has seen every candidate); ``ring`` starts
-    at ``first`` and doubles until ``is_final(ring)``, whose round is
-    kept whole.
+    ring)`` plans one round's top-k (``_top_k``) with a ``reach`` column
+    (the radius within which that query has seen every candidate);
+    ``ring`` starts at ``first`` and doubles until ``is_final(ring)``,
+    whose round is kept whole.
 
-    Round bookkeeping by OBSERVATION: the round's top-k and settle
-    classification materialize in ONE checkpoint job, and two
+    A query SETTLES when its rank-k row has ``dist`` strictly below
+    its reach: its rows up to rank k are ordered by ``dist``, so that
+    row exists exactly when k candidates were found, and it holds the
+    largest of their distances. Round bookkeeping by OBSERVATION: the
+    round's top-k materializes in ONE checkpoint job, and two
     ``Observation``s ride in it — the rows of the round's query input
     (observed on the query side, below the cover broadcast) and the
-    settled rank-1 rows (one per settled query id). Equal counts mean
-    every query settled, and the loop ends with no further job. They
-    differ when query ids repeat (duplicated rows share one window
-    partition, so they settle as one id) or when a query has no
-    candidate this round (it is absent from the top-k); only then does
-    the loop run one distinct count of the remaining ids and continue
-    by subtraction. The remaining-queries frame stays a lazy anti-join
-    chain over the per-round checkpoints (depth = rounds, each parent
-    materialized — no exponential regrowth). Its root is the query
-    frame as given when ``q_cached`` (the caller's frame is one cached
-    relation), else one eager checkpoint of it, so an expensive
-    upstream plan does not re-run per round.
+    settled rank-k rows (at most one per query id). Equal counts mean
+    every query settled, and the checkpoint is the round's answer as it
+    is, with no further job. They differ when query ids repeat
+    (duplicated rows share one window partition, so they settle as one
+    id) or when a query has no candidate or fewer than k this round;
+    only then does the loop run one distinct count of the remaining
+    ids, read the settled ids from the checkpoint's rank-k rows and
+    continue by subtraction. The remaining-queries frame stays a lazy
+    anti-join chain over the per-round checkpoints (depth = rounds,
+    each parent materialized — no exponential regrowth). Its root is
+    the query frame as given when ``q_cached`` (the caller's frame is
+    one cached relation), else one eager checkpoint of it, so an
+    expensive upstream plan does not re-run per round.
 
     Repeated query ids show at the first mismatch: fewer distinct ids
     than observed rows. The ids' rows would share one window partition
@@ -525,6 +517,13 @@ def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
     one row per id (``_one_row_per_id``) and the round runs again; with
     unique ids nothing more runs. A first round that is already final
     observes nothing, so repeated ids there still repeat neighbours."""
+    # settled: k found and k-th dist STRICTLY within the reach. The
+    # cover only guarantees unseen candidates lie beyond the reach in
+    # exact arithmetic; after float rounding an unseen candidate's dist
+    # can collapse to exactly the reach and tie-break ahead of a kept
+    # one — strict '<' closes that hole at the cost of one extra round
+    # for exact-boundary kth.
+    settled_kth = f"rank = {int(k)} AND {dist} < reach"
     if stats is not None:
         stats["rounds"] = 0
     remaining = q if q_cached else q.localCheckpoint(eager=True)
@@ -535,59 +534,41 @@ def _settle_rounds(q: DataFrame, k: int, first, is_final, round_topk,
         if stats is not None:
             stats["rounds"] += 1
         if is_final(ring):
-            settled_parts.append(round_topk(remaining, ring).drop("reach"))
+            settled_parts.append(round_topk(remaining, ring))
             break
         seen, done = Observation(), Observation()
-        topk = round_topk(
-            remaining.observe(seen, F.count(F.lit(1)).alias("n")), ring
-        )
-        # settled: k found and k-th dist STRICTLY within the reach. The
-        # cover only guarantees unseen candidates lie beyond the reach
-        # in exact arithmetic; after float rounding an unseen
-        # candidate's dist can collapse to exactly the reach and
-        # tie-break ahead of a kept one — strict '<' closes that hole
-        # at the cost of one extra round for exact-boundary kth.
-        # The settle test rides the SAME window partitioning as the
-        # top-k (count/max over partitionBy query_id reuse the
-        # row_number exchange).
-        wq = Window.partitionBy("query_id")
-        flagged = (
-            topk.withColumn(
-                "settled",
-                (F.count(F.lit(1)).over(wq) >= k)
-                & (F.max(dist).over(wq) < F.col("reach")),
-            )
-            .drop("reach")
-            .observe(done, F.count_if(F.col("settled") & (F.col("rank") == 1)).alias("n"))
+        topk = (
+            round_topk(remaining.observe(seen, cexpr("count(1) AS n")), ring)
+            .observe(done, cexpr(f"count_if({settled_kth}) AS n"))
             .localCheckpoint(eager=True)
         )
-        settled = flagged.where("settled").drop("settled")
-        settled_parts.append(settled)
         n_done = _observed_count(done) or 0
         if n_remaining is None:
             n_seen = _observed_count(seen)
             if n_seen == n_done:
+                settled_parts.append(topk)
                 break
             n_remaining = remaining.select("query_id").distinct().count()
             if n_seen is not None and n_remaining < n_seen:
                 # an id on several rows: one query at its least
                 # coordinate; this round is run again on one row per id
                 remaining = _one_row_per_id(remaining)
-                settled_parts.clear()
                 n_remaining = None
                 if stats is not None:
                     stats["rounds"] -= 1  # the ring rounds of the answer
                 continue
         n_remaining -= n_done
-        if n_remaining <= 0:
+        if n_remaining <= 0:  # every remaining id settled
+            settled_parts.append(topk)
             break
-        settled_ids = settled.where(F.col("rank") == 1).select("query_id")
+        settled_ids = topk.where(cexpr(settled_kth)).select("query_id")
+        settled_parts.append(topk.join(settled_ids, on="query_id", how="left_semi"))
         remaining = remaining.join(settled_ids, on="query_id", how="left_anti")
         ring *= 2
     out = settled_parts[0]
     for part in settled_parts[1:]:
         out = out.unionByName(part)
-    return out
+    return cselect(out, "query_id", "neighbor_id", "rank", dist)
 
 
 def dwithin_join(
@@ -686,58 +667,68 @@ def _candidate_sub_sql(cell_deg: float) -> str:
 
 
 def _fine_cover(q: DataFrame, r: int, cell_deg: float,
-                split: list[tuple[int, int]]) -> DataFrame:
-    """Explode query rows (query_id, qx, qy, lq) into every
-    (cell_id, sub) their box meets. The box is the query's fine ring r
-    at its level lq in u-space: [(f − r) / 2^lq, (f + r + 1) / 2^lq)
-    per axis, f the query's clamped fine index — exact dyadic bounds
-    (lq = 0 gives the coarse ring [cell − r, cell + r] exactly). The
-    coarse cells come first; each split cell then explodes the fine
-    indices the bounds meet at its own level, with the candidate
-    side's floor and clamp, so the box's candidates all match."""
+                split: list[tuple[int, int]], lq: str) -> DataFrame:
+    """Explode query rows (query_id, qx, qy) into every (q_cell, q_sub)
+    their box meets, keeping the query's level ``lq`` (its SQL: 0 in
+    the final round). The box is the query's fine ring r at level lq in
+    u-space: [(f − r) / 2^lq, (f + r + 1) / 2^lq) per axis, f the
+    query's clamped fine index — exact dyadic bounds (lq = 0 gives the
+    coarse ring [cell − r, cell + r] exactly). The coarse cells come
+    first; each split cell then explodes the fine indices the bounds
+    meet at its own level, with the candidate side's floor and clamp,
+    so the box's candidates all match.
+
+    Four memoized selects: the level and the clamped fine index (once
+    per axis), the coarse cells, their levels, and the fine cells. A
+    coarse column's cells are consecutive ids and a fine column's cells
+    consecutive subs, so each generator explodes one sequence per
+    column."""
     nx, ny = GRID.grid_dims(cell_deg)
     d = dlit(cell_deg)
     pq = "shiftleft(1L, lq)"
     p = "shiftleft(1L, lvl)"
 
-    def bounds(u: str, cell: str, axis: str) -> list:
-        f = f"LEAST(GREATEST(FLOOR({u} * {pq}), {cell} * {pq}), {cell} * {pq} + {pq} - 1L)"
-        return [
-            cexpr(f"(({f}) - {int(r)}L) / {pq} AS {axis}_lo"),
-            cexpr(f"(({f}) + {int(r) + 1}L) / {pq} AS {axis}_hi"),
-        ]
+    def fine_index(u: str, cell: str) -> str:
+        scale = f"shiftleft(1L, {lq})"  # 2^lq, before lq is a column
+        return (f"LEAST(GREATEST(FLOOR({u} * {scale}), {cell} * {scale}), "
+                f"{cell} * {scale} + {scale} - 1L)")
 
-    def coarse(axis: str, n: int) -> object:
-        return cexpr(
-            f"explode(sequence(GREATEST(FLOOR({axis}_lo), 0L), "
-            f"LEAST(CEIL({axis}_hi) - 1L, {n - 1}L)))"
+    def lo(axis: str) -> str:
+        return f"((f{axis} - {int(r)}L) / {pq})"
+
+    def hi(axis: str) -> str:
+        return f"((f{axis} + {int(r) + 1}L) / {pq})"
+
+    def coarse(axis: str, n: int) -> tuple[str, str]:
+        return (f"GREATEST(FLOOR({lo(axis)}), 0L)",
+                f"LEAST(CEIL({hi(axis)}) - 1L, {n - 1}L)")
+
+    def fine(axis: str, cell: str) -> tuple[str, str]:
+        return (f"GREATEST(FLOOR({lo(axis)} * {p}) - {cell} * {p}, 0L)",
+                f"LEAST(CEIL({hi(axis)} * {p}) - 1L - {cell} * {p}, {p} - 1L)")
+
+    def explode(xs: tuple[str, str], ys: tuple[str, str], row: str) -> str:
+        """Every ``row(x) + y`` over the two closed ranges."""
+        return (
+            f"explode(flatten(transform(sequence({xs[0]}, {xs[1]}), "
+            f"x -> sequence({row} + {ys[0]}, {row} + {ys[1]}))))"
         )
 
-    def fine(axis: str) -> object:
-        return cexpr(
-            f"explode(sequence(GREATEST(FLOOR({axis}_lo * {p}) - ring_{axis} * {p}, 0L), "
-            f"LEAST(CEIL({axis}_hi * {p}) - 1L - ring_{axis} * {p}, {p} - 1L)))"
-        )
-
-    box = q.select(
-        "query_id", "qx", "qy", "lq",
-        *bounds(f"((qx + 180.0D) / {d})", _spark_sql_cell_x("qx", cell_deg), "x"),
-        *bounds(f"((qy + 90.0D) / {d})", _spark_sql_cell_y("qy", cell_deg), "y"),
+    box = cselect(
+        q, "query_id", "qx", "qy", f"{lq} AS lq",
+        f"{fine_index(f'((qx + 180.0D) / {d})', _spark_sql_cell_x('qx', cell_deg))} AS fx",
+        f"{fine_index(f'((qy + 90.0D) / {d})', _spark_sql_cell_y('qy', cell_deg))} AS fy",
     )
-    cells = (
-        box.withColumn("ring_x", coarse("x", nx))
-        .withColumn("ring_y", coarse("y", ny))
-        .withColumn("cell_id", cexpr("ring_x * 4294967296L + ring_y"))
+    base = ("query_id", "qx", "qy", "lq", "fx", "fy")
+    cells = cselect(
+        box, *base,
+        f"{explode(coarse('x', nx), coarse('y', ny), 'x * 4294967296L')} AS q_cell",
     )
-    return (
-        cells.withColumn("lvl", cexpr(_level_sql("cell_id", split)))
-        .withColumn("sub_x", fine("x"))
-        .withColumn("sub_y", fine("y"))
-        .select(
-            "query_id", "qx", "qy", "lq", "cell_id",
-            cexpr(f"sub_x * {p} + sub_y AS sub"),
-        )
+    leveled = cselect(cells, *base, "q_cell", f"{_level_sql('q_cell', split)} AS lvl")
+    fines = explode(
+        fine("x", "shiftright(q_cell, 32)"), fine("y", "(q_cell & 4294967295L)"), f"x * {p}"
     )
+    return cselect(leveled, "query_id", "qx", "qy", "lq", "q_cell", f"{fines} AS q_sub")
 
 
 def knn_join(
@@ -801,11 +792,7 @@ def knn_join(
         raise ValueError(f"unknown metric {metric!r}")
     nx, ny = GRID.grid_dims(cell_deg)
     max_ring = max_ring or max(nx, ny)
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(q_lon).alias("qx"),
-        F.col(q_lat).alias("qy"),
-    )
+    q = queries.select(ccol(query_id, "query_id"), ccol(q_lon, "qx"), ccol(q_lat, "qy"))
     profile = _candidate_profile(candidates, cand_id, c_lon, c_lat, cell_deg)
     r0, split = _split_table(profile.rows, k, cell_deg, initial_ring, max_ring)
     if stats is not None:
@@ -819,31 +806,23 @@ def knn_join(
         split,
     )
 
-    w = Window.partitionBy("query_id").orderBy("dist", "neighbor_id")
+    on = "q_cell = cell_id AND q_sub = sub"
+    if exclude_self:
+        on += " AND query_id != neighbor_id"
 
     def round_topk(remaining: DataFrame, r: int) -> DataFrame:
         # the final round searches the coarse ring (lq = 0)
-        remaining = remaining.withColumn(
-            "lq", cexpr("0" if r >= max_ring else own_level)
+        covered = _fine_cover(
+            remaining, r, cell_deg, split, "0" if r >= max_ring else own_level
         )
-        covered = _fine_cover(remaining, r, cell_deg, split)
-        cand = covered.join(keyed, on=["cell_id", "sub"])
-        if exclude_self:
-            cand = cand.where(F.col("query_id") != F.col("neighbor_id"))
+        cand = covered.join(keyed, cexpr(on))
         # plain *, not pow(): basic IEEE ops are bit-identical across
-        # Spark and the DuckDB oracle
-        dx = F.col("qx") - F.col("cx")
-        dy = F.col("qy") - F.col("cy")
-        scored = cand.withColumn("dist", F.sqrt(dx * dx + dy * dy))
-        # reach = r·cell_deg / 2^lq: a power-of-two division, so it is
-        # exactly the coarse radius scaled to the query's level
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(
-                "query_id", "neighbor_id", "rank", "dist",
-                cexpr(f"{dlit(float(r) * cell_deg)} / shiftleft(1L, lq) AS reach"),
-            )
+        # Spark and the DuckDB oracle. reach = r·cell_deg / 2^lq: a
+        # power-of-two division, so it is exactly the coarse radius
+        # scaled to the query's level
+        return _top_k(
+            cand, k, "dist", "SQRT((qx - cx) * (qx - cx) + (qy - cy) * (qy - cy))",
+            f"{dlit(float(r) * cell_deg)} / shiftleft(1L, lq)",
         )
 
     return _settle_rounds(

@@ -412,6 +412,7 @@ class PreparedPolygonLayer:
             cell_partitioned=True,
         )
         self._exploded: dict[str, DataFrame] = {}
+        self._merge_sides: dict[str, DataFrame] = {}
 
     def exploded(self, transport: str) -> DataFrame:
         """The analysis' tessellation, cached (Spark .cache()) per
@@ -432,6 +433,14 @@ class PreparedPolygonLayer:
             self._exploded[transport] = cached
         return self._exploded[transport]
 
+    def merge_side(self, transport: str) -> DataFrame:
+        """``exploded(transport)`` under a merge hint, the build side of
+        a point-in-polygon join that stays where the cache lies; kept,
+        so repeated joins reuse one hinted frame."""
+        if transport not in self._merge_sides:
+            self._merge_sides[transport] = self.exploded(transport).hint("merge")
+        return self._merge_sides[transport]
+
     def release(self) -> int:
         """Unpersist every cached tessellation this layer holds and
         forget them (they rebuild lazily on next use). Long-lived
@@ -446,6 +455,7 @@ class PreparedPolygonLayer:
             except Exception:
                 pass
         self._exploded.clear()
+        self._merge_sides.clear()
         return n
 
 
@@ -574,17 +584,15 @@ def point_in_polygon_join(
     tessellation's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` columns
     or its band row's (``interior_cells.band_fields``).
     """
-    from workstealing_spatial_join_spark.functions.exprs import cexpr
+    from workstealing_spatial_join_spark.functions.exprs import ccol, cexpr
     from workstealing_spatial_join_spark.plans.planner import plan_join
 
     if point_payload and mode != "pairs":
         raise ValueError("point_payload requires mode='pairs'")
     pts = tessellate_points(
         points.select(
-            F.col(point_id).alias("point_id"),
-            F.col(lon).alias("px"),
-            F.col(lat).alias("py"),
-            *[F.col(c) for c in point_payload],
+            ccol(point_id, "point_id"), ccol(lon, "px"), ccol(lat, "py"),
+            *map(ccol, point_payload),
         ),
         lon="px",
         lat="py",
@@ -603,15 +611,16 @@ def point_in_polygon_join(
     plan = plan_join(
         None, layer, "contains" if refine else None, salt_extra_rows=extra
     )
-    polys = tessellate(plan.transport)
     if plan.partitioned_side == "right":
         # the layer's cache is already partitioned and sorted by cell:
         # merge where it lies, and only the points shuffle (by cell)
-        polys = polys.hint("merge")
-    elif plan.transport == "wkb":
-        # only the Python refine needs the spread; a pure-Catalyst plan
-        # runs fine on the scan splits
-        pts = _spread_probe(pts, mode)
+        polys = polygons.merge_side(plan.transport)
+    else:
+        polys = tessellate(plan.transport)
+        if plan.transport == "wkb":
+            # only the Python refine needs the spread; a pure-Catalyst
+            # plan runs fine on the scan splits
+            pts = _spread_probe(pts, mode)
     join_keys = ["cell_id"]
     if hot is not None:
         from workstealing_spatial_join_spark.operators.skew import (
@@ -630,19 +639,17 @@ def point_in_polygon_join(
         # broadcast here is a full shuffle of the probe table)
         polys = F.broadcast(polys)
 
-    cand = pts.join(polys, on=join_keys).where(
-        cexpr(
-            "px >= minx AND px <= maxx AND py >= miny AND py <= maxy"
-        )
-    )
+    # the MBR residual, and for band rows their refine, as one condition
+    condition = "px >= minx AND px <= maxx AND py >= miny AND py <= maxy"
     if plan.transport == "bands":
-        cand = cand.where(cexpr(band_contains_sql(layer.cells.k)))
-    elif plan.transport == "wkb":
+        condition = f"{condition} AND {band_contains_sql(layer.cells.k)}"
+    cand = pts.join(polys, on=join_keys).where(cexpr(condition))
+    if plan.transport == "wkb":
         cand = cand.where(
             PREDICATES["contains_xy"](F.col("geom_wkb"), F.col("px"), F.col("py"))
         )
     if mode == "count":
-        return cand.agg(F.count(F.lit(1)).alias("join_count"))
+        return cand.agg(cexpr("count(1) AS join_count"))
     if mode == "semi":
         return cand.select("point_id").distinct()
     if mode == "anti":
@@ -662,7 +669,7 @@ def point_in_polygon_join(
         )
     if mode == "percell":
         return cand.select("point_id", "poly_id", "cell_id")
-    return cand.select("point_id", "poly_id", *point_payload)
+    return cand.select(*map(ccol, ("point_id", "poly_id", *point_payload)))
 
 
 def polygon_join(
