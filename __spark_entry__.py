@@ -12,6 +12,7 @@ has an exact DuckDB oracle — no rows-only entries:
   F3/F4 filter phase .. pip_*, rect_*, concave_* (cell equi-join + MBR
                         residual; rect layers refine in pure Catalyst)
   J2 PIP join ......... pip_count[_salted] / pip_pairs[_percell]
+                        (pip_count_salted: the name only, see below)
   J3 cogroup strategy . pip_pairs_cogrouped[_salted]
   J5 polygon join ..... rect_join_count / rect_intersection_numpoints
                         / rect_union_numpoints (bounds-CASE oracles);
@@ -30,7 +31,10 @@ has an exact DuckDB oracle — no rows-only entries:
                         (great-circle, pole+antimeridian-safe cover)
   J7 raster↔vector .... tile_assign, tile_rect_overlap_count
   A1-A3 aggregation ... q1_pricing / q6_revenue / every count query
-  LB1 skew salting .... pip_count_salted, pip_pairs_cogrouped_salted
+  LB1 skew salting .... pip_pairs_cogrouped_salted (the cogroup join
+                        only: AQE cannot split a cogroup group; the
+                        Catalyst joins leave a hot cell to placement
+                        and AQE, so pip_count_salted is pip_count)
   dedup family ........ exact_dedup, minhash_neardup (full signature
                         recomputation in SQL), simhash_docs,
                         simhash_dedup (exact-recall pigeonhole LSH),
@@ -153,17 +157,12 @@ def q_pip_count(spark, sf_dir):
 
 
 def q_pip_count_salted(spark, sf_dir):
-    """Same join with LB1 skew handling LIVE: the per-cell cost table
-    salts hot cells (probe split, build replicated) and the equi-join
-    runs on (cell_id, salt). Results must be identical — the same
-    oracle as pip_count checks that."""
-    pts = TB.customer_points(spark, sf_dir)
-    polys = TB.rects_with_geom(TB.supplier_rects(spark, sf_dir))
-    return point_in_polygon_join(
-        pts, polys, point_id="point_id", poly_id="rect_id",
-        mode="count", cell_deg=CELL, salt=True,
-        target_pairs_per_task=2_000,
-    )
+    """The name is kept for the contract; the query is pip_count. The
+    Catalyst PIP join does not salt: a hot cell is handled by where
+    the join runs (see ``point_in_polygon_join``), so the result and
+    the oracle are pip_count's. The cogroup join still salts
+    (pip_pairs_cogrouped_salted)."""
+    return _pip(spark, sf_dir, "count")
 
 
 def q_pip_pairs(spark, sf_dir):

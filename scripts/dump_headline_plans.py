@@ -1,9 +1,10 @@
 """Dump .explain('formatted') for the spatial-join plans into
-plans/r13/<name>_<tag>.txt (or OUT_DIR):
+plans/r14/<name>_<tag>.txt (or OUT_DIR):
 
 * the bench.py headline entries that are not in queries(): the
-  prepared-layer PIP join (count, pairs and salted; a sort-merge join
-  on the layer's cell-partitioned cache), the same join against a
+  prepared-layer PIP join (count, pairs, and bench.py's ``salt=True``
+  count, which plans as the count; a sort-merge join on the layer's
+  cell-partitioned cache), the same join against a
   fresh (unprepared) polygon layer (broadcast), tile_assign and one final
   kNN round, over bench_data/;
 * the non-final kNN round a default-ring ``knn_join`` runs on a cached
@@ -39,7 +40,7 @@ STRICT = re.compile(r"(pip_|rect_|concave_|degenerate_|lines_|zonal_)")
 def main():
     tag = sys.argv[1]
     sf_dir = sys.argv[2]
-    out_dir = sys.argv[3] if len(sys.argv) > 3 else os.path.join(ROOT, "plans", "r13")
+    out_dir = sys.argv[3] if len(sys.argv) > 3 else os.path.join(ROOT, "plans", "r14")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plans", cores=8, shuffle_partitions=8)
     bd = os.path.join(ROOT, "bench_data")

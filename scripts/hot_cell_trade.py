@@ -1,33 +1,44 @@
-"""Task-time skew of a point-in-polygon join on one hot cell, by plan.
+"""Op time and task-time skew of a point-in-polygon join, by probe shape
+and plan.
 
-The bench corpus (``bench_data/``) made hot: the 20k images of the
-fixture's hot box (cell [10, 11] x [45, 46]) are kept, every other image
-only when ``hash(image_id) % 10 == 0``, so the hot cell holds more than
-half of the points; 200 extra polygons (squares and triangles around
-(10.5, 45.5)) are added to the 10k bench polygons, so many polygon rows
-cover that cell. The join (pairs, counted) then runs under three plans:
+Three probe shapes over the bench corpus (``bench_data/``), each against
+one ``PreparedPolygonLayer`` (the join counts its pairs,
+``mode="count"``):
 
-* ``partitioned``: against a ``PreparedPolygonLayer`` — a sort-merge
-  join on the layer's cell-partitioned cache, only the points shuffled;
+* ``hot_both``: the corpus made hot: the 20k images of the fixture's hot
+  box (cell [10, 11] x [45, 46]) are kept, every other image only when
+  ``hash(image_id) % 10 == 0``, so the hot cell holds more than half of
+  the points; 200 extra polygons (squares and triangles around
+  (10.5, 45.5)) are added to the 10k bench polygons, so many polygon
+  rows cover that cell;
+* ``hot_probe``: the same points against the 10k bench polygons alone
+  (the cell is hot on the probe side only);
+* ``uniform``: every bench image against the 10k bench polygons.
+
+Two plans per shape:
+
+* ``merge``: the default, a sort-merge join on the layer's
+  cell-partitioned cache, only the points shuffled;
 * ``broadcast``: the same prepared layer with its analysis marked not
   cell-partitioned, so ``plan_join`` broadcasts its cached tessellation
-  to the points' scan splits (the plan every prepared-layer join had
-  before the layer was cell-partitioned);
-* ``salted``: the prepared layer with ``salt=True`` — hot cells found,
-  so the layer is salted and broadcast.
+  to the points' scan splits.
 
-Per plan: one warm-up op, then ``REPS`` timed ops, each under its own
-job group. Each op reports its wall seconds and perfbench's
-``spark.task_skew``: max ÷ median task time of the stage whose slowest
-task was the slowest of the op (``perfbench/probe.py``). Prints one
+One warm-up round, then ``REPS`` rounds; each round runs every shape
+and plan once, interleaved in one session, each op under its own job
+group. Per shape and plan: the median op seconds and task skew, and
+per op its wall seconds, pairs, jobs and perfbench's
+``spark.task_skew`` (max ÷ median task time of the stage whose slowest
+task was the slowest of the op, ``perfbench/probe.py``). Prints one
 JSON line.
 
 Usage: python scripts/hot_cell_trade.py  (``SPARK_GRAFT_CPUS`` sets the
 cores; shuffle partitions follow them, as in perfbench)
 """
 
+import copy
 import json
 import os
+import statistics
 import sys
 import time
 from dataclasses import replace
@@ -46,7 +57,7 @@ from workstealing_spatial_join_spark.operators.spatial_join import (  # noqa: E4
 )
 from workstealing_spatial_join_spark.session import default_cores, get_spark  # noqa: E402
 
-REPS = 5
+REPS = 7
 HOT_X, HOT_Y = 10.5, 45.5
 
 
@@ -71,50 +82,65 @@ def main():
     sc = spark.sparkContext
     probe = SparkProbe(spark)
     bd = os.path.join(ROOT, "bench_data")
-    images = spark.read.parquet(f"{bd}/images_200000.parquet").select(
-        "image_id", "lon", "lat")
-    hot = (F.floor("lon") == 10) & (F.floor("lat") == 45)
-    images = images.where(hot | (F.abs(F.hash("image_id")) % 10 == 0)).cache()
-    n_points, n_hot = images.agg(F.count("*"), F.sum(hot.cast("int"))).first()
+    corpus = spark.read.parquet(f"{bd}/images_200000.parquet").select(
+        "image_id", "lon", "lat").cache()
+    in_hot = (F.floor("lon") == 10) & (F.floor("lat") == 45)
+    hot = corpus.where(in_hot | (F.abs(F.hash("image_id")) % 10 == 0)).cache()
+    n_points, n_hot = hot.agg(F.count("*"), F.sum(in_hot.cast("int"))).first()
     bench = spark.read.parquet(f"{bd}/polygons_10000.parquet").select(
-        "polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy")
+        "polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy").cache()
     extra = ingest_geometry(
         spark.createDataFrame(hot_polygons_wkt(), "polygon_id string, wkt string"),
         "wkt", keep_cols=["polygon_id"],
     ).select("polygon_id", "geom_wkb", "minx", "miny", "maxx", "maxy")
-    polygons = bench.unionByName(extra).cache()
-    polygons.count()
-    layer = PreparedPolygonLayer(polygons)
-    broadcast = PreparedPolygonLayer(polygons)
-    broadcast.analysis = replace(broadcast.analysis, cell_partitioned=False)
-    plans = {
-        "partitioned": lambda: point_in_polygon_join(images, layer),
-        "broadcast": lambda: point_in_polygon_join(images, broadcast),
-        "salted": lambda: point_in_polygon_join(images, layer, salt=True),
+    layers = {
+        "bench": PreparedPolygonLayer(bench),
+        "hot": PreparedPolygonLayer(bench.unionByName(extra).cache()),
+    }
+    shapes = {
+        "hot_both": (hot, layers["hot"]),
+        "hot_probe": (hot, layers["bench"]),
+        "uniform": (corpus, layers["bench"]),
     }
     out = {"cores": cores, "points": n_points, "hot_cell_points": n_hot,
-           "polygons": polygons.count()}
-    for name, build in plans.items():
-        ops = []
-        for rep in range(REPS + 1):
-            group = f"{name}-{rep}"
+           "corpus_points": corpus.count()}
+    ops = {(shape, plan): [] for shape in shapes for plan in ("merge", "broadcast")}
+    for rep in range(REPS + 1):
+        for (shape, plan), runs in ops.items():
+            points, layer = shapes[shape]
+            side = layer if plan == "merge" else broadcast_twin(layer)
+            group = f"{shape}-{plan}-{rep}"
             sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             try:
-                pairs = build().count()
+                pairs = point_in_polygon_join(points, side, mode="count").first()[0]
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
             wall = time.perf_counter() - t0
             sc._jsc.sc().listenerBus().waitUntilEmpty()
             if rep:
-                skew = probe.job_counts(group)["task_skew"]
-                ops.append({"op_s": round(wall, 3), "pairs": pairs,
-                            "task_skew": round(skew, 2)})
-        out[name] = ops
+                counts = probe.job_counts(group)
+                runs.append({"op_s": round(wall, 3), "pairs": pairs,
+                             "jobs": counts["jobs"],
+                             "task_skew": round(counts["task_skew"], 2)})
+    for (shape, plan), runs in ops.items():
+        out.setdefault(shape, {})[plan] = {
+            "op_s_median": statistics.median(r["op_s"] for r in runs),
+            "task_skew_median": statistics.median(r["task_skew"] for r in runs),
+            "ops": runs,
+        }
     print(json.dumps(out))
-    layer.release()
-    broadcast.release()
+    for layer in layers.values():
+        layer.release()
     spark.stop()
+
+
+def broadcast_twin(layer: PreparedPolygonLayer) -> PreparedPolygonLayer:
+    """The layer (sharing its caches) with its analysis marked not
+    cell-partitioned: ``plan_join`` then broadcasts its tessellation."""
+    twin = copy.copy(layer)
+    twin.analysis = replace(layer.analysis, cell_partitioned=False)
+    return twin
 
 
 if __name__ == "__main__":

@@ -1,12 +1,10 @@
 """The one join planner: ``plan_join``'s broadcast/transport decision
 (pure Python), the closed-form cell counts and the columnar layer
-analysis it is fed, the post-salt gate of both joins, and the probe
-spread on shared coordinates."""
+analysis it is fed, and the probe spread on shared coordinates."""
 
 import math
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,11 +13,9 @@ from workstealing_spatial_join_spark.operators import spatial_join as SJ
 from workstealing_spatial_join_spark.operators.spatial_join import (
     LayerAnalysis,
     point_in_polygon_join,
-    polygon_join,
     tessellate_bbox,
     tessellate_points,
 )
-from workstealing_spatial_join_spark.plans import planner
 from workstealing_spatial_join_spark.plans.planner import (
     BOUNDS_ROW_BYTES,
     BROADCAST_BUDGET_BYTES,
@@ -82,15 +78,6 @@ def test_bands_transport_counts_band_rows_and_band_bytes():
     assert plan_join(None, side(ROW_CAP, cells=half), "contains").broadcast_side == "right"
     heavy = classes(ROW_CAP // 2 - 10, 10, band_bytes=BROADCAST_BUDGET_BYTES // 2 + 1)
     assert plan_join(None, side(ROW_CAP, cells=heavy), "contains").broadcast_side is None
-    # salted replicas carry the layer's mean band bytes per row
-    rows = classes(900, 100, band_bytes=1_000 * BOUNDS_ROW_BYTES)
-    extra = ROW_CAP // 2 - 1_000
-    assert plan_join(
-        None, side(5_000, cells=rows), "contains", salt_extra_rows=extra
-    ).broadcast_side == "right"
-    assert plan_join(
-        None, side(5_000, cells=rows), "contains", salt_extra_rows=extra + 1
-    ).broadcast_side is None
 
 
 def test_over_budget_sides_are_left_to_aqe():
@@ -107,8 +94,8 @@ def test_uncollected_side_is_never_forced():
 
 def test_cell_partitioned_layer_keeps_the_points_moving():
     """A point probe against a cell-partitioned (prepared) layer joins
-    where the layer lies, whatever its size or transport; salting (hot
-    cells found) and polygon joins keep the broadcast rule."""
+    where the layer lies, whatever its size or transport; polygon joins
+    keep the broadcast rule."""
     from dataclasses import replace
 
     cells = classes(interior=5, boundary=5)
@@ -124,8 +111,6 @@ def test_cell_partitioned_layer_keeps_the_points_moving():
         )
         assert plan_join(None, layer, "contains").partitioned_side is None
     prepared = replace(side(10, cells=cells), cell_partitioned=True)
-    salted = plan_join(None, prepared, "contains", salt_extra_rows=3)
-    assert (salted.broadcast_side, salted.partitioned_side) == ("right", None)
     pair = plan_join(prepared, prepared, "intersects")
     assert (pair.broadcast_side, pair.partitioned_side) == ("right", None)
 
@@ -134,19 +119,6 @@ def test_smaller_fitting_side_replicates():
     assert plan_join(side(10), side(20), "intersects").broadcast_side == "left"
     assert plan_join(side(20), side(10), "intersects").broadcast_side == "right"
     assert plan_join(side(10), side(10), "intersects").broadcast_side == "right"
-
-
-def test_salting_fixes_roles_and_gates_post_salt_rows():
-    def salted(left, right, extra):
-        pred = "contains" if left is None else "intersects"
-        return plan_join(left, right, pred, salt_extra_rows=extra).broadcast_side
-
-    # the salted left side is the probe: never broadcast
-    assert salted(side(10), side(20), 0) == "right"
-    # the right side is gated on its post-salt size
-    assert salted(None, side(ROW_CAP - 5), 5) == "right"
-    assert salted(None, side(ROW_CAP - 5), 6) is None
-    assert salted(side(10), side(ROW_CAP), 1) is None
 
 
 def test_transport_rules():
@@ -203,16 +175,19 @@ def test_closed_form_cells_match_spark(spark, bounds):
         "minx double, miny double, maxx double, maxy double",
     )
     bounds = SJ._bounds_array(df.toArrow())
-    _, _, w, h = SJ._cell_spans(bounds, 1.0)
+    cx0, cy0, w, h = SJ._cell_spans(bounds, 1.0)
     ncell = w * h
     exploded = tessellate_bbox(df, 1.0)
     assert int(ncell.sum()) == exploded.count()
-    per_row = {r["id"]: r["count"] for r in exploded.groupBy("id").count().collect()}
-    assert ncell.tolist() == [per_row[1], per_row[2]]
-    assert SJ._cell_row_counts(bounds, 1.0) == sorted(
-        (r["cell_id"], r["count"])
-        for r in exploded.groupBy("cell_id").count().collect()
-    )
+    per_row = {
+        r["id"]: (r["n"], r["first"])
+        for r in exploded.groupBy("id").agg(
+            F.count(F.lit(1)).alias("n"), F.min("cell_id").alias("first")
+        ).collect()
+    }
+    # each row's cell count, and its first covering cell (the least id)
+    first = (cx0 * 4294967296 + cy0).tolist()
+    assert list(zip(ncell.tolist(), first)) == [per_row[1], per_row[2]]
     if bounds[0] is None or (isinstance(bounds[0], float) and math.isnan(bounds[0])):
         assert ncell[0] == 364  # column 0 .. 181, rows 90 .. 91
 
@@ -279,10 +254,6 @@ def test_columnar_analysis_matches_spark(spark, case, monkeypatch):
     ).first()[0]
     # DISTINCT keeps one NULL, as the id uniqueness must
     assert a.unique_ids == (df.select("id").distinct().count() == df.count())
-    assert a.cell_counts == sorted(
-        (r["cell_id"], r["count"])
-        for r in exploded.groupBy("cell_id").count().collect()
-    )
     assert a.all_rects is all_rects
     # the replay keeps the id's Spark type and the NULL bounds
     assert a.src.schema == df.schema
@@ -307,73 +278,6 @@ def test_columnar_analysis_matches_spark(spark, case, monkeypatch):
     assert collected == pairs(df)
     if case == "null_wkb":
         assert all(pid != 1 for _, pid in collected)
-
-
-# ------------------------------------------ post-salt gate (joins)
-
-
-def _diamonds(spark, centers, id_col, r=0.05):
-    from workstealing_spatial_join_spark.operators.ingest import ingest_geometry
-
-    pdf = pd.DataFrame(
-        {
-            id_col: np.arange(len(centers)),
-            "wkt": [
-                f"POLYGON (({x - r} {y}, {x} {y - r}, {x + r} {y}, "
-                f"{x} {y + r}, {x - r} {y}))"
-                for x, y in centers
-            ],
-        }
-    )
-    return ingest_geometry(spark.createDataFrame(pdf), "wkt", keep_cols=[id_col])
-
-
-@pytest.fixture(scope="module")
-def skewed_layers(spark):
-    """300 left and 40 right diamonds in the hot cell [0,1)², a few
-    elsewhere: one cell holds nearly every candidate pair."""
-    rng = np.random.default_rng(7)
-    hot_l = rng.uniform(0.06, 0.94, (300, 2))
-    hot_r = rng.uniform(0.06, 0.94, (40, 2))
-    cold = rng.integers(10, 40, (10, 2)) + 0.5
-    left = _diamonds(spark, np.vstack([hot_l, cold]), "a_id").cache()
-    right = _diamonds(spark, np.vstack([hot_r, cold]), "b_id").cache()
-    return left, right
-
-
-def test_polygon_join_salt_is_gated_post_salt(spark, skewed_layers, monkeypatch):
-    left, right = skewed_layers
-    kw = dict(predicate="intersection_numpoints", mode="pairs")
-
-    def pairs(df):
-        return {(r.lid, r.rid, r.num_points) for r in df.collect()}
-
-    plain = pairs(polygon_join(left, right, "a_id", "b_id", **kw))
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        # within the budget after salting: the candidate join is forced
-        # to broadcast (beside the two broadcast salt-table joins)
-        salted = polygon_join(
-            left, right, "a_id", "b_id", salt=True, target_pairs_per_task=100, **kw
-        )
-        assert planner.audit_plan(salted)["broadcast_joins"] == 3
-        assert pairs(salted) == plain and len(plain) > 0
-        # 50 exploded right rows fit before salting; 64 salts in the
-        # hot cell add 63 × 40 rows, which do not
-        budget = 100 * BOUNDS_ROW_BYTES
-        monkeypatch.setattr(planner, "BROADCAST_BUDGET_BYTES", budget)
-        assert plan_join(None, side(50), "contains").broadcast_side == "right"
-        salted = polygon_join(
-            left, right, "a_id", "b_id", salt=True, target_pairs_per_task=100, **kw
-        )
-        audit = planner.audit_plan(salted)
-        assert audit["broadcast_joins"] == 2
-        assert audit["sortmerge_joins"] + audit["shuffledhash_joins"] == 1
-        assert pairs(salted) == plain
-    finally:
-        spark.conf.set(key, prev)
 
 
 # ------------------------------------------------- probe spread

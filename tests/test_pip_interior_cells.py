@@ -196,7 +196,6 @@ def frames(spark, points_pdf):
 def run(points, layer, mode, salt, cell_deg):
     return point_in_polygon_join(
         points, layer, poly_id="pid", mode=mode, salt=salt, cell_deg=cell_deg,
-        target_pairs_per_task=50,
     )
 
 

@@ -282,15 +282,33 @@ def test_driver_query_python_node_budgets(spark):
         assert audit["python_nodes"]["BatchEvalPython"] == 0, name
 
 
-def test_salted_pip_keeps_broadcast_build_side(layers):
-    """salt_build_side's explode wrecks AQE's size stats; a known-
-    small build side must still broadcast (round-3 fix: salted PIP
-    was falling back to a full shuffle join)."""
+def test_salted_pip_plans_and_runs_as_unsalted(spark, layers):
+    """``salt=True`` is accepted and ignored: on a prepared and on a
+    fresh layer the join has the plan of ``salt=False`` (the same node
+    counts, no salt column) and runs the same jobs, with no per-call
+    cost-table job."""
     images, polys = layers
-    df = point_in_polygon_join(images, polys, mode="count", salt=True)
-    audit = audit_plan(df)
-    assert audit["broadcast_joins"] >= 1, audit["plan"][:2000]
-    assert audit["sortmerge_joins"] == 0
+    layer = PreparedPolygonLayer(polys)
+    point_in_polygon_join(images, layer, mode="count").collect()  # caches the layer
+    sc = spark.sparkContext
+
+    def run(side, salt):
+        group = f"salt-{salt}-{id(side)}"
+        sc.setJobGroup(group, group)
+        try:
+            df = point_in_polygon_join(images, side, mode="pairs", salt=salt)
+            n = df.count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        audit = audit_plan(df)
+        assert "salt" not in audit.pop("plan")
+        return audit, n, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for side in (layer, polys):
+        plain, salted = run(side, False), run(side, True)
+        assert salted == plain and plain[1] > 0, (salted, plain)
+    layer.release()
 
 
 # ------------------------------------- prepared layer: cell-partitioned

@@ -1,7 +1,6 @@
 """SLOW Spark-level property sweep (ROADMAP "test debt"): many random
 layer pairs through the FULL distributed engine (tessellation →
-equi-join → refine, alternating the salted strategy) compared against
-the serial brute-force oracle.
+equi-join → refine) compared against the serial brute-force oracle.
 
 Gated behind SLOW_TESTS=1 so `pytest tests/` stays inside the CI
 budget; run explicitly with:
@@ -90,14 +89,11 @@ def test_pip_join_matches_oracle_random_layers(spark, round_idx):
     sdf_polys = ingest_geometry(
         spark.createDataFrame(polys), "wkt", keep_cols=["polygon_id"]
     )
-    salt = bool(round_idx % 2)  # alternate the salted strategy
     got = {
         (r.point_id, r.poly_id)
-        for r in point_in_polygon_join(
-            sdf_pts, sdf_polys, salt=salt
-        ).collect()
+        for r in point_in_polygon_join(sdf_pts, sdf_polys).collect()
     }
     assert got == want, (
-        f"round {round_idx} (salt={salt}): engine != oracle "
+        f"round {round_idx}: engine != oracle "
         f"({len(got)} vs {len(want)} pairs)"
     )

@@ -11,8 +11,9 @@ load balancing) as an idiomatic Spark engine:
   (reference: STRtree filter, src/spatial_join.cpp:14-37)
 * refine phase  = vectorized NumPy kernels inside Arrow-batched pandas
   UDFs (reference: GEOS exact predicates, src/thread_util.cpp:412-455)
-* work stealing = reborn as explicit skew handling: per-cell cost
-  estimation, salted repartitioning of hot cells, AQE skew-join splits
+* work stealing = reborn as skew handling by placement: broadcast or
+  cell-partitioned layers, AQE skew-join splits, and salted hot cells
+  for the cogroup joins AQE cannot split
   (reference: include/wsq.hpp, src/mpi_util.cpp:376-1078)
 
 No per-row Python anywhere; DataFrames everywhere; no RDDs.

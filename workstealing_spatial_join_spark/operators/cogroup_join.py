@@ -23,7 +23,10 @@ per-cell candidate volume, the probe side gets one salt per row, the
 build side replicates across that cell's salts, and the pairing key
 becomes (cell_id, salt) — bounding the largest single cell-task the
 way TASKS_PER_JOB bounded the reference's work units
-(include/global_var.h:26).
+(include/global_var.h:26). This is the engine's only salting: the
+Catalyst joins (operators/spatial_join.py) leave a hot cell to their
+placement and to AQE's skew split, which can split a shuffle join's
+partitions but not a cogroup group.
 """
 
 from __future__ import annotations

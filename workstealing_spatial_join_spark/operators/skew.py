@@ -1,19 +1,24 @@
-"""Explicit skew handling — the Spark rebirth of the reference's
+"""Explicit skew handling for the cogroup joins
+(operators/cogroup_join.py) — the Spark rebirth of the reference's
 work-stealing load balancer (SURVEY.md §2.6).
 
 The reference balances load dynamically: jobs capped at 20 candidate
 pairs (TASKS_PER_JOB, include/global_var.h:26), lock-free deque
 stealing (include/wsq.hpp), MPI starvation-board stealing
-(src/mpi_util.cpp:376-1078). Spark's equivalents are STATIC+ADAPTIVE:
+(src/mpi_util.cpp:376-1078). A cogroup group is one task, and AQE
+cannot split it, so the cogroup joins pre-split hot cells here:
 
-1. per-cell COST ESTIMATION (this module) — the reference's
-   MBR+weight input files (S6, src/reader.cpp:332-362) are precedent:
-   cost(cell) ≈ n_left × n_right (candidate pairs to refine);
+1. per-cell COST ESTIMATION — the reference's MBR+weight input files
+   (S6, src/reader.cpp:332-362) are precedent: cost(cell) ≈ n_left ×
+   n_right (candidate pairs to refine);
 2. SALTED REPARTITIONING of hot cells (LB1 rebirth) — split a hot
    cell's probe side into `n_salt` sub-keys and replicate the build
-   side across salts, bounding the largest join group;
-3. AQE skew-join splits (session.py configs) catch residual runtime
-   skew — the "stealing" Spark can do natively.
+   side across salts, bounding the largest group.
+
+The Catalyst joins (operators/spatial_join.py) do not salt: their
+placement handles a hot cell (a broadcast layer, a prepared layer's
+merge join, or a shuffle join whose skewed partitions AQE splits —
+session.py configs).
 """
 
 from __future__ import annotations
@@ -29,37 +34,14 @@ def cell_cost_table(
     right_cells: DataFrame,
     target_pairs: int = DEFAULT_TARGET_PAIRS_PER_TASK,
     max_salt: int = 64,
-    right_cell_counts=None,
 ) -> DataFrame:
     """Estimate per-cell refine cost and derive a salt factor:
     ``(cell_id, n_left, n_right, est_pairs, n_salt)``; only cells with
     est_pairs > target_pairs get n_salt > 1. Both inputs must carry
     ``cell_id``. This is a tiny aggregate (one row per occupied cell)
-    — broadcastable.
-
-    ``right_cell_counts``: optional pre-computed ``[(cell_id, n)]``
-    for the build side (spatial_join derives it driver-side from the
-    collected geometry dictionary) — the build-side aggregate then
-    becomes a broadcast local frame instead of a distributed groupBy,
-    halving the stages in the cost job."""
+    — broadcastable."""
     lc = left_cells.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_left"))
-    if right_cell_counts is not None:
-        import pandas as pd
-
-        # Arrow-path local frame (a list-of-tuples createDataFrame
-        # pickles row by row — ~10× slower for the 16k-cell table)
-        rc = F.broadcast(
-            left_cells.sparkSession.createDataFrame(
-                pd.DataFrame(
-                    right_cell_counts, columns=["cell_id", "n_right"]
-                ).astype("int64"),
-                schema="cell_id long, n_right long",
-            )
-        )
-    else:
-        rc = right_cells.groupBy("cell_id").agg(
-            F.count(F.lit(1)).alias("n_right")
-        )
+    rc = right_cells.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n_right"))
     return (
         lc.join(rc, "cell_id")
         .withColumn("est_pairs", F.col("n_left") * F.col("n_right"))

@@ -13,7 +13,7 @@ forces a broadcast or a merge where it knows the sizes, Catalyst + AQE
 decide the rest and split skewed partitions):
 
     scan → cell tessellation (floor/sequence/explode, codegen'd)
-         → equi-join on cell_id  (+ salt when a cost table says so)
+         → equi-join on cell_id
          → residual MBR predicate (Catalyst, pushed into the join)
          → exact refine
          → dedup (reference-point rule, Catalyst) / parity multiplicity
@@ -25,6 +25,10 @@ points (the reference's J4 fragment-and-replicate). A
 by cell_id — the reference's layers pre-partitioned by cell
 (tests/main.cpp:99-104) — so a point-in-polygon join against it is a
 sort-merge join that shuffles only the points; the layer never moves.
+Skew is left to that placement, with no salted key: a broadcast layer
+meets the points on their scan splits, a layer over the broadcast
+budget is a shuffle join whose skewed partitions AQE splits, and a
+prepared layer's hot cell stays one merge task (ROADMAP, Known limits).
 
 The exact refine of a point-in-polygon join against a collected layer
 is Catalyst too: the driver classified each polygon's covering cells
@@ -56,7 +60,6 @@ intersection — a pure-Catalyst filter, no extra shuffle.
 from __future__ import annotations
 
 from dataclasses import dataclass, replace
-from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,26 +163,6 @@ def _cell_spans(bounds, cell_deg: float):
     )
 
 
-def _cell_row_counts(bounds, cell_deg: float):
-    """Per-cell row counts ``[(cell_id, n), ...]`` of
-    ``exploded.groupBy(cell_id).count()`` from the collected bounds'
-    spans, so the salting cost table skips one distributed aggregate
-    (guide §2.4). Vectorized (a per-row Python loop over
-    cells_covering_bbox measured 0.6 s on the 10k-polygon bench layer;
-    this is ~10 ms)."""
-    import numpy as np
-
-    cx0, cy0, w, h = _cell_spans(bounds, cell_deg)
-    ncell = w * h
-    starts = np.cumsum(ncell) - ncell
-    off = np.arange(int(ncell.sum()), dtype=np.int64) - np.repeat(starts, ncell)
-    h_r = np.repeat(h, ncell)
-    cx = np.repeat(cx0, ncell) + off // h_r
-    cy = np.repeat(cy0, ncell) + off % h_r
-    uniq, cnt = np.unique(cx * np.int64(4294967296) + cy, return_counts=True)
-    return [(int(c), int(n)) for c, n in zip(uniq, cnt)]
-
-
 _RECT_WKB_HDR_BYTES = (
     b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
 )
@@ -275,13 +258,6 @@ class LayerAnalysis:
     # its tessellations are cached partitioned by cell_id (a prepared
     # layer): a point probe joins where they lie
     cell_partitioned: bool = False
-
-    @cached_property
-    def cell_counts(self):
-        """Per-cell exploded row counts [(cell_id, n)], or None when not
-        collected (the salting cost table then aggregates instead)."""
-        t = self.table
-        return None if t is None else _cell_row_counts(_bounds_array(t), self.cell_deg)
 
     def tessellate(self, transport: str) -> DataFrame:
         """Cell tessellation for a refine transport: (poly_id,
@@ -476,41 +452,6 @@ def _join_side(
     return analysis, analysis.tessellate
 
 
-def _hot_cells(
-    probe: DataFrame, build: LayerAnalysis, build_tessellate, target_pairs: int,
-):
-    """LB1 rebirth: cost-estimated salting of hot cells (see
-    operators/skew.py) — bounds the largest join group the way
-    TASKS_PER_JOB bounded the reference's work units.
-
-    Collects the hot-cell cost table ONCE (tiny by construction: one
-    row per cell whose est_pairs exceed the task target) and replays
-    it as a local frame, so the salting joins do not each re-run the
-    aggregates behind it. The build side's per-cell counts come from
-    the analysis' closed form when it was collected; only an
-    uncollected build side is tessellated (``build_tessellate``) and
-    aggregated. Returns
-    ``(hot cells frame, rows salting adds to the build side)``, or
-    ``(None, None)`` when no cell is hot: then the honest LB1 decision
-    is to not pay the salting machinery at all (probe-side salt join,
-    build-side replicate explode, a wider join key) — the same
-    adaptive skip AQE's skew handling makes when nothing is skewed.
-    Results are identical by construction (an all-ones salt table is
-    a no-op)."""
-    from workstealing_spatial_join_spark.operators.skew import cell_cost_table
-
-    counts = build.cell_counts
-    cost = cell_cost_table(
-        probe, None if counts is not None else build_tessellate("catalyst-rect"),
-        target_pairs=target_pairs, right_cell_counts=counts,
-    ).where(F.col("n_salt") > 1)
-    rows = cost.collect()
-    if not rows:
-        return None, None
-    extra = sum((r["n_salt"] - 1) * r["n_right"] for r in rows)
-    return probe.sparkSession.createDataFrame(rows, cost.schema), extra
-
-
 def _spread_probe(pts: DataFrame, mode: str) -> DataFrame:
     """Spread the probe side over 2× the default parallelism before the
     WKB transport's Python refine: under a broadcast join the refine
@@ -550,7 +491,6 @@ def point_in_polygon_join(
     mode: str = "pairs",  # pairs | count | semi | percell | anti
     refine: bool = True,
     salt: bool = False,
-    target_pairs_per_task: int = 100_000,
     point_payload: tuple[str, ...] = (),
 ) -> DataFrame:
     """Point-in-polygon spatial join (north_rule primary query).
@@ -567,8 +507,9 @@ def point_in_polygon_join(
     The join placement and the refine transport come from
     ``plans.planner.plan_join``. A ``PreparedPolygonLayer`` stays where
     its cell-partitioned cache lies (a sort-merge join; the points
-    shuffle by cell) unless salting re-keys it; a fresh layer is
-    broadcast when it fits. Transport: the MBR predicate alone when every
+    shuffle by cell); a fresh layer is broadcast when it fits, and a
+    larger one is a shuffle join that AQE's skew split balances.
+    Transport: the MBR predicate alone when every
     polygon is its MBR; for any other collected layer the interior-cell
     band rows (functions/interior_cells.py) — exterior cells dropped,
     each kept cell's band rows ray-cast in Catalyst over at most K
@@ -583,6 +524,13 @@ def point_in_polygon_join(
     the pair table. Payload names must not collide with the polygon
     tessellation's ``minx..maxy`` / ``geom_wkb`` / ``poly_id`` columns
     or its band row's (``interior_cells.band_fields``).
+
+    ``salt`` is accepted and ignored: a hot cell is handled by where
+    the join runs, not by a salted key. A broadcast layer meets each
+    point on its own scan split, so a salt would move no point; a
+    prepared layer's merge join with a hot cell ran faster than the
+    salted plan, whose exact per-call cell count cost more than the
+    skew it removed; and AQE splits a skewed shuffle join.
     """
     from workstealing_spatial_join_spark.functions.exprs import ccol, cexpr
     from workstealing_spatial_join_spark.plans.planner import plan_join
@@ -601,16 +549,7 @@ def point_in_polygon_join(
     layer, tessellate = _join_side(
         polygons, poly_id, cell_deg, collect=refine, classify=True
     )
-    # the cost table reads the UN-repartitioned probe: it needs only
-    # per-cell counts, and the refine repartition would pay that
-    # exchange a second time (the main query re-executes it anyway)
-    hot, extra = (
-        _hot_cells(pts, layer, tessellate, target_pairs_per_task)
-        if salt else (None, None)
-    )
-    plan = plan_join(
-        None, layer, "contains" if refine else None, salt_extra_rows=extra
-    )
+    plan = plan_join(None, layer, "contains" if refine else None)
     if plan.partitioned_side == "right":
         # the layer's cache is already partitioned and sorted by cell:
         # merge where it lies, and only the points shuffle (by cell)
@@ -621,29 +560,19 @@ def point_in_polygon_join(
             # only the Python refine needs the spread; a pure-Catalyst
             # plan runs fine on the scan splits
             pts = _spread_probe(pts, mode)
-    join_keys = ["cell_id"]
-    if hot is not None:
-        from workstealing_spatial_join_spark.operators.skew import (
-            salt_build_side,
-            salt_probe_side,
-        )
-
-        pts = salt_probe_side(pts, hot, ["point_id"])
-        polys = salt_build_side(polys, hot)
-        join_keys.append("salt")
     if plan.broadcast_side == "right":
         # deterministic J4 fragment-and-replicate: the build side is
         # KNOWN to fit — assert the broadcast instead of hoping AQE's
-        # size estimate agrees (a local-replay, lazily-cached or
-        # salt-exploded build side has no usable stats, and a missed
-        # broadcast here is a full shuffle of the probe table)
+        # size estimate agrees (a local-replay or lazily-cached build
+        # side has no usable stats, and a missed broadcast here is a
+        # full shuffle of the probe table)
         polys = F.broadcast(polys)
 
     # the MBR residual, and for band rows their refine, as one condition
     condition = "px >= minx AND px <= maxx AND py >= miny AND py <= maxy"
     if plan.transport == "bands":
         condition = f"{condition} AND {band_contains_sql(layer.cells.k)}"
-    cand = pts.join(polys, on=join_keys).where(cexpr(condition))
+    cand = pts.join(polys, on="cell_id").where(cexpr(condition))
     if plan.transport == "wkb":
         cand = cand.where(
             PREDICATES["contains_xy"](F.col("geom_wkb"), F.col("px"), F.col("py"))
@@ -655,8 +584,8 @@ def point_in_polygon_join(
     if mode == "anti":
         # spatial ANTI-join: points inside NO polygon (ocean/extent
         # filtering, negative-sample mining). A point lives in exactly
-        # one cell, so `pts` is one row per point; the distinct()s are
-        # no-ops there but keep the semantics exact under salted runs.
+        # one cell, so `pts` is one row per input point; the
+        # distinct()s keep the output one row per id when ids repeat.
         # Cost at scale: the same filter+refine join plus ONE extra
         # shuffle on point_id for the left_anti — there is no cheaper
         # shape, because "no match" is only known after all of a
@@ -681,8 +610,6 @@ def polygon_join(
     cell_deg: float = GRID.DEFAULT_CELL_DEG,
     mode: str = "pairs",  # pairs | count
     dedup: str = "refpoint",  # refpoint | parity
-    salt: bool = False,
-    target_pairs_per_task: int = 100_000,
     extra_pair_filter=None,
 ) -> DataFrame:
     """Geometry×geometry spatial join with a runtime refine predicate
@@ -734,15 +661,7 @@ def polygon_join(
         la, l_tess = fut_l.result()
         ra, r_tess = fut_r.result()
 
-    # salting: the (larger) left side is the salted probe, the right
-    # side is replicated across salts in hot cells only
-    hot, extra = (
-        _hot_cells(
-            l_tess("catalyst-rect"), ra, r_tess, target_pairs_per_task,
-        )
-        if salt else (None, None)
-    )
-    plan = plan_join(la, ra, predicate, salt_extra_rows=extra)
+    plan = plan_join(la, ra, predicate)
     catalyst_rect = plan.transport == "catalyst-rect"
     refine_bc = None
     if plan.transport == "dict" or (catalyst_rect and predicate == "union_numpoints"):
@@ -771,15 +690,6 @@ def polygon_join(
         .alias("r")
     )
     join_cond = F.col("l.cell_id") == F.col("r.cell_id")
-    if hot is not None:
-        from workstealing_spatial_join_spark.operators.skew import (
-            salt_build_side,
-            salt_probe_side,
-        )
-
-        lt = salt_probe_side(lt, hot, ["lid"]).alias("l")
-        rt = salt_build_side(rt, hot).alias("r")
-        join_cond = join_cond & (F.col("l.salt") == F.col("r.salt"))
     # deterministic J4: the broadcast side is KNOWN to fit (exact
     # closed-form size) — assert it rather than rely on AQE size
     # estimates, which a local-replay frame does not carry

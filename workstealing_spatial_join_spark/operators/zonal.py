@@ -15,8 +15,9 @@ exact refine) with the measure columns riding the probe side —
 map-side-combinable groupBy on the zone id. No second join back to
 the point table (that re-shuffle of the full pair table is the
 naive plan), no driver materialization. Skewed zones inherit the
-join's LB1 salting; the aggregate itself is pre-combined per
-partition by Catalyst's partial aggregation.
+join's skew handling (its placement and AQE's skew split); the
+aggregate itself is pre-combined per partition by Catalyst's partial
+aggregation.
 """
 
 from __future__ import annotations

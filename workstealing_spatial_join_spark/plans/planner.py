@@ -39,30 +39,23 @@ class JoinPlan:
     partitioned_side: str | None = None
 
 
-def _build_bytes(side, transport: str, extra_rows: int = 0) -> int | None:
-    """Exact bytes a side puts into a broadcast: its exploded rows (plus
-    the rows salting replicates) at the bounds-row width, plus what the
-    transport carries — the WKB column once per covering cell, or the
-    band rows' bounds, parity, truth table and K edge slots (the
-    "bands" rows replace the covering cells); salted replicas at the
-    layer's mean. None when the side was not collected."""
+def _build_bytes(side, transport: str) -> int | None:
+    """Exact bytes a side puts into a broadcast: its exploded rows at
+    the bounds-row width, plus what the transport carries — the WKB
+    column once per covering cell, or the band rows' bounds, parity,
+    truth table and K edge slots (the "bands" rows replace the
+    covering cells). None when the side was not collected."""
     if side is None or side.exploded_rows is None:
         return None
-    base, payload = side.exploded_rows, 0
+    rows, payload = side.exploded_rows, 0
     if transport == "bands":
-        base, payload = side.cells.rows, side.cells.band_bytes
+        rows, payload = side.cells.rows, side.cells.band_bytes
     elif transport == "wkb":
         payload = side.exploded_wkb_bytes
-    rows = base + extra_rows
-    size = rows * BOUNDS_ROW_BYTES
-    if payload and base:
-        size += payload * rows // base
-    return size
+    return rows * BOUNDS_ROW_BYTES + payload
 
 
-def plan_join(
-    left, right, predicate: str | None, salt_extra_rows: int | None = None
-) -> JoinPlan:
+def plan_join(left, right, predicate: str | None) -> JoinPlan:
     """Decide the broadcast side and the refine transport of a join.
 
     ``left``/``right`` are ``LayerAnalysis`` objects (read: exploded_rows,
@@ -70,19 +63,15 @@ def plan_join(
     None = not collected) or None for a side that is not a geometry layer —
     the points of a PIP join. ``predicate`` is ``"contains"`` for PIP,
     a polygon-join predicate, or None for an MBR-only join.
-    ``salt_extra_rows``: rows salting adds to the right (replicated)
-    side; when set, the left side is the salted probe and never
-    broadcast.
 
     Placement: a point probe (``left`` None) against a layer whose
     cached tessellation is already partitioned by cell
     (``cell_partitioned``, a ``PreparedPolygonLayer``) joins where the
     layer lies — a sort-merge join on ``cell_id`` that shuffles only
     the points, so no op re-collects, re-hashes or re-broadcasts the
-    layer. Salting re-keys the build side, so a salted join (hot cells
-    found) falls back to the broadcast rule, as do fresh layers and
-    polygon joins: the smaller side that fits the budget is
-    broadcast.
+    layer. Fresh layers and polygon joins take the broadcast rule: the
+    smaller side that fits the budget is broadcast; when neither fits,
+    the shuffle join and its skew splits are AQE's.
 
     Transport: ``catalyst-rect`` when the MBR predicate is the whole
     refine (every geometry equals its MBR; union also needs the
@@ -107,13 +96,11 @@ def plan_join(
     else:
         transport = "wkb"
 
-    if left is None and right.cell_partitioned and salt_extra_rows is None:
+    if left is None and right.cell_partitioned:
         return JoinPlan(None, transport, partitioned_side="right")
     sizes = {
-        "left": (
-            None if salt_extra_rows is not None else _build_bytes(left, transport)
-        ),
-        "right": _build_bytes(right, transport, salt_extra_rows or 0),
+        "left": _build_bytes(left, transport),
+        "right": _build_bytes(right, transport),
     }
     fits = {
         k: v for k, v in sizes.items()
